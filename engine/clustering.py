@@ -323,6 +323,50 @@ def kmeans_prune(df: DataFrame, k: int = 8, iters: int = 4,
     return keep.select("vec_id", "cl", "rk")
 
 
+def _dbscan_from_pairs(pairs: DataFrame, id_col: str, min_pts: int,
+                       max_iters: int) -> DataFrame:
+    """The DBSCAN labelling shared by dbscan_grid, dbscan_geo and
+    st_dbscan, from a radius self-join's closed-neighbourhood pairs
+    (p_id, q_id), both orientations plus (i, i): n_neighbors counts the
+    pairs per point, core iff n_neighbors >= min_pts, clusters are the
+    min-id components of the core-core graph, a border point takes the
+    MIN cluster among its core neighbours, noise gets NULL.  The pairs
+    are materialized once (localCheckpoint) because three consumers
+    read them: counts, core-core edges and the border probe."""
+    from . import ops
+    pairs = pairs.localCheckpoint(eager=True)
+    counts = pairs.groupBy("p_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_neighbors"))
+    core = counts.filter(F.col("n_neighbors") >= min_pts).select("p_id")
+    core_edges = (pairs.filter(F.col("p_id") < F.col("q_id"))
+                  .join(core, "p_id", "left_semi")
+                  .join(core.select(F.col("p_id").alias("q_id")), "q_id",
+                        "left_semi"))
+    comp = ops.min_label_components(
+        core.select(F.col("p_id").alias("id")),
+        core_edges.select(F.col("p_id").alias("a"),
+                          F.col("q_id").alias("b")),
+        max_iters=max_iters)
+    core_lbl = comp.select(F.col("id").alias("p_id"),
+                           F.col("component_id").alias("_core_cl"))
+    nbr_core = (pairs.filter(F.col("p_id") != F.col("q_id"))
+                .join(comp.select(F.col("id").alias("q_id"),
+                                  F.col("component_id").alias("_ncl")),
+                      "q_id")
+                .groupBy("p_id")
+                .agg(F.min("_ncl").alias("_border_cl")))
+    out = (counts.join(core_lbl, "p_id", "left")
+           .join(nbr_core, "p_id", "left"))
+    role = (F.when(F.col("_core_cl").isNotNull(), F.lit("core"))
+            .when(F.col("_border_cl").isNotNull(), F.lit("border"))
+            .otherwise(F.lit("noise")))
+    cluster = F.when(F.col("_core_cl").isNotNull(), F.col("_core_cl")) \
+               .otherwise(F.when(F.col("_border_cl").isNotNull(),
+                                 F.col("_border_cl")))
+    return out.select(F.col("p_id").alias(id_col), "n_neighbors",
+                      role.alias("role"), cluster.alias("cluster"))
+
+
 def dbscan_grid(pts: DataFrame, id_col: str, x_col: str, y_col: str,
                 eps: int, min_pts: int, max_iters: int = 16) -> DataFrame:
     """Grid-accelerated DBSCAN over integer 2-D points — the density
@@ -363,38 +407,8 @@ def dbscan_grid(pts: DataFrame, id_col: str, x_col: str, y_col: str,
                     F.col("_y").alias("qy"))
     pairs = (ops.radius_join_2d(a, b, [], "px", "py", "qx", "qy", eps,
                                 a_id="p_id", b_id="q_id")
-             .select("p_id", "q_id")
-             .localCheckpoint(eager=True))
-    counts = pairs.groupBy("p_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_neighbors"))
-    core = counts.filter(F.col("n_neighbors") >= min_pts).select("p_id")
-    core_edges = (pairs.filter(F.col("p_id") < F.col("q_id"))
-                  .join(core, "p_id", "left_semi")
-                  .join(core.select(F.col("p_id").alias("q_id")), "q_id",
-                        "left_semi"))
-    comp = ops.min_label_components(
-        core.select(F.col("p_id").alias("id")),
-        core_edges.select(F.col("p_id").alias("a"),
-                          F.col("q_id").alias("b")),
-        max_iters=max_iters)
-    core_lbl = comp.select(F.col("id").alias("p_id"),
-                           F.col("component_id").alias("_core_cl"))
-    nbr_core = (pairs.filter(F.col("p_id") != F.col("q_id"))
-                .join(comp.select(F.col("id").alias("q_id"),
-                                  F.col("component_id").alias("_ncl")),
-                      "q_id")
-                .groupBy("p_id")
-                .agg(F.min("_ncl").alias("_border_cl")))
-    out = (counts.join(core_lbl, "p_id", "left")
-           .join(nbr_core, "p_id", "left"))
-    role = (F.when(F.col("_core_cl").isNotNull(), F.lit("core"))
-            .when(F.col("_border_cl").isNotNull(), F.lit("border"))
-            .otherwise(F.lit("noise")))
-    cluster = F.when(F.col("_core_cl").isNotNull(), F.col("_core_cl")) \
-               .otherwise(F.when(F.col("_border_cl").isNotNull(),
-                                 F.col("_border_cl")))
-    return out.select(F.col("p_id").alias(id_col), "n_neighbors",
-                      role.alias("role"), cluster.alias("cluster"))
+             .select("p_id", "q_id"))
+    return _dbscan_from_pairs(pairs, id_col, min_pts, max_iters)
 
 
 def dbscan_geo(pts: DataFrame, id_col: str, lat_col: str, lon_col: str,
@@ -433,38 +447,8 @@ def dbscan_geo(pts: DataFrame, id_col: str, lat_col: str, lon_col: str,
                     F.col("_lon").alias("qlon"))
     pairs = (ops.geo_radius_join(a, b, "plat", "plon", "qlat", "qlon",
                                  eps_m, a_id="p_id", b_id="q_id")
-             .select("p_id", "q_id")
-             .localCheckpoint(eager=True))
-    counts = pairs.groupBy("p_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_neighbors"))
-    core = counts.filter(F.col("n_neighbors") >= min_pts).select("p_id")
-    core_edges = (pairs.filter(F.col("p_id") < F.col("q_id"))
-                  .join(core, "p_id", "left_semi")
-                  .join(core.select(F.col("p_id").alias("q_id")), "q_id",
-                        "left_semi"))
-    comp = ops.min_label_components(
-        core.select(F.col("p_id").alias("id")),
-        core_edges.select(F.col("p_id").alias("a"),
-                          F.col("q_id").alias("b")),
-        max_iters=max_iters)
-    core_lbl = comp.select(F.col("id").alias("p_id"),
-                           F.col("component_id").alias("_core_cl"))
-    nbr_core = (pairs.filter(F.col("p_id") != F.col("q_id"))
-                .join(comp.select(F.col("id").alias("q_id"),
-                                  F.col("component_id").alias("_ncl")),
-                      "q_id")
-                .groupBy("p_id")
-                .agg(F.min("_ncl").alias("_border_cl")))
-    out = (counts.join(core_lbl, "p_id", "left")
-           .join(nbr_core, "p_id", "left"))
-    role = (F.when(F.col("_core_cl").isNotNull(), F.lit("core"))
-            .when(F.col("_border_cl").isNotNull(), F.lit("border"))
-            .otherwise(F.lit("noise")))
-    cluster = F.when(F.col("_core_cl").isNotNull(), F.col("_core_cl")) \
-               .otherwise(F.when(F.col("_border_cl").isNotNull(),
-                                 F.col("_border_cl")))
-    return out.select(F.col("p_id").alias(id_col), "n_neighbors",
-                      role.alias("role"), cluster.alias("cluster"))
+             .select("p_id", "q_id"))
+    return _dbscan_from_pairs(pairs, id_col, min_pts, max_iters)
 
 
 def st_dbscan(pts: DataFrame, id_col: str, x_col: str, y_col: str,
@@ -506,35 +490,5 @@ def st_dbscan(pts: DataFrame, id_col: str, x_col: str, y_col: str,
     pairs = (ops.st_radius_join(a, b, [], ("px", "py", "pt"),
                                 ("qx", "qy", "qt"), eps, eps_t,
                                 a_id="p_id", b_id="q_id")
-             .select("p_id", "q_id")
-             .localCheckpoint(eager=True))
-    counts = pairs.groupBy("p_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_neighbors"))
-    core = counts.filter(F.col("n_neighbors") >= min_pts).select("p_id")
-    core_edges = (pairs.filter(F.col("p_id") < F.col("q_id"))
-                  .join(core, "p_id", "left_semi")
-                  .join(core.select(F.col("p_id").alias("q_id")), "q_id",
-                        "left_semi"))
-    comp = ops.min_label_components(
-        core.select(F.col("p_id").alias("id")),
-        core_edges.select(F.col("p_id").alias("a"),
-                          F.col("q_id").alias("b")),
-        max_iters=max_iters)
-    core_lbl = comp.select(F.col("id").alias("p_id"),
-                           F.col("component_id").alias("_core_cl"))
-    nbr_core = (pairs.filter(F.col("p_id") != F.col("q_id"))
-                .join(comp.select(F.col("id").alias("q_id"),
-                                  F.col("component_id").alias("_ncl")),
-                      "q_id")
-                .groupBy("p_id")
-                .agg(F.min("_ncl").alias("_border_cl")))
-    out = (counts.join(core_lbl, "p_id", "left")
-           .join(nbr_core, "p_id", "left"))
-    role = (F.when(F.col("_core_cl").isNotNull(), F.lit("core"))
-            .when(F.col("_border_cl").isNotNull(), F.lit("border"))
-            .otherwise(F.lit("noise")))
-    cluster = F.when(F.col("_core_cl").isNotNull(), F.col("_core_cl")) \
-               .otherwise(F.when(F.col("_border_cl").isNotNull(),
-                                 F.col("_border_cl")))
-    return out.select(F.col("p_id").alias(id_col), "n_neighbors",
-                      role.alias("role"), cluster.alias("cluster"))
+             .select("p_id", "q_id"))
+    return _dbscan_from_pairs(pairs, id_col, min_pts, max_iters)

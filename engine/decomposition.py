@@ -44,18 +44,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .grid import bin_floor
+
 SCALE_X = 1 << 20   # input quantization step
 SCALE_V = 1 << 10   # component scale during iterations
 G_CAP = 1 << 30     # post-division Gram entry bound
 DEFAULT_ROUNDS = 8
-
-
-def _fdiv(a, n):
-    """Exact floor division as a Column: (a - pmod(a, n)) is exactly
-    divisible, so the double divide is exact for |a| < 2^53 and equals
-    mathematical floor for negative a too (truncation == floor once the
-    remainder is removed)."""
-    return ((a - F.pmod(a, n)) / n).cast("long")
 
 
 def quantize_col(vec_col, scale: int = SCALE_X):
@@ -103,7 +97,7 @@ def _centered_quant_expr(dim: int, n: int, sums: list[int]):
     s_lit = F.lit([int(v) for v in sums])
     qx = quantize_col(F.col("embedding"))
     return F.zip_with(qx, s_lit,
-                      lambda x, s: _fdiv(F.lit(n) * x - s, F.lit(n)))
+                      lambda x, s: bin_floor(F.lit(n) * x - s, F.lit(n)))
 
 
 def _quant_stats(emb: DataFrame, dim: int) -> tuple[int, list[int]]:
@@ -142,7 +136,7 @@ def pca_power_quant(emb: DataFrame, dim: int = 64,
         raise ValueError("rounds must be >= 1")
     n, sums = _quant_stats(emb, dim)
     # Provable int64 envelope: each centered product |y'_i * y'_j| <= 2^40,
-    # so |G_ij| <= n * 2^40 only fits int64 for n < 2^23 (and the _fdiv
+    # so |G_ij| <= n * 2^40 only fits int64 for n < 2^23 (and the bin_floor
     # exactness argument |n*qx - S| < 2^53 needs n << 2^32).  numpy int64
     # matmul and Spark long sums both wrap SILENTLY past that, so enforce
     # the envelope with a raise like every other quant operator.
@@ -160,7 +154,7 @@ def pca_power_quant(emb: DataFrame, dim: int = 64,
     if maxabs == 0:
         raise ValueError("degenerate (all-zero centered) input")
     D = 1 + (maxabs - 1) // G_CAP  # ceil(maxabs / G_CAP), >= 1
-    Gs = G // D                    # numpy // floors, matching _fdiv
+    Gs = G // D                    # numpy // floors, matching bin_floor
     v = np.full(dim, SCALE_V, dtype=np.int64)
     for _ in range(rounds):
         w = Gs @ v                                  # |w| <= 2^46

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from . import geo
 from .config import DEFAULT, EngineConfig
-from .functions import (epoch_s, haversine_m_col, make_cell_encode_udf,
+from .functions import (haversine_m_col, make_cell_encode_udf,
                         make_cell_neighbors_udf, parent_cell_col)
 
 EPISODE_SCHEMA = ("host string, seq int, start_ts timestamp, end_ts timestamp, "
@@ -455,17 +455,8 @@ def build_episodes(assigned: DataFrame, cfg: EngineConfig = DEFAULT,
 
 
 # ---------------------------------------------------------------------------
-# aggregates over locations/episodes (A6-A8)
+# aggregates over locations/episodes (A8)
 # ---------------------------------------------------------------------------
-
-def dwell_totals(episodes: DataFrame) -> DataFrame:
-    """A6 — observed seconds per host x kind (+ per location)."""
-    return (episodes
-            .groupBy("host", "kind", "location_id")
-            .agg(F.round(F.sum(epoch_s(F.col("end_ts"))
-                               - epoch_s(F.col("start_ts"))), 6).alias("total_s"),
-                 F.count(F.lit(1)).alias("n_episodes")))
-
 
 def agreement_metrics(algo: DataFrame, truth: DataFrame) -> DataFrame:
     """A8 — % of overlapped time where episode kind+location agree

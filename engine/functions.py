@@ -376,14 +376,3 @@ def make_cell_neighbors_udf(level: int, k: int = 1):
         return pd.Series(list(arr))
 
     return cell_neighbors_udf
-
-
-def make_cell_center_udf(level: int):
-    """pandas_udf: cell id -> struct(lat double, lon double) of cell center."""
-
-    @F.pandas_udf("lat double, lon double")
-    def cell_center_udf(cid: pd.Series) -> pd.DataFrame:
-        lat, lon = geo.cell_center_latlng(cid.to_numpy(np.int64), level)
-        return pd.DataFrame({"lat": lat, "lon": lon})
-
-    return cell_center_udf

@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .functions import epoch_s
+from .grid import (bin_floor, box_cell_count, explode_box,
+                   explode_neighbours, fence_cells)
 
 
 def _w(part: Sequence[str], order: Sequence[str | Column]):
@@ -505,9 +507,6 @@ def interval_overlap_join_binned(a: DataFrame, b: DataFrame,
     def us(col):
         return F.unix_micros(F.col(col).cast("timestamp"))
 
-    def bin_of(x):
-        return ((x - F.pmod(x, F.lit(binus))) / binus).cast("long")
-
     # explode over the CLAMPED bin range (least..greatest): for inverted
     # intervals (end < start) a bare sequence(bin(start), bin(end)) would
     # generate a DESCENDING range and the canonical-bin filter could drop
@@ -516,7 +515,8 @@ def interval_overlap_join_binned(a: DataFrame, b: DataFrame,
     # so the canonical bin stays covered and output == plain join on ALL
     # inputs, degenerate ones included (parity-tested).
     def bin_range(s, e):
-        return F.sequence(bin_of(F.least(s, e)), bin_of(F.greatest(s, e)))
+        return F.sequence(bin_floor(F.least(s, e), binus),
+                          bin_floor(F.greatest(s, e), binus))
 
     aa = (a.withColumn("_a_s", us(a_start)).withColumn("_a_e", us(a_end))
           .withColumn("_bin", F.explode(
@@ -532,7 +532,7 @@ def interval_overlap_join_binned(a: DataFrame, b: DataFrame,
               .filter((F.col("_a_s") < F.col("_b_e"))
                       & (F.col("_b_s") < F.col("_a_e")))
               .filter(F.col("_bin")
-                      == bin_of(F.greatest("_a_s", "_b_s"))))
+                      == bin_floor(F.greatest("_a_s", "_b_s"), binus)))
     return (joined.withColumn(
         overlap_col,
         F.least(epoch_s(F.col(a_end)), epoch_s(F.col(f"b_{b_end}")))
@@ -696,7 +696,7 @@ def cohort_retention(df: DataFrame, user_col: str, ts_col: str,
         raise ValueError("cohort_retention: bucket_s must be positive")
     b = int(bucket_s) * 1_000_000
     us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    bucket = ((us - F.pmod(us, F.lit(b))) / F.lit(b)).cast("long")
+    bucket = bin_floor(us, b)
     act = (df.select(F.col(user_col).alias("_u"), bucket.alias("_bk"))
            .distinct())
     coh = act.groupBy("_u").agg(F.min("_bk").alias("_cw"))
@@ -748,8 +748,7 @@ def histogram_equiwidth(df: DataFrame, keys: Sequence[str], val_col: str,
     if width <= 0:
         raise ValueError("histogram_equiwidth: width must be positive")
     v = F.col(val_col).cast("long") - F.lit(int(origin))
-    bin_ = ((v - F.pmod(v, F.lit(int(width)))) / F.lit(int(width))) \
-        .cast("long")
+    bin_ = bin_floor(v, int(width))
     return (df.groupBy(*keys, bin_.alias("bin"))
             .agg(F.count(F.lit(1)).cast("long").alias("n"),
                  F.min(F.col(val_col).cast("long")).alias("v_min"),
@@ -1684,13 +1683,10 @@ def band_join(a: DataFrame, b: DataFrame, keys: Sequence[str],
     av = F.col(a_val).cast("long")
     bv = F.col(b_val).cast("long")
     d = int(delta)
-    abin = ((av - F.pmod(av, F.lit(d))) / F.lit(d)).cast("long")
-    bbin = ((bv - F.pmod(bv, F.lit(d))) / F.lit(d)).cast("long")
-    aa = (a.select(*keys, F.col(a_id), av.alias("a_v"),
-                   F.explode(F.array(abin - 1, abin, abin + 1))
-                   .alias("_bin")))
+    aa = explode_neighbours(a, [*keys, F.col(a_id), av.alias("a_v")],
+                            [bin_floor(av, d)], ["_bin"])
     bb = b.select(*keys, F.col(b_id), bv.alias("b_v"),
-                  bbin.alias("_bin"))
+                  bin_floor(bv, d).alias("_bin"))
     j = aa.join(bb, [*keys, "_bin"])
     return (j.filter(F.abs(F.col("b_v") - F.col("a_v")) <= d)
             .select(*keys, a_id, b_id, "a_v", "b_v",
@@ -1739,21 +1735,15 @@ def radius_join_2d(a: DataFrame, b: DataFrame, keys: Sequence[str],
             f"(dist² bound 8r² must stay < 2^62; r <= 2^29)")
     r = int(r)
     carry_b, carry_a = list(carry_b), list(carry_a)
-
-    def cell(c: Column) -> Column:
-        return ((c - F.pmod(c, F.lit(r))) / F.lit(r)).cast("long")
-
     axc, ayc = F.col(a_x).cast("long"), F.col(a_y).cast("long")
     bxc, byc = F.col(b_x).cast("long"), F.col(b_y).cast("long")
-    nbr = F.explode(F.array(*[
-        F.struct((cell(axc) + i).alias("cx"), (cell(ayc) + j).alias("cy"))
-        for i in (-1, 0, 1) for j in (-1, 0, 1)])).alias("_c")
-    aa = (a.select(*keys, F.col(a_id), axc.alias("a_x"), ayc.alias("a_y"),
-                   *[F.col(c) for c in carry_a], nbr)
-           .select(*keys, a_id, "a_x", "a_y", *carry_a,
-                   F.col("_c.cx").alias("_cx"), F.col("_c.cy").alias("_cy")))
+    aa = explode_neighbours(
+        a, [*keys, F.col(a_id), axc.alias("a_x"), ayc.alias("a_y"),
+            *[F.col(c) for c in carry_a]],
+        [bin_floor(axc, r), bin_floor(ayc, r)], ["_cx", "_cy"])
     bb = b.select(*keys, F.col(b_id), bxc.alias("b_x"), byc.alias("b_y"),
-                  cell(bxc).alias("_cx"), cell(byc).alias("_cy"),
+                  bin_floor(bxc, r).alias("_cx"),
+                  bin_floor(byc, r).alias("_cy"),
                   *[F.col(c) for c in carry_b])
     j = aa.join(bb, [*keys, "_cx", "_cy"])
     dx = F.col("b_x") - F.col("a_x")
@@ -1957,12 +1947,8 @@ def rfm_segments(df: DataFrame, user_col: str, ts_col: str, type_col: str,
                         "f", "m",
                         *[F.lit(None).cast("long").alias(c)
                           for c in ("r_score", "f_score", "m_score")])
-    d = g.withColumn(
-        "r_days",
-        ((F.lit(int(ref)) - F.col("_last_us"))
-         - F.pmod(F.lit(int(ref)) - F.col("_last_us"),
-                  F.lit(86_400_000_000))) / F.lit(86_400_000_000)) \
-        .withColumn("r_days", F.col("r_days").cast("long"))
+    d = g.withColumn("r_days", bin_floor(
+        F.lit(int(ref)) - F.col("_last_us"), 86_400_000_000))
     wr = Window.orderBy(F.col("r_days").asc(), F.col("user").asc())
     wf = Window.orderBy(F.col("f").desc(), F.col("user").asc())
     wm = Window.orderBy(F.col("m").desc(), F.col("user").asc())
@@ -1991,15 +1977,11 @@ def od_flows(df: DataFrame, keys: Sequence[str], ts_col: str,
     if cell_size <= 0:
         raise ValueError("od_flows: cell_size must be positive")
     cs = int(cell_size)
-
-    def cell(c: Column) -> Column:
-        return ((c - F.pmod(c, F.lit(cs))) / F.lit(cs)).cast("long")
-
     order = [F.col(ts_col)] + ([F.col(tiebreak)] if tiebreak else [])
     w = Window.partitionBy(*keys).orderBy(*order)
     d = (df.select(*keys, *([ts_col] + ([tiebreak] if tiebreak else [])),
-                   cell(F.col(x_col).cast("long")).alias("o_cx"),
-                   cell(F.col(y_col).cast("long")).alias("o_cy"))
+                   bin_floor(F.col(x_col).cast("long"), cs).alias("o_cx"),
+                   bin_floor(F.col(y_col).cast("long"), cs).alias("o_cy"))
          .withColumn("d_cx", F.lead("o_cx").over(w))
          .withColumn("d_cy", F.lead("o_cy").over(w))
          .filter(F.col("d_cx").isNotNull()
@@ -2066,15 +2048,11 @@ def knn_join_2d(probe: DataFrame, build: DataFrame, keys: Sequence[str],
             f"(must be <= 2^30 so dist^2 < 2^62)")
     cs = int(cell)
     keys = list(keys)
-
-    def cellc(c: Column) -> Column:
-        return ((c - F.pmod(c, F.lit(cs))) / F.lit(cs)).cast("long")
-
     bb = (build.select(*keys, F.col(b_id),
                        F.col(b_x).cast("long").alias("_bx"),
                        F.col(b_y).cast("long").alias("_by"))
-          .withColumn("_cx", cellc(F.col("_bx")))
-          .withColumn("_cy", cellc(F.col("_by")))).persist()
+          .withColumn("_cx", bin_floor(F.col("_bx"), cs))
+          .withColumn("_cy", bin_floor(F.col("_by"), cs))).persist()
     totals = bb.groupBy(*keys).agg(F.count(F.lit(1)).cast("long")
                                    .alias("_nb"))
     # probes whose key has no build rows resolve immediately (emit
@@ -2095,16 +2073,10 @@ def knn_join_2d(probe: DataFrame, build: DataFrame, keys: Sequence[str],
                 raise ValueError(
                     f"knn_join_2d: {n_left} probes unresolved after "
                     f"{max_rings} rings — raise max_rings or shrink cell")
-            box = F.explode(F.array(*[
-                F.struct((cellc(F.col("_px")) + i).alias("cx"),
-                         (cellc(F.col("_py")) + j).alias("cy"))
-                for i in range(-r, r + 1) for j in range(-r, r + 1)
-            ])).alias("_c")
-            cand = (un.select(*keys, p_id, "_px", "_py", box)
-                    .select(*keys, p_id, "_px", "_py",
-                            F.col("_c.cx").alias("_cx"),
-                            F.col("_c.cy").alias("_cy"))
-                    .join(bb, [*keys, "_cx", "_cy"]))
+            cand = explode_neighbours(
+                un, [*keys, p_id, "_px", "_py"],
+                [bin_floor(F.col("_px"), cs), bin_floor(F.col("_py"), cs)],
+                ["_cx", "_cy"], reach=r).join(bb, [*keys, "_cx", "_cy"])
             dx = F.col("_bx") - F.col("_px")
             dy = F.col("_by") - F.col("_py")
             cand = cand.select(*keys, p_id, b_id,
@@ -2238,16 +2210,10 @@ def geo_radius_join(a: DataFrame, b: DataFrame, a_lat: str, a_lon: str,
 
     ax, ay, az = xyz(F.col(a_lat), F.col(a_lon))
     bx, by, bz = xyz(F.col(b_lat), F.col(b_lon))
-    nbr = F.explode(F.array(*[
-        F.struct((binc(ax) + i).alias("bx"), (binc(ay) + j).alias("by"),
-                 (binc(az) + l).alias("bz"))
-        for i in (-1, 0, 1) for j in (-1, 0, 1) for l in (-1, 0, 1)
-    ])).alias("_c")
-    aa = (a.select(F.col(a_id), F.col(a_lat).alias("_alat"),
-                   F.col(a_lon).alias("_alon"), nbr)
-          .select(a_id, "_alat", "_alon",
-                  F.col("_c.bx").alias("_bx"), F.col("_c.by").alias("_by"),
-                  F.col("_c.bz").alias("_bz")))
+    aa = explode_neighbours(
+        a, [F.col(a_id), F.col(a_lat).alias("_alat"),
+            F.col(a_lon).alias("_alon")],
+        [binc(ax), binc(ay), binc(az)], ["_bx", "_by", "_bz"])
     bb = b.select(F.col(b_id), F.col(b_lat).alias("_blat"),
                   F.col(b_lon).alias("_blon"),
                   binc(bx).alias("_bx"), binc(by).alias("_by"),
@@ -2489,11 +2455,6 @@ def trip_stats(df: DataFrame, keys: Sequence[str], ts_col: str,
     return out
 
 
-def _bin_floor(c: Column, w: int) -> Column:
-    """Floor-division bin of a long column, correct for negatives."""
-    return ((c - F.pmod(c, F.lit(w))) / F.lit(w)).cast("long")
-
-
 def bbox_overlap_join(a: DataFrame, b: DataFrame, keys: Sequence[str],
                       a_box: Sequence[str], b_box: Sequence[str],
                       cell: int, a_id: str = "a_id", b_id: str = "b_id",
@@ -2544,16 +2505,12 @@ def bbox_overlap_join(a: DataFrame, b: DataFrame, keys: Sequence[str],
                       x2.alias(f"{px}x2"), y2.alias(f"{px}y2"))
         inv = ((F.col(f"{px}x2") < F.col(f"{px}x1"))
                | (F.col(f"{px}y2") < F.col(f"{px}y1")))
-        ncells = ((_bin_floor(F.col(f"{px}x2"), cs)
-                   - _bin_floor(F.col(f"{px}x1"), cs) + 1)
-                  * (_bin_floor(F.col(f"{px}y2"), cs)
-                     - _bin_floor(F.col(f"{px}y1"), cs) + 1))
+        lo = [bin_floor(F.col(f"{px}{c}1"), cs) for c in "xy"]
+        hi = [bin_floor(F.col(f"{px}{c}2"), cs) for c in "xy"]
         # inverted-box and worst-fanout checks fused into ONE scan
-        # (was two); ncells guarded so it is never evaluated on an
-        # inverted box
         chk = d.agg(F.max(F.when(inv, 1).otherwise(0)).alias("bad"),
-                    F.max(F.when(~inv, ncells)).alias("worst")) \
-            .collect()[0]
+                    F.max(box_cell_count(lo, hi, max_cells))
+                    .alias("worst")).collect()[0]
         if chk["bad"]:
             raise ValueError(
                 "bbox_overlap_join: inverted box (x2 < x1 or y2 < y1) "
@@ -2561,15 +2518,10 @@ def bbox_overlap_join(a: DataFrame, b: DataFrame, keys: Sequence[str],
         worst = chk["worst"]
         if worst is not None and worst > max_cells:
             raise ValueError(
-                f"bbox_overlap_join: a box covers {worst} grid cells "
-                f"(> max_cells={max_cells}) — coarsen `cell` or split "
-                f"giant boxes upstream")
-        return (d.withColumn("_cx", F.explode(F.sequence(
-                    _bin_floor(F.col(f"{px}x1"), cs),
-                    _bin_floor(F.col(f"{px}x2"), cs))))
-                .withColumn("_cy", F.explode(F.sequence(
-                    _bin_floor(F.col(f"{px}y1"), cs),
-                    _bin_floor(F.col(f"{px}y2"), cs)))))
+                f"bbox_overlap_join: a box covers more than "
+                f"max_cells={max_cells} grid cells — coarsen `cell` or "
+                f"split giant boxes upstream")
+        return explode_box(d, ("_cx", "_cy"), lo, hi)
 
     aa = prep(a, a_box, a_id, "_a", carry_a)
     bb = prep(b, b_box, b_id, "_b", carry_b)
@@ -2580,8 +2532,8 @@ def bbox_overlap_join(a: DataFrame, b: DataFrame, keys: Sequence[str],
                  & (F.col("_bx1") <= F.col("_ax2"))
                  & (F.col("_ay1") <= F.col("_by2"))
                  & (F.col("_by1") <= F.col("_ay2")))
-         .filter((F.col("_cx") == _bin_floor(ix1, cs))
-                 & (F.col("_cy") == _bin_floor(iy1, cs))))
+         .filter((F.col("_cx") == bin_floor(ix1, cs))
+                 & (F.col("_cy") == bin_floor(iy1, cs))))
     return j.select(*keys, a_id, b_id,
                     *[F.col(c) for c in (*carry_a, *carry_b)],
                     ix1.alias("ix1"), iy1.alias("iy1"),
@@ -2856,8 +2808,8 @@ def emerging_hotspots(df: DataFrame, x_col: str, y_col: str,
         raise ValueError("emerging_hotspots: min_count must be >= 1")
     cs = int(cell)
     d = df.select(
-        _bin_floor(F.col(x_col).cast("long"), cs).alias("cx"),
-        _bin_floor(F.col(y_col).cast("long"), cs).alias("cy"),
+        bin_floor(F.col(x_col).cast("long"), cs).alias("cx"),
+        bin_floor(F.col(y_col).cast("long"), cs).alias("cy"),
         F.when(F.col(recent_col), 1).otherwise(0).alias("_r"))
     per = (d.groupBy("cx", "cy")
            .agg(F.sum("_r").cast("long").alias("n_recent"),
@@ -2989,22 +2941,15 @@ def st_radius_join(a: DataFrame, b: DataFrame, keys: Sequence[str],
     r, tb = int(radius), int(t_band)
     ax, ay, at_ = (F.col(c).cast("long") for c in a_cols)
     bx, by, bt = (F.col(c).cast("long") for c in b_cols)
-    nbr = F.explode(F.array(*[
-        F.struct((_bin_floor(ax, r) + i).alias("gx"),
-                 (_bin_floor(ay, r) + j).alias("gy"),
-                 (_bin_floor(at_, tb) + l).alias("gt"))
-        for i in (-1, 0, 1) for j in (-1, 0, 1) for l in (-1, 0, 1)
-    ])).alias("_g")
-    aa = (a.select(*keys, F.col(a_id), ax.alias("_ax"), ay.alias("_ay"),
-                   at_.alias("_at"), nbr)
-          .select(*keys, a_id, "_ax", "_ay", "_at",
-                  F.col("_g.gx").alias("_gx"),
-                  F.col("_g.gy").alias("_gy"),
-                  F.col("_g.gt").alias("_gt")))
+    aa = explode_neighbours(
+        a, [*keys, F.col(a_id), ax.alias("_ax"), ay.alias("_ay"),
+            at_.alias("_at")],
+        [bin_floor(ax, r), bin_floor(ay, r), bin_floor(at_, tb)],
+        ["_gx", "_gy", "_gt"])
     bb = b.select(*keys, F.col(b_id), bx.alias("_bx"), by.alias("_by"),
-                  bt.alias("_bt"), _bin_floor(bx, r).alias("_gx"),
-                  _bin_floor(by, r).alias("_gy"),
-                  _bin_floor(bt, tb).alias("_gt"))
+                  bt.alias("_bt"), bin_floor(bx, r).alias("_gx"),
+                  bin_floor(by, r).alias("_gy"),
+                  bin_floor(bt, tb).alias("_gt"))
     dx = F.col("_bx") - F.col("_ax")
     dy = F.col("_by") - F.col("_ay")
     dt = F.col("_bt") - F.col("_at")
@@ -3110,37 +3055,15 @@ def geofence_visits(points: DataFrame, fences: DataFrame,
     dist² a provable int64; C is a driver scalar off the tiny fence
     table.
     """
-    fr = fences.select(F.col(fence_id).alias("_fid"),
-                       F.col(cx_col).cast("long").alias("_cx"),
-                       F.col(cy_col).cast("long").alias("_cy"),
-                       F.col(r_col).cast("long").alias("_r"))
-    lo, hi = fr.agg(F.min("_r"), F.max("_r")).collect()[0]
-    if lo is None:
-        raise ValueError("geofence_visits: fences is empty")
-    if lo < 1 or hi > (1 << 29):
-        raise ValueError(
-            "geofence_visits: fence radii must be in [1, 2^29] so "
-            "dist² stays a provable int64")
-    cw = int(hi)
-    fcells = fr.select(
-        "_fid", "_cx", "_cy", "_r",
-        F.explode(F.sequence(_bin_floor(F.col("_cx") - F.col("_r"),
-                                        cw),
-                             _bin_floor(F.col("_cx") + F.col("_r"),
-                                        cw))).alias("_gx")
-    ).select(
-        "_fid", "_cx", "_cy", "_r", "_gx",
-        F.explode(F.sequence(_bin_floor(F.col("_cy") - F.col("_r"),
-                                        cw),
-                             _bin_floor(F.col("_cy") + F.col("_r"),
-                                        cw))).alias("_gy"))
+    fcells, cw = fence_cells(fences, fence_id, cx_col, cy_col, r_col,
+                             "geofence_visits")
     seqw = Window.partitionBy(user_col).orderBy(*order)
     pts = (points.withColumn("_seq", F.row_number().over(seqw)
                              .cast("long"))
            .withColumn("_px", F.col(x_col).cast("long"))
            .withColumn("_py", F.col(y_col).cast("long"))
-           .withColumn("_gx", _bin_floor(F.col("_px"), cw))
-           .withColumn("_gy", _bin_floor(F.col("_py"), cw)))
+           .withColumn("_gx", bin_floor(F.col("_px"), cw))
+           .withColumn("_gy", bin_floor(F.col("_py"), cw)))
     dx = F.col("_px") - F.col("_cx")
     dy = F.col("_py") - F.col("_cy")
     hits = (pts.join(F.broadcast(fcells), ["_gx", "_gy"])

@@ -200,7 +200,13 @@ def ann_cosine_topk(df: DataFrame, k: int = 5, dim: int = 64,
 
     The refine runs once per UNDIRECTED pair; both directions are emitted
     by mirroring the refined (a, b, sim) rows — not by re-joining vectors
-    — before the per-query top-k window."""
+    — before the per-query top-k window.
+
+    Executes EAGERLY: the result is materialized with
+    localCheckpoint(eager=True) before the LSH caches are released, so
+    the call itself runs the LSH + refine jobs (it is not a lazy
+    transform), and the checkpointed blocks live until the returned
+    DataFrame is garbage-collected."""
     sims, caches = _lsh_candidate_sims(df, dim, bits, bands, id_col,
                                        vec_col, seed)
     # the mirror union references `sims` twice; cache it so the refine
@@ -226,7 +232,11 @@ def cosine_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
                           id_col: str = "vec_id", vec_col: str = "embedding",
                           seed: int = 42) -> DataFrame:
     """Embedding-cosine near-dup pairs (a < b, sim >= threshold) via LSH
-    candidates + exact refine."""
+    candidates + exact refine.
+
+    Executes EAGERLY, like ann_cosine_topk: the result is materialized
+    with localCheckpoint(eager=True) before the LSH caches are released,
+    so the call itself runs the jobs."""
     sims, caches = _lsh_candidate_sims(df, dim, bits, bands, id_col,
                                        vec_col, seed)
     try:

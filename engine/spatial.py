@@ -16,6 +16,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .grid import bin_floor, box_cell_count, explode_box
+
 # |coordinate| bound so every cross/dot product of coordinate differences
 # stays a provable int64: |dx|, |dy| <= 2^31, products <= 2^62, and the
 # one subtraction between them < 2^63.
@@ -348,38 +350,30 @@ def snap_to_segments(points: DataFrame, segments: DataFrame,
         F.col(sy1).cast("long").alias("_y1"),
         F.col(sx2).cast("long").alias("_x2"),
         F.col(sy2).cast("long").alias("_y2"))
-    def cell(c):
-        return ((c - F.pmod(c, F.lit(cs))) / F.lit(cs)).cast("long")
-
-    lox = F.least(F.col("_x1"), F.col("_x2")) - F.lit(cs)
-    hix = F.greatest(F.col("_x1"), F.col("_x2")) + F.lit(cs)
-    loy = F.least(F.col("_y1"), F.col("_y2")) - F.lit(cs)
-    hiy = F.greatest(F.col("_y1"), F.col("_y2")) + F.lit(cs)
-    ncell = ((cell(hix) - cell(lox) + 1)
-             * (cell(hiy) - cell(loy) + 1))
-    # extent + fan-out envelope checks fused into ONE segment-dim scan
-    # (was two); raise order (extent first) preserved
+    x1, y1, x2, y2 = (F.col(c) for c in ("_x1", "_y1", "_x2", "_y2"))
+    lo = [bin_floor(F.least(x1, x2) - F.lit(cs), cs),
+          bin_floor(F.least(y1, y2) - F.lit(cs), cs)]
+    hi = [bin_floor(F.greatest(x1, x2) + F.lit(cs), cs),
+          bin_floor(F.greatest(y1, y2) + F.lit(cs), cs)]
+    # extent + fan-out envelope checks fused into ONE segment-dim scan;
+    # raise order (extent first) preserved
     chk = seg.agg(
-        F.max(F.greatest(F.abs(F.col("_x2") - F.col("_x1")),
-                         F.abs(F.col("_y2") - F.col("_y1")))).alias("ext"),
-        F.max(ncell).alias("fan")).collect()[0]
+        F.max(F.greatest(F.abs(x2 - x1), F.abs(y2 - y1))).alias("ext"),
+        F.max(box_cell_count(lo, hi, max_cells)).alias("fan")).collect()[0]
     if chk["ext"] is not None and chk["ext"] > 4096:
         raise ValueError(
             f"snap_to_segments: a segment spans {chk['ext']} (> 4096) per "
             f"axis — split long roads upstream (the cross² envelope)")
     if chk["fan"] is not None and chk["fan"] > max_cells:
         raise ValueError(
-            f"snap_to_segments: a segment covers {chk['fan']} cells "
-            f"(> {max_cells}); coarsen the grid or split it")
-    segc = (seg.withColumn("_cx", F.explode(F.sequence(cell(lox),
-                                                       cell(hix))))
-            .withColumn("_cy", F.explode(F.sequence(cell(loy),
-                                                    cell(hiy)))))
+            f"snap_to_segments: a segment covers more than {max_cells} "
+            f"cells; coarsen the grid or split it")
+    segc = explode_box(seg, ("_cx", "_cy"), lo, hi)
     pts = points.select(*keys, F.col(p_id),
                         F.col(px).cast("long").alias("_px"),
                         F.col(py).cast("long").alias("_py"))
-    pts = (pts.withColumn("_cx", cell(F.col("_px")))
-           .withColumn("_cy", cell(F.col("_py"))))
+    pts = (pts.withColumn("_cx", bin_floor(F.col("_px"), cs))
+           .withColumn("_cy", bin_floor(F.col("_py"), cs)))
     j = pts.join(segc, [*keys, "_cx", "_cy"])
     ax, ay = F.col("_x1"), F.col("_y1")
     bx, by = F.col("_x2"), F.col("_y2")

@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from .config import DEFAULT, EngineConfig
+from .grid import bin_floor, fence_cells
 
 
 def stream_sessionize(pages_stream: DataFrame,
@@ -501,38 +502,14 @@ def stream_geofence(points_stream: DataFrame, fences: DataFrame,
     (user, fence) — bounded by live keys, evicted by the watermark;
     the broadcast side is fence cells, a dim table.
     """
-    fr = fences.select(F.col(fence_id).alias("_fid"),
-                       F.col(cx_col).cast("long").alias("_cx"),
-                       F.col(cy_col).cast("long").alias("_cy"),
-                       F.col(r_col).cast("long").alias("_r"))
-    lo, hi = fr.agg(F.min("_r"), F.max("_r")).collect()[0]
-    if lo is None:
-        raise ValueError("stream_geofence: fences is empty")
-    if lo < 1 or hi > (1 << 29):
-        raise ValueError(
-            "stream_geofence: fence radii must be in [1, 2^29] so "
-            "dist² stays a provable int64")
-    cw = int(hi)
-
-    def binf(c, w):
-        return ((c - F.pmod(c, F.lit(w))) / F.lit(w)).cast("long")
-
-    fcells = fr.select(
-        "_fid", "_cx", "_cy", "_r",
-        F.explode(F.sequence(binf(F.col("_cx") - F.col("_r"), cw),
-                             binf(F.col("_cx") + F.col("_r"), cw)))
-        .alias("_gx")
-    ).select(
-        "_fid", "_cx", "_cy", "_r", "_gx",
-        F.explode(F.sequence(binf(F.col("_cy") - F.col("_r"), cw),
-                             binf(F.col("_cy") + F.col("_r"), cw)))
-        .alias("_gy"))
+    fcells, cw = fence_cells(fences, fence_id, cx_col, cy_col, r_col,
+                             "stream_geofence")
     pts = (points_stream
            .withWatermark(ts_col, watermark)
            .withColumn("_px", F.col(x_col).cast("long"))
            .withColumn("_py", F.col(y_col).cast("long"))
-           .withColumn("_gx", binf(F.col("_px"), cw))
-           .withColumn("_gy", binf(F.col("_py"), cw)))
+           .withColumn("_gx", bin_floor(F.col("_px"), cw))
+           .withColumn("_gy", bin_floor(F.col("_py"), cw)))
     dx = F.col("_px") - F.col("_cx")
     dy = F.col("_py") - F.col("_cy")
     hits = (pts.join(F.broadcast(fcells), ["_gx", "_gy"])

@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 from . import geo
 from .config import DEFAULT, EngineConfig
 from .functions import explode_kring_native, parent_cell_col
+from .grid import bin_floor, box_cell_count, explode_box, explode_neighbours
 
 
 def site_cells(sites: DataFrame, cfg: EngineConfig = DEFAULT,
@@ -103,14 +104,18 @@ def rollup_pyramid(density: DataFrame, cfg: EngineConfig = DEFAULT,
     Parent ids are pure bit math (parent_cell_col) — stays in codegen; each
     level is one partial-aggregated shuffle of the already-small raster.
 
-    ``hierarchical=True`` aggregates each coarser level from the FINEST
-    already-computed finer level instead of from the base: total
-    aggregation input drops from n_levels x base to ~1.33 x base (the
-    classic pyramid build — the shape that matters when the base raster
-    is corpus-sized).  Only exact for integer-valued masses (sums of
-    sums regroup float rounding), which is why the default stays False:
-    the float-mass path's per-cell values remain bit-identical to the
-    flat form, and the integer-ms callers opt in.
+    ``hierarchical=True`` aggregates each coarser level from the NEAREST
+    already-computed finer level (the coarsest of the finer ones, the
+    cheapest input) instead of from the base: total aggregation input
+    drops from n_levels x base to ~1.33 x base (the classic pyramid build
+    — the shape that matters when the base raster is corpus-sized).
+    Levels are computed in the order given, so they must be ordered fine
+    to coarse for this to take effect; coarse-to-fine levels find no
+    finer level computed yet and aggregate from the base.  Only exact for
+    integer-valued masses (sums of sums regroup float rounding), which is
+    why the default stays False: the float-mass path's per-cell values
+    remain bit-identical to the flat form, and the integer-ms callers opt
+    in.
     """
     lvls = levels if levels is not None else cfg.tile_levels
     base = base_level if base_level is not None else cfg.cell_level
@@ -284,20 +289,8 @@ def pip_join(points: DataFrame, polygons_with_cover: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# skew: hot-cell detection + salted aggregation
+# grid-cell statistics: Gi* hotspots, focal and zonal statistics
 # ---------------------------------------------------------------------------
-
-def hot_keys(df: DataFrame, key: str, threshold: int) -> DataFrame:
-    """Heavy-hitter keys by exact count (cheap: partial-agg count shuffle)."""
-    return (df.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") >= threshold).select(key, "n"))
-
-
-def salted_cell_density(sites: DataFrame, cfg: EngineConfig = DEFAULT,
-                        level: int | None = None) -> DataFrame:
-    """Back-compat alias for cell_density(..., salted=True)."""
-    return cell_density(sites, cfg, level, salted=True)
-
 
 def hotspot_gi(pts: DataFrame, x_col: str, y_col: str,
                cell_size: int) -> DataFrame:
@@ -334,12 +327,8 @@ def hotspot_gi(pts: DataFrame, x_col: str, y_col: str,
     if cell_size <= 0:
         raise ValueError("hotspot_gi: cell_size must be positive")
     cs = int(cell_size)
-
-    def cell(c):
-        return ((c - F.pmod(c, F.lit(cs))) / F.lit(cs)).cast("long")
-
-    cnt = (pts.select(cell(F.col(x_col).cast("long")).alias("cx"),
-                      cell(F.col(y_col).cast("long")).alias("cy"))
+    cnt = (pts.select(bin_floor(F.col(x_col).cast("long"), cs).alias("cx"),
+                      bin_floor(F.col(y_col).cast("long"), cs).alias("cy"))
            .groupBy("cx", "cy")
            .agg(F.count(F.lit(1)).cast("long").alias("v")))
     glob = cnt.agg(F.count(F.lit(1)).cast("long"),
@@ -350,14 +339,8 @@ def hotspot_gi(pts: DataFrame, x_col: str, y_col: str,
         raise ValueError(
             f"hotspot_gi: n*SS = {n * ss} or S^2 = {s * s} breaches the "
             f"int64 envelope (< 2^62); rescale counts")
-    donate = (cnt.select(
-        F.explode(F.array(*[
-            F.struct((F.col("cx") + i).alias("cx"),
-                     (F.col("cy") + j).alias("cy"))
-            for i in (-1, 0, 1) for j in (-1, 0, 1)])).alias("_c"),
-        F.col("v"))
-        .select(F.col("_c.cx").alias("cx"), F.col("_c.cy").alias("cy"),
-                "v"))
+    donate = explode_neighbours(cnt, ["v"], [F.col("cx"), F.col("cy")],
+                                ["cx", "cy"])
     nbr = donate.groupBy("cx", "cy").agg(
         F.sum("v").cast("long").alias("w_sum"),
         F.count(F.lit(1)).cast("long").alias("w_cnt"))
@@ -412,15 +395,9 @@ def focal_stats(raster: DataFrame, keys: list[str] | tuple[str, ...],
         raise ValueError(
             "focal_stats: duplicate (key, cell) rows present — a "
             "sparse raster must be a function; aggregate upstream")
-    offs = [(i, j) for i in (-1, 0, 1) for j in (-1, 0, 1)
-            if include_self or (i, j) != (0, 0)]
-    nbr = F.explode(F.array(*[
-        F.struct((F.col("_cx") + i).alias("nx"),
-                 (F.col("_cy") + j).alias("ny"))
-        for i, j in offs])).alias("_n")
-    scat = (r.select(*keys, "_v", nbr)
-            .select(*keys, F.col("_n.nx").alias("_cx"),
-                    F.col("_n.ny").alias("_cy"), "_v"))
+    scat = explode_neighbours(r, [*keys, "_v"],
+                              [F.col("_cx"), F.col("_cy")], ["_cx", "_cy"],
+                              centre=include_self)
     agg = (scat.groupBy(*keys, "_cx", "_cy")
            .agg(F.sum("_v").cast("long").alias("f_sum"),
                 F.count(F.lit(1)).cast("long").alias("f_cnt"),
@@ -479,19 +456,15 @@ def zonal_stats(raster: DataFrame, zones: DataFrame,
     cs = int(cell)
     if cs <= 0:
         raise ValueError("zonal_stats: cell must be positive")
-
-    def g(c):
-        return ((c - F.pmod(c, F.lit(cs))) / F.lit(cs)).cast("long")
-
-    ncell = ((g(F.col("_x2")) - g(F.col("_x1")) + 1)
-             * (g(F.col("_y2")) - g(F.col("_y1")) + 1))
+    lo = [bin_floor(F.col("_x1"), cs), bin_floor(F.col("_y1"), cs)]
+    hi = [bin_floor(F.col("_x2"), cs), bin_floor(F.col("_y2"), cs)]
+    ncell = box_cell_count(lo, hi, max_cells)
     # ONE validation job over the (dim-sized) zone table for all three
     # checks: inverted boxes, per-zone fan-out, and the COMBINED cover
     # budget — max_zones and max_cells alone still admit a ~2.7e8-row
     # exploded broadcast (an executor OOM); the total is what the
-    # broadcast premise actually depends on.  Inverted boxes yield a
-    # garbage ncell, so the fan/total checks only fire when boxes are
-    # sane.
+    # broadcast premise actually depends on.  The total is exact once
+    # no zone exceeds max_cells, and that check raises first.
     chk = z.agg(
         F.max(F.when((F.col("_x2") < F.col("_x1"))
                      | (F.col("_y2") < F.col("_y1")), 1)
@@ -502,8 +475,8 @@ def zonal_stats(raster: DataFrame, zones: DataFrame,
         raise ValueError("zonal_stats: inverted zone box present")
     if chk["fan"] is not None and chk["fan"] > int(max_cells):
         raise ValueError(
-            f"zonal_stats: a zone covers {chk['fan']} grid cells "
-            f"(> {max_cells}); coarsen `cell` or split the zone")
+            f"zonal_stats: a zone covers more than {max_cells} grid "
+            f"cells; coarsen `cell` or split the zone")
     max_total = 1 << 22
     if chk["total"] is not None and chk["total"] > max_total:
         raise ValueError(
@@ -511,15 +484,12 @@ def zonal_stats(raster: DataFrame, zones: DataFrame,
             f"(> {max_total}) — the exploded broadcast cover table would "
             f"blow the broadcast envelope; coarsen `cell` or shard the "
             f"zone system")
-    zc = (z.withColumn("_gx", F.explode(F.sequence(g(F.col("_x1")),
-                                                   g(F.col("_x2")))))
-          .withColumn("_gy", F.explode(F.sequence(g(F.col("_y1")),
-                                                  g(F.col("_y2"))))))
+    zc = explode_box(z, ("_gx", "_gy"), lo, hi)
     r = raster.select(F.col(cx_col).cast("long").alias("_cx"),
                       F.col(cy_col).cast("long").alias("_cy"),
                       F.col(val_col).cast("long").alias("_v"))
-    r = (r.withColumn("_gx", g(F.col("_cx")))
-         .withColumn("_gy", g(F.col("_cy"))))
+    r = (r.withColumn("_gx", bin_floor(F.col("_cx"), cs))
+         .withColumn("_gy", bin_floor(F.col("_cy"), cs)))
     hits = (r.join(F.broadcast(zc), ["_gx", "_gy"])
             .filter((F.col("_cx") >= F.col("_x1"))
                     & (F.col("_cx") <= F.col("_x2"))

@@ -637,10 +637,7 @@ def test_bloom_probe_stage_is_join_free(spark):
     assert len(re.findall(r"\wJoin", plan)) == 1, plan
 
 
-def test_binned_interval_join_has_no_distinct(spark):
-    """The canonical-first-bin filter replaces the distinct: the binned
-    range join's plan must contain exactly the ONE equi join and no
-    pair-dedup aggregate above it (dedup is a map-side filter)."""
+def _binned_interval_join(spark):
     from datetime import datetime, timezone
 
     from engine import ops
@@ -649,9 +646,65 @@ def test_binned_interval_join_has_no_distinct(spark):
                               ["k", "aid", "start_ts", "end_ts"])
     b = spark.createDataFrame([(1, 2, u(100), u(9000))],
                               ["k", "bid", "start_ts", "end_ts"])
-    out = ops.interval_overlap_join_binned(a, b, ["k"], bin_s=3600)
-    plan = plan_str(out, "simple")
+    return ops.interval_overlap_join_binned(a, b, ["k"], bin_s=3600)
+
+
+def _radius_join_2d(spark):
+    from engine import ops
+    a = spark.createDataFrame([(1, 1, 0, 0)], ["k", "a_id", "x", "y"])
+    b = spark.createDataFrame([(1, 2, 3, 4)], ["k", "b_id", "u", "v"])
+    return ops.radius_join_2d(a, b, ["k"], "x", "y", "u", "v", 5)
+
+
+def _geo_radius_join(spark):
+    from engine import ops
+    a = spark.createDataFrame([(1, 43.65, -79.38)], ["a_id", "lat", "lon"])
+    b = spark.createDataFrame([(2, 43.651, -79.381)],
+                              ["b_id", "blat", "blon"])
+    return ops.geo_radius_join(a, b, "lat", "lon", "blat", "blon", 500.0)
+
+
+def _st_radius_join(spark):
+    from engine import ops
+    a = spark.createDataFrame([(1, 1, 0, 0, 0)],
+                              ["k", "a_id", "x", "y", "t"])
+    b = spark.createDataFrame([(1, 2, 3, 4, 5)],
+                              ["k", "b_id", "u", "v", "s"])
+    return ops.st_radius_join(a, b, ["k"], ("x", "y", "t"),
+                              ("u", "v", "s"), 5, 10)
+
+
+def _bbox_overlap_join(spark):
+    from engine import ops
+    a = spark.createDataFrame([(1, 1, 0, 0, 9, 9)],
+                              ["k", "a_id", "x1", "y1", "x2", "y2"])
+    b = spark.createDataFrame([(1, 2, 5, 5, 20, 20)],
+                              ["k", "b_id", "u1", "v1", "u2", "v2"])
+    return ops.bbox_overlap_join(a, b, ["k"], ("x1", "y1", "x2", "y2"),
+                                 ("u1", "v1", "u2", "v2"), 8)
+
+
+def _snap_to_segments(spark):
+    from engine import spatial
+    pts = spark.createDataFrame([(1, 3, 4)], ["p_id", "px", "py"])
+    segs = spark.createDataFrame([(1, 0, 0, 10, 0)],
+                                 ["seg_id", "x1", "y1", "x2", "y2"])
+    return spatial.snap_to_segments(pts, segs, [], "px", "py",
+                                    "x1", "y1", "x2", "y2", 5)
+
+
+@pytest.mark.parametrize("build", [
+    _binned_interval_join, _radius_join_2d, _geo_radius_join,
+    _st_radius_join, _bbox_overlap_join, _snap_to_segments,
+], ids=lambda f: f.__name__.lstrip("_"))
+def test_grid_join_generates_each_pair_once(spark, build):
+    """Grid candidate joins generate every candidate pair exactly once —
+    the probe side replicates over neighbour cells while the build side
+    keeps its one true cell, or a canonical-cell filter keeps one copy —
+    so the plan holds exactly the ONE equi join and no pair-dedup
+    aggregate above it."""
     import re
+    plan = plan_str(build(spark), "simple")
     assert len(re.findall(r"\wJoin", plan)) == 1, plan
     assert "HashAggregate" not in plan.split("Join")[0], plan
 

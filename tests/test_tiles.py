@@ -166,7 +166,7 @@ def test_salted_cell_density_hot_cell(spark):
 def test_salted_cell_density_equals_plain(sites):
     a = (tiles.cell_density(sites).toPandas()
          .sort_values("cell_id").reset_index(drop=True))
-    b = (tiles.salted_cell_density(sites).toPandas()
+    b = (tiles.cell_density(sites, salted=True).toPandas()
          .sort_values("cell_id").reset_index(drop=True))
     assert len(a) == len(b)
     np.testing.assert_array_equal(a["cell_id"], b["cell_id"])
@@ -295,6 +295,24 @@ def test_zonal_stats_matches_brute(spark):
     with _pt.raises(ValueError):
         tiles.zonal_stats(ras, zdf, "cx", "cy", "v", cell=1,
                           max_cells=3)
+
+
+@pytest.mark.parametrize("box,msg", [
+    ((1 << 62, 1 << 62, -(1 << 62), -(1 << 62)), "inverted zone box"),
+    ((-(1 << 61), -(1 << 61), 1 << 61, 1 << 61), "covers .* grid cells"),
+], ids=["inverted", "oversized"])
+def test_zonal_stats_extreme_box_raises_under_ansi(spark, box, msg):
+    """Zone boxes whose grid-cell count overflows int64 must raise the
+    contract ValueError, not an ANSI ArithmeticException from the
+    cover checks."""
+    import pandas as pd
+    from engine import tiles
+    ras = spark.createDataFrame(pd.DataFrame(
+        [(0, 0, 1)], columns=["cx", "cy", "v"]))
+    zdf = spark.createDataFrame(pd.DataFrame(
+        [(0, *box)], columns=["zone_id", "zx1", "zy1", "zx2", "zy2"]))
+    with pytest.raises(ValueError, match=msg):
+        tiles.zonal_stats(ras, zdf, "cx", "cy", "v", cell=1)
 
 
 def test_zonal_stats_combined_budget_raises(spark):

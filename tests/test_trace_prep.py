@@ -3,6 +3,7 @@ contract, mass conservation, partitioning invariance, plan shape."""
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from engine import ops, trace_prep
@@ -2338,6 +2339,38 @@ def test_snap_to_segments_matches_brute(spark):
     with _pt.raises(ValueError):
         spatial.snap_to_segments(pdf, long, [], "px", "py",
                                  "x1", "y1", "x2", "y2", r)
+
+
+def _snap_long_road(spark):
+    from engine import spatial
+    big = 1 << 40
+    pts = spark.createDataFrame([(1, 0, 0)], ["p_id", "px", "py"])
+    segs = spark.createDataFrame([(1, 0, 0, big, big)],
+                                 ["seg_id", "x1", "y1", "x2", "y2"])
+    spatial.snap_to_segments(pts, segs, [], "px", "py",
+                             "x1", "y1", "x2", "y2", 1)
+
+
+def _bbox_giant_box(spark):
+    big = 1 << 61
+    a = spark.createDataFrame([("k", 1, -big, -big, big, big)],
+                              ["k", "a_id", "x1", "y1", "x2", "y2"])
+    b = spark.createDataFrame([("k", 1, 0, 0, 1, 1)],
+                              ["k", "b_id", "u1", "v1", "u2", "v2"])
+    ops.bbox_overlap_join(a, b, ["k"], ("x1", "y1", "x2", "y2"),
+                          ("u1", "v1", "u2", "v2"), 1)
+
+
+@pytest.mark.parametrize("call,msg", [
+    (_snap_long_road, "split long roads"),
+    (_bbox_giant_box, "max_cells"),
+], ids=["snap_to_segments", "bbox_overlap_join"])
+def test_box_cover_envelope_raises_under_ansi(spark, call, msg):
+    """A box whose grid-cell count overflows int64 must raise the
+    contract ValueError, not an ANSI ArithmeticException from the
+    fan-out check itself."""
+    with pytest.raises(ValueError, match=msg):
+        call(spark)
 
 
 def test_quadrat_test_matches_brute(spark):
