@@ -38,8 +38,6 @@ class EngineConfig:
     # --- physical knobs (§4.2) ---
     shuffle_partitions: int = 32        # explicit, scaled to input at submit time
     salt_buckets: int = 8               # hot-key salting fan-out
-    hot_cell_threshold: int = 2_000_000  # rows/cell before salting kicks in
-    max_points_per_kernel: int = 2_000_000  # per-host kernel memory bound
     # below this point count the chunk-parallel KDE's ~12 extra stages of
     # scheduling overhead dominate and detect_locations(auto) uses the
     # single-stage whole-host kernel instead (parity-tested to 1e-9)

@@ -383,7 +383,7 @@ def build_episodes(assigned: DataFrame, cfg: EngineConfig = DEFAULT,
                    presorted: bool = False) -> DataFrame:
     """W3-W5 + unknown gaps: assigned points -> episodes DF.
 
-    Scale shape (SURVEY.md §4.2, cfg.max_points_per_kernel): the kernel is
+    Scale shape (SURVEY.md §4.2): the kernel is
     chunked by (host, subset_id) — W3-W5 are subset-local by definition —
     so the Zipf mega-host parallelizes across its thousands of subsets
     instead of serializing into one task.  The only cross-subset pieces,

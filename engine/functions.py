@@ -355,6 +355,35 @@ def explode_kring_native(df, level: int, k: int = 1,
 # Arrow-vectorized UDFs (the sanctioned slow path: numpy cell math only)
 # ---------------------------------------------------------------------------
 
+def host_runs(batches):
+    """Split a mapInArrow stream of host-clustered record batches (each
+    host's rows contiguous, e.g. after repartition + sortWithinPartitions
+    on host) into (host, pyarrow Table) per host.  A run that crosses
+    batch boundaries is buffered and yielded once complete, so peak memory
+    is one host's rows; the host string is read once per run."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    buf: list = []
+    cur = None
+    for rb in batches:
+        n = rb.num_rows
+        if n == 0:
+            continue
+        h = rb.column("host")
+        neq = pc.not_equal(h.slice(1), h.slice(0, n - 1))
+        cut = np.flatnonzero(neq.to_numpy(zero_copy_only=False)) + 1
+        for s, e in zip(np.r_[0, cut], np.r_[cut, n]):
+            run_host = h[int(s)].as_py()
+            if buf and run_host != cur:
+                yield cur, pa.Table.from_batches(buf).combine_chunks()
+                buf = []
+            buf.append(rb.slice(int(s), int(e - s)))
+            cur = run_host
+    if buf:
+        yield cur, pa.Table.from_batches(buf).combine_chunks()
+
+
 def make_cell_encode_udf(level: int):
     """pandas_udf: (lat, lon) -> cell id at `level` (LongType)."""
 

@@ -5,12 +5,16 @@ get_activity_locations + REF location.py [M] — time-weighted Gaussian KDE
 over a user's (here: host's) trajectory, thresholded in dwell-seconds,
 peaks agglomerated into activity locations.
 
-Spark shape (detect_locations): chunk-parallel — a mapInArrow binning
-kernel over arbitrary partitions (O(sites), embarrassingly parallel),
-a native groupBy(host, cell).sum merge, then ONE per-host kernel on the
-merged occupied-cell grid (O(cells)).  The single-kernel-per-host variant
-is kept as detect_locations_wholehost (parity oracle).  Inside the kernels
-everything is vectorized numpy on a SPARSE grid:
+Two Spark shapes share one numpy kernel core (detect_locations picks):
+detect_locations_wholehost runs ONE kernel per host after a host shuffle
+(one exchange, one stage) — the path detect_locations(auto) takes below
+cfg.kde_chunked_min_points, so the small-input product path (bench.py,
+the perfbench trips workload) runs it, and __spark_entry__.py calls it
+directly for its quant-mode queries.  The chunk-parallel path splits the
+O(sites) binning into a mapInArrow kernel over arbitrary partitions, a
+distributed bucket prune, then ONE per-host kernel on the merged
+occupied-cell grid (O(cells)).  Inside the kernels everything is
+vectorized numpy on a SPARSE grid:
 
   1. X3   — segment interpolation (identical math to
             trace_prep.interpolate_sites; parity is tested),
@@ -25,9 +29,6 @@ everything is vectorized numpy on a SPARSE grid:
             cluster_distance_m,
   5. A5   — density-weighted centroid + dwell per cluster; location ids
             numbered by dwell desc then (lon, lat) — fully deterministic.
-
-Memory bound: cfg.max_points_per_kernel caps a single host's kernel input
-(chunk upstream by subset_id if ever exceeded — SURVEY.md §4.2 spill note).
 """
 
 from __future__ import annotations
@@ -39,31 +40,86 @@ from pyspark.sql import functions as F
 
 from . import geo
 from .config import DEFAULT, EngineConfig
+from .functions import host_runs
 
 LOCATION_SCHEMA = ("host string, location_id int, lat double, lon double, "
                    "dwell_s double, n_cells int")
 
 
-def _sites_numpy(lat, lon, nlat, nlon, ndt, step_m):
-    """X3 twin of trace_prep.interpolate_sites (same math, numpy)."""
-    seg = ~np.isnan(ndt)
+def _sites_numpy(lat, lon, nlat, nlon, ndt, step_m, quant: bool):
+    """X3 twin of trace_prep.interpolate_sites (same math, numpy).
+
+    Each site's mass is snapped to integer units BEFORE any accumulation
+    (ms floored in quant mode, us rounded otherwise), so the whole-host
+    and the chunk-parallel kernels sum identical per-site integers.
+    Returns (site_lat, site_lon, mass, row): `row` is the input row of
+    each site's segment start."""
+    seg = np.flatnonzero(~np.isnan(ndt))
     a_lat, a_lon = lat[seg], lon[seg]
     b_lat, b_lon = nlat[seg], nlon[seg]
     dt = ndt[seg]
     d = geo.haversine_m(a_lat, a_lon, b_lat, b_lon)
     n = np.maximum(1, np.ceil(d / step_m)).astype(np.int64)
-    total = int(n.sum())
-    if total == 0:
-        return (np.empty(0), np.empty(0), np.empty(0))
     seg_idx = np.repeat(np.arange(len(n)), n)
     # k-th site within its segment
     starts = np.concatenate([[0], np.cumsum(n)[:-1]])
-    k = np.arange(total) - starts[seg_idx]
+    k = np.arange(len(seg_idx)) - starts[seg_idx]
     frac = (k + 0.5) / n[seg_idx]
     slat = a_lat[seg_idx] + frac * (b_lat[seg_idx] - a_lat[seg_idx])
     slon = a_lon[seg_idx] + frac * (b_lon[seg_idx] - a_lon[seg_idx])
     mass = dt[seg_idx] / n[seg_idx]
-    return slat, slon, mass
+    mass = (np.floor(mass * QUANT_MASS_SCALE) if quant
+            else np.round(mass * FLOAT_MASS_SCALE))
+    return slat, slon, mass, seg[seg_idx]
+
+
+def _cell_sums(ix, iy, mass):
+    """Sum site mass per distinct cell -> (uix, uiy, m0), sorted by key."""
+    uk, inv = np.unique(_pack(ix, iy), return_inverse=True)
+    uix, uiy = _unpack(uk)
+    return uix, uiy, np.bincount(inv, weights=mass)
+
+
+def _bucket_shift(cfg: EngineConfig) -> int:
+    """log2 of the coarse-bucket edge in cells for the threshold-aware
+    prune: >= 16 cells and wider than the stencil radius."""
+    r_cells = int(np.ceil(3.0 * cfg.kernel_bandwidth_m / cfg.grid_cell_m))
+    return max(4, int(np.ceil(np.log2(r_cells + 1))))
+
+
+def _dilated_buckets(keys, mass, thr):
+    """The threshold-aware bucket prune, shared by both kernels and the
+    distributed prune: _pack'ed coarse-bucket keys (repeats allowed) with
+    their masses -> sorted unique keys of the 1-bucket dilation of every
+    bucket whose 3x3 neighbourhood mass is >= thr.  The stencil sums to 1,
+    so only cells inside those buckets can contribute to a super-threshold
+    density.  Masses are integer-valued, so every sum is exact and
+    order-free."""
+    ucb, inv = np.unique(keys, return_inverse=True)
+    cmass = np.bincount(inv, weights=mass)
+    bx, by = _unpack(ucb)
+    nbh = np.zeros(len(ucb))
+    for a in (-1, 0, 1):
+        for b in (-1, 0, 1):
+            nkey = _pack(bx + a, by + b)
+            pos = np.clip(np.searchsorted(ucb, nkey), 0, len(ucb) - 1)
+            hit = ucb[pos] == nkey
+            nbh += np.bincount(pos[hit], weights=cmass[hit],
+                               minlength=len(ucb))
+    cx, cy = _unpack(ucb[nbh >= thr])
+    return np.unique(np.concatenate(
+        [_pack(cx + a, cy + b) for a in (-1, 0, 1) for b in (-1, 0, 1)]))
+
+
+def _locations_by_id(lat, lon, dwell, n_cells):
+    """A5 numbering: per-cluster lists -> (lat, lon, dwell_s, n_cells)
+    arrays in location-id order, dwell desc then (lon, lat)."""
+    order = sorted(range(len(lat)),
+                   key=lambda i: (-dwell[i], lon[i], lat[i]))
+    return (np.array([lat[i] for i in order]),
+            np.array([lon[i] for i in order]),
+            np.array([dwell[i] for i in order]),
+            np.array([n_cells[i] for i in order], dtype=np.int64))
 
 
 def _gauss_stencil(bandwidth_m: float, cell_m: float):
@@ -88,6 +144,13 @@ def _gauss_1d(bandwidth_m: float, cell_m: float):
     return g / g.sum()
 
 
+def _pack(x, y):
+    """Cell-key codec: signed int64 (x, y) -> one int64 key, x in the high
+    32 bits, so sorted keys group by x (|x|, |y| < 2^31).  _unpack inverts
+    it, sign-extending y."""
+    return (x << np.int64(32)) ^ (y & np.int64(0xFFFFFFFF))
+
+
 def _unpack(keys):
     x = np.asarray(keys) >> np.int64(32)
     y = ((np.asarray(keys) & np.int64(0xFFFFFFFF)) << np.int64(32)) >> np.int64(32)
@@ -109,8 +172,7 @@ def _cluster_buckets(keys: np.ndarray) -> np.ndarray:
             j = stack.pop()
             for a in (-1, 0, 1):
                 for b in (-1, 0, 1):
-                    nk = int(((bx[j] + a) << np.int64(32))
-                             ^ ((by[j] + b) & np.int64(0xFFFFFFFF)))
+                    nk = int(_pack(bx[j] + a, by[j] + b))
                     t = pos.get(nk)
                     if t is not None and labels[t] == -1:
                         labels[t] = nxt
@@ -171,8 +233,7 @@ def _sparse_smooth_threshold(ix, iy, m, bandwidth_m, cell_m, thr):
     tix = (ix[:, None] + di[None, :]).ravel()
     tiy = (iy[:, None] + dj[None, :]).ravel()
     tm = (m[:, None] * gw[None, :]).ravel()
-    tkey = (tix << np.int64(32)) ^ (tiy & np.int64(0xFFFFFFFF))
-    uk, inv = np.unique(tkey, return_inverse=True)
+    uk, inv = np.unique(_pack(tix, tiy), return_inverse=True)
     dens = np.bincount(inv, weights=tm)
     hot = dens >= thr
     hx, hy = _unpack(uk[hot])
@@ -180,50 +241,34 @@ def _sparse_smooth_threshold(ix, iy, m, bandwidth_m, cell_m, thr):
 
 
 def kde_locations_numpy(lat, lon, nlat, nlon, ndt, cfg: EngineConfig,
-                        anchor: tuple[float, float] | None = None,
-                        quant: bool = False):
+                        anchor: tuple[float, float], quant: bool = False):
     """Sparse-grid KDE + clustering for ONE host.  Returns
     (loc_lat, loc_lon, dwell_s, n_cells) arrays ordered by location id.
-    `anchor` (lat0, lon0) is the host's FIRST point; defaults to row 0 for
-    time-ordered input.  quant=True switches to the bit-portable
-    integer-arithmetic oracle mode (_kde_from_grid_quant)."""
-    slat, slon, mass = _sites_numpy(lat, lon, nlat, nlon, ndt,
-                                    cfg.interpolation_step_m)
+    `anchor` (lat0, lon0) is the host's FIRST point.  quant=True switches
+    to the bit-portable integer-arithmetic oracle mode
+    (_kde_from_grid_quant)."""
+    slat, slon, mass, _ = _sites_numpy(lat, lon, nlat, nlon, ndt,
+                                       cfg.interpolation_step_m, quant)
     if len(slat) == 0:
-        return (np.empty(0), np.empty(0), np.empty(0),
-                np.empty(0, dtype=np.int64))
-    if quant:
-        mass = np.floor(mass * QUANT_MASS_SCALE)
-    else:
-        mass = np.round(mass * FLOAT_MASS_SCALE)
-    # anchor: host's first point
-    lat0, lon0 = anchor if anchor is not None else (float(lat[0]), float(lon[0]))
+        return _locations_by_id([], [], [], [])
+    lat0, lon0 = anchor
     x, y = geo.equirect_project(slat, slon, lat0, lon0)
     cell = cfg.grid_cell_m
     ix = np.floor(x / cell).astype(np.int64)
     iy = np.floor(y / cell).astype(np.int64)
-
-    # aggregate mass per occupied cell
-    key = (ix << np.int64(32)) ^ (iy & np.int64(0xFFFFFFFF))
-    uk, inv = np.unique(key, return_inverse=True)
-    m0 = np.bincount(inv, weights=mass)
-    uix = uk >> np.int64(32)
-    uiy = ((uk & np.int64(0xFFFFFFFF)) << np.int64(32)) >> np.int64(32)  # sign-extend
-    if quant:
-        return _kde_from_grid_quant(uix, uiy, m0, lat0, lon0, cfg)
-    return _kde_from_grid(uix, uiy, m0, lat0, lon0, cfg,
-                          scale=FLOAT_MASS_SCALE)
+    uix, uiy, m0 = _cell_sums(ix, iy, mass)
+    kde = _kde_from_grid_quant if quant else _kde_from_grid
+    return kde(uix, uiy, m0, lat0, lon0, cfg)
 
 
-def _kde_from_grid(uix, uiy, m0, lat0, lon0, cfg: EngineConfig,
-                   scale: float = 1.0):
+def _kde_from_grid(uix, uiy, m0, lat0, lon0, cfg: EngineConfig):
     """A2(smooth)-A5 on an already-binned sparse grid: UNIQUE occupied
-    cells (uix, uiy) carrying aggregated dwell mass m0 (in seconds x
-    `scale` units — integer microseconds on the production path, see
-    FLOAT_MASS_SCALE), in the host-local equirectangular frame anchored at
-    (lat0, lon0).  Shared by the whole-host kernel (kde_locations_numpy)
-    and the chunk-parallel detect_locations merge kernel — cost is
-    O(occupied cells), independent of the host's point count.
+    cells (uix, uiy) carrying aggregated dwell mass m0 (integer
+    microseconds, see FLOAT_MASS_SCALE), in the host-local equirectangular
+    frame anchored at (lat0, lon0).  Shared by the whole-host kernel
+    (kde_locations_numpy) and the chunk-parallel detect_locations merge
+    kernel — cost is O(occupied cells), independent of the host's point
+    count.
 
     Determinism contract: the input cells are canonically re-sorted by
     (ix, iy) first, so every float accumulation below runs in ONE fixed
@@ -232,48 +277,21 @@ def _kde_from_grid(uix, uiy, m0, lat0, lon0, cfg: EngineConfig,
     order = np.lexsort((uiy, uix))
     uix, uiy, m0 = (np.asarray(uix)[order], np.asarray(uiy)[order],
                     np.asarray(m0)[order])
-    thr = cfg.kde_time_threshold_s * scale
+    thr = cfg.kde_time_threshold_s * FLOAT_MASS_SCALE
     cell = cfg.grid_cell_m
-    # EXACT threshold-aware pruning before smoothing: the stencil sums to 1,
-    # so density(c) <= total mass within c +- r cells <= the 3x3 coarse-
-    # bucket (16-cell = 200 m) neighborhood mass of c's bucket.  Only cells
-    # inside (the 1-bucket dilation of) buckets whose neighborhood holds
-    # >= kde_time_threshold_s can influence a super-threshold output cell.
+    # EXACT threshold-aware pruning before smoothing (_dilated_buckets):
+    # density(c) <= total mass within c +- r cells <= the 3x3 coarse-
+    # bucket (16-cell = 200 m) neighborhood mass of c's bucket.
     # A mega-host's travel corridors occupy ~1M distinct cells carrying
     # seconds of mass each — without this, the scatter below builds 169x
     # that and a single host serializes the whole job (measured 329 s ->
     # ~2 s; scaling-efficiency bottleneck).
-    r_cells = int(np.ceil(3.0 * cfg.kernel_bandwidth_m / cell))
-    bshift = np.int64(max(4, int(np.ceil(np.log2(r_cells + 1)))))
-    ck = ((uix >> bshift) << np.int64(32)) ^ ((uiy >> bshift) & np.int64(0xFFFFFFFF))
-    ucb, cinv = np.unique(ck, return_inverse=True)
-    cmass = np.bincount(cinv, weights=m0)
-    cbx = ucb >> np.int64(32)
-    cby = ((ucb & np.int64(0xFFFFFFFF)) << np.int64(32)) >> np.int64(32)
-    # 3x3 coarse neighborhood sums
-    nbh = np.zeros(len(ucb))
-    for dbx in (-1, 0, 1):
-        for dby in (-1, 0, 1):
-            nkey = ((cbx + dbx) << np.int64(32)) ^ ((cby + dby) & np.int64(0xFFFFFFFF))
-            pos = np.searchsorted(ucb, nkey)
-            pos = np.clip(pos, 0, len(ucb) - 1)
-            hit = ucb[pos] == nkey
-            # bincount, not np.add.at (~10x on this VM): cmass entries are
-            # integer-valued doubles (integer-us masses), so the sum is
-            # exact and order-free — bit-identical accumulation.
-            nbh += np.bincount(pos[hit], weights=cmass[hit],
-                               minlength=len(ucb))
-    cand = ucb[nbh >= thr]
-    if len(cand) == 0:
-        return (np.empty(0), np.empty(0), np.empty(0),
-                np.empty(0, dtype=np.int64))
-    # dilate candidate buckets by 1 and keep only input cells inside them
-    cdx = cand >> np.int64(32)
-    cdy = ((cand & np.int64(0xFFFFFFFF)) << np.int64(32)) >> np.int64(32)
-    dil = np.unique(np.concatenate(
-        [((cdx + a) << np.int64(32)) ^ ((cdy + b) & np.int64(0xFFFFFFFF))
-         for a in (-1, 0, 1) for b in (-1, 0, 1)]))
-    keep = np.isin(ck, dil, assume_unique=False)
+    bshift = _bucket_shift(cfg)
+    ck = _pack(uix >> bshift, uiy >> bshift)
+    dil = _dilated_buckets(ck, m0, thr)
+    if len(dil) == 0:
+        return _locations_by_id([], [], [], [])
+    keep = np.isin(ck, dil)
     uix, uiy, m0 = uix[keep], uiy[keep], m0[keep]
     ckk = ck[keep]
 
@@ -321,8 +339,7 @@ def _kde_from_grid(uix, uiy, m0, lat0, lon0, cfg: EngineConfig,
     hiy = np.concatenate(hiy_l).astype(np.float64)
     hd = np.concatenate(hd_l)
     if len(hix) == 0:
-        return (np.empty(0), np.empty(0), np.empty(0),
-                np.empty(0, dtype=np.int64))
+        return _locations_by_id([], [], [], [])
 
     # A4 (shared helper _cluster_cells): connected components over
     # super-threshold cells within cluster_distance.
@@ -341,15 +358,9 @@ def _kde_from_grid(uix, uiy, m0, lat0, lon0, cfg: EngineConfig,
         clat, clon = geo.equirect_unproject(mx, my, lat0, lon0)
         out_lat.append(float(clat))
         out_lon.append(float(clon))
-        out_dwell.append(float(w.sum()) / scale)
+        out_dwell.append(float(w.sum()) / FLOAT_MASS_SCALE)
         out_n.append(int(mask.sum()))
-    # deterministic ids: dwell desc, then (lon, lat)
-    order = sorted(range(len(labels)),
-                   key=lambda i: (-out_dwell[i], out_lon[i], out_lat[i]))
-    return (np.array([out_lat[i] for i in order]),
-            np.array([out_lon[i] for i in order]),
-            np.array([out_dwell[i] for i in order]),
-            np.array([out_n[i] for i in order], dtype=np.int64))
+    return _locations_by_id(out_lat, out_lon, out_dwell, out_n)
 
 
 QUANT_W_SCALE = 1 << 16          # stencil weights -> integers
@@ -398,39 +409,18 @@ def _kde_from_grid_quant(uix, uiy, m0, lat0, lon0, cfg: EngineConfig):
         float ops are one division, one add chain, and the equirect
         unproject — identical op order to the SQL replay.
 
-    The threshold-aware bucket prune is replicated from _kde_from_grid
+    The threshold-aware bucket prune is _kde_from_grid's (_dilated_buckets)
     with the ms-scaled threshold; it provably changes nothing about hot
-    cells (see that function's proof), so the SQL oracle skips it."""
+    cells, so the SQL oracle skips it."""
     thr_ms = cfg.kde_time_threshold_s * float(QUANT_MASS_SCALE)
     cell = cfg.grid_cell_m
-    empty = (np.empty(0), np.empty(0), np.empty(0),
-             np.empty(0, dtype=np.int64))
-    # --- prune (quant twin of the _kde_from_grid block, thr in ms)
-    r_cells = int(np.ceil(3.0 * cfg.kernel_bandwidth_m / cell))
-    bshift = np.int64(max(4, int(np.ceil(np.log2(r_cells + 1)))))
-    ck = ((uix >> bshift) << np.int64(32)) ^ ((uiy >> bshift) & np.int64(0xFFFFFFFF))
-    ucb, cinv = np.unique(ck, return_inverse=True)
-    cmass = np.bincount(cinv, weights=m0)
-    cbx = ucb >> np.int64(32)
-    cby = ((ucb & np.int64(0xFFFFFFFF)) << np.int64(32)) >> np.int64(32)
-    nbh = np.zeros(len(ucb))
-    for dbx in (-1, 0, 1):
-        for dby in (-1, 0, 1):
-            nkey = ((cbx + dbx) << np.int64(32)) \
-                ^ ((cby + dby) & np.int64(0xFFFFFFFF))
-            pos = np.searchsorted(ucb, nkey)
-            pos = np.clip(pos, 0, len(ucb) - 1)
-            hit = ucb[pos] == nkey
-            np.add.at(nbh, pos[hit], cmass[np.where(hit)[0]])
-    cand = ucb[nbh >= thr_ms]
-    if len(cand) == 0:
-        return empty
-    cdx = cand >> np.int64(32)
-    cdy = ((cand & np.int64(0xFFFFFFFF)) << np.int64(32)) >> np.int64(32)
-    dil = np.unique(np.concatenate(
-        [((cdx + a) << np.int64(32)) ^ ((cdy + b) & np.int64(0xFFFFFFFF))
-         for a in (-1, 0, 1) for b in (-1, 0, 1)]))
-    keep = np.isin(ck, dil, assume_unique=False)
+    # --- prune (thr in ms)
+    bshift = _bucket_shift(cfg)
+    ck = _pack(uix >> bshift, uiy >> bshift)
+    dil = _dilated_buckets(ck, m0, thr_ms)
+    if len(dil) == 0:
+        return _locations_by_id([], [], [], [])
+    keep = np.isin(ck, dil)
     uix, uiy, m0 = uix[keep], uiy[keep], m0[keep]
 
     # --- A2 quant: integer stencil scatter over kept cells
@@ -439,14 +429,13 @@ def _kde_from_grid_quant(uix, uiy, m0, lat0, lon0, cfg: EngineConfig):
     tix = (uix[:, None] + di[None, :]).ravel()
     tiy = (uiy[:, None] + dj[None, :]).ravel()
     tm = (m0q[:, None] * w[None, :]).ravel()
-    tkey = (tix << np.int64(32)) ^ (tiy & np.int64(0xFFFFFFFF))
-    uk, inv = np.unique(tkey, return_inverse=True)
+    uk, inv = np.unique(_pack(tix, tiy), return_inverse=True)
     dens = np.zeros(len(uk), dtype=np.int64)
     np.add.at(dens, inv, tm)
     thr_q = np.int64(round(thr_ms)) * np.int64(wsum)
     hot = dens >= thr_q
     if not bool(hot.any()):
-        return empty
+        return _locations_by_id([], [], [], [])
     hix, hiy = _unpack(uk[hot])
     hd = dens[hot]
 
@@ -471,115 +460,38 @@ def _kde_from_grid_quant(uix, uiy, m0, lat0, lon0, cfg: EngineConfig):
         out_lon.append(float(clon))
         out_dwell.append(sd / denom)
         out_n.append(int(mask.sum()))
-    order = sorted(range(len(out_lat)),
-                   key=lambda i: (-out_dwell[i], out_lon[i], out_lat[i]))
-    return (np.array([out_lat[i] for i in order]),
-            np.array([out_lon[i] for i in order]),
-            np.array([out_dwell[i] for i in order]),
-            np.array([out_n[i] for i in order], dtype=np.int64))
-
-
-def _location_kernel(cfg: EngineConfig, quant: bool = False):
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        # The KDE is order-independent (segments ride on each row as
-        # next_* links); only the projection anchor needs the host's FIRST
-        # point, located by integer argmin(seq) — no string sort of the
-        # whole group (the mega-host's pandas mergesort on (warc_ts, url)
-        # was pure straggler overhead).
-        lat = pdf["lat"].to_numpy(np.float64)
-        lon = pdf["lon"].to_numpy(np.float64)
-        anchor = None
-        if len(pdf):
-            a = int(np.argmin(pdf["seq"].to_numpy(np.int64)))
-            anchor = (float(lat[a]), float(lon[a]))
-        la, lo, dw, nc = kde_locations_numpy(
-            lat, lon,
-            pdf["next_lat"].to_numpy(np.float64),
-            pdf["next_lon"].to_numpy(np.float64),
-            pdf["next_dt_s"].to_numpy(np.float64), cfg, anchor=anchor,
-            quant=quant)
-        return pd.DataFrame({
-            "host": pdf["host"].iloc[0] if len(pdf) else "",
-            "location_id": np.arange(len(la), dtype=np.int32),
-            "lat": la, "lon": lo, "dwell_s": dw,
-            "n_cells": nc.astype(np.int32),
-        })
-
-    return kernel
+    return _locations_by_id(out_lat, out_lon, out_dwell, out_n)
 
 
 def _wholehost_stream(cfg: EngineConfig, quant: bool = False):
-    """mapInArrow stream over a (host)-sorted partition: buffers exactly
-    one host's rows at a time (hosts are contiguous runs — the
-    _prep_stream pattern) and runs kde_locations_numpy per completed
-    host straight off the Arrow buffers.  Value-identical to the
-    per-group pandas kernel (_location_kernel, kept as the semantic
-    reference): the KDE is order-independent (integer-us site masses;
-    cells canonically re-sorted in _kde_from_grid) and the anchor is
-    located by argmin(seq), so only the per-group pandas frame
-    construction — measured ~40% of the stage at 1500 tiny hosts —
-    goes away."""
+    """mapInArrow stream over a (host)-sorted partition: runs
+    kde_locations_numpy on each completed host run (functions.host_runs)
+    straight off the Arrow buffers, with no per-group pandas frame
+    (measured ~40% of the stage at 1500 tiny hosts).  The KDE is
+    order-independent (integer-unit site masses; cells canonically
+    re-sorted in _kde_from_grid), so only the projection anchor needs the
+    host's FIRST point, located by argmin(seq) without a sort."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     num_cols = ("seq", "lat", "lon", "next_lat", "next_lon", "next_dt_s")
     out_names = ["host", "location_id", "lat", "lon", "dwell_s", "n_cells"]
 
-    def run_host(host: str, parts: list[dict]):
-        arrs = {c: (np.concatenate([p[c] for p in parts])
-                    if len(parts) > 1 else parts[0][c])
-                for c in num_cols}
-        lat = arrs["lat"]
-        lon = arrs["lon"]
-        a = int(np.argmin(arrs["seq"]))
-        la, lo, dw, nc = kde_locations_numpy(
-            lat, lon, arrs["next_lat"], arrs["next_lon"],
-            arrs["next_dt_s"], cfg,
-            anchor=(float(lat[a]), float(lon[a])), quant=quant)
-        if len(la) == 0:
-            return None
-        return pa.record_batch([
-            pa.array([host] * len(la), type=pa.string()),
-            pa.array(np.arange(len(la), dtype=np.int32)),
-            pa.array(la), pa.array(lo), pa.array(dw),
-            pa.array(nc.astype(np.int32)),
-        ], names=out_names)
-
     def stream(batches):
-        buf: list[dict] = []
-        cur: str | None = None
-        for rb in batches:
-            if rb.num_rows == 0:
+        for host, tbl in host_runs(batches):
+            seq, lat, lon, nlat, nlon, ndt = (
+                tbl[c].to_numpy(zero_copy_only=False) for c in num_cols)
+            a = int(np.argmin(seq))
+            la, lo, dw, nc = kde_locations_numpy(
+                lat, lon, nlat, nlon, ndt, cfg,
+                (float(lat[a]), float(lon[a])), quant=quant)
+            if len(la) == 0:
                 continue
-            tbl = pa.Table.from_batches([rb])
-            h = tbl["host"].combine_chunks()
-            n = len(h)
-            if n > 1:
-                neq = pc.not_equal(h.slice(1), h.slice(0, n - 1))
-                cut = np.flatnonzero(
-                    neq.to_numpy(zero_copy_only=False)) + 1
-            else:
-                cut = np.empty(0, dtype=np.int64)
-            cols = {c: tbl[c].to_numpy(zero_copy_only=False)
-                    for c in num_cols}
-            starts = np.r_[0, cut]
-            ends = np.r_[cut, n]
-            for s, e in zip(starts, ends):
-                run_h = h[int(s)].as_py()
-                g = {c: v[s:e] for c, v in cols.items()}
-                if cur is None or run_h == cur:
-                    buf.append(g)
-                    cur = run_h
-                else:
-                    out = run_host(cur, buf)
-                    if out is not None:
-                        yield out
-                    buf = [g]
-                    cur = run_h
-        if buf:
-            out = run_host(cur, buf)
-            if out is not None:
-                yield out
+            yield pa.record_batch([
+                pa.array([host] * len(la), type=pa.string()),
+                pa.array(np.arange(len(la), dtype=np.int32)),
+                pa.array(la), pa.array(lo), pa.array(dw),
+                pa.array(nc.astype(np.int32)),
+            ], names=out_names)
 
     return stream
 
@@ -587,18 +499,22 @@ def _wholehost_stream(cfg: EngineConfig, quant: bool = False):
 def detect_locations_wholehost(points: DataFrame,
                                cfg: EngineConfig = DEFAULT,
                                quant: bool = False) -> DataFrame:
-    """Single-kernel-per-host variant (round-1 design).
+    """Single-kernel-per-host KDE: the small-input product path.
 
-    Correct, but the whole O(sites) interpolate+bin phase runs as ONE task
-    per host, so the Zipf mega-host is a serial floor that caps scaling at
-    every parallelism level (measured: the locations stage pinned at ~22 s
-    from local[2] through local[32] on the 8M-doc corpus).  Kept as the
-    parity oracle for detect_locations' chunk-parallel path.
+    detect_locations(auto) picks it below cfg.kde_chunked_min_points,
+    where it beats the chunk-parallel path's extra stages (bench.py and
+    the perfbench trips workload run it), and __spark_entry__.py calls it
+    directly for its quant-mode queries.  Its output equals the
+    chunk-parallel path's byte for byte (parity-tested).  At scale the
+    whole O(sites) interpolate+bin phase runs as ONE task per host, so the
+    Zipf mega-host is a serial floor that caps scaling at every
+    parallelism level (measured: the locations stage pinned at ~22 s from
+    local[2] through local[32] on the 8M-doc corpus).
 
     Plumbing: one hash exchange on host + a native partition sort, then
     the streaming Arrow kernel (_wholehost_stream) — the same exchange
     count as the old groupBy().applyInPandas form without its per-group
-    pandas frame construction (value-identical; parity-tested)."""
+    pandas frame construction."""
     cols = ["host", "seq", "lat", "lon",
             "next_lat", "next_lon", "next_dt_s"]
     pts = (points.select(*cols)
@@ -615,51 +531,21 @@ _BUCKET_KEEP_SCHEMA = "host string, bx long, by long"
 
 
 def _prune_kernel(cfg: EngineConfig, quant: bool = False):
-    """Per-host distributed twin of _kde_from_grid's threshold-aware bucket
-    prune, in ONE pass over the host's (already groupBy-merged) coarse
-    buckets: 3x3 neighborhood sums (sorted-key searchsorted, same
-    arithmetic as the in-kernel prune), threshold at kde_time_threshold_s,
-    1-bucket dilation.  Emits the dilated candidate bucket keys — the old
-    explode9 -> agg -> filter -> explode9 -> distinct chain spent ~3 extra
-    shuffles of 9x-exploded rows to compute exactly this set."""
+    """Per-host distributed form of the kernels' threshold-aware bucket
+    prune (_dilated_buckets), in ONE pass over the host's (already
+    groupBy-merged) coarse buckets.  Emits the dilated candidate bucket
+    keys — the old explode9 -> agg -> filter -> explode9 -> distinct chain
+    spent ~3 extra shuffles of 9x-exploded rows to compute exactly this
+    set."""
     thr = cfg.kde_time_threshold_s * (QUANT_MASS_SCALE if quant
                                       else FLOAT_MASS_SCALE)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"host": pd.Series([], dtype=object),
-                              "bx": pd.Series([], dtype=np.int64),
-                              "by": pd.Series([], dtype=np.int64)})
-        if len(pdf) == 0:
-            return empty
-        bx = pdf["bx"].to_numpy(np.int64)
-        by = pdf["by"].to_numpy(np.int64)
-        bm = pdf["bm"].to_numpy(np.float64)
-        key = (bx << np.int64(32)) ^ (by & np.int64(0xFFFFFFFF))
-        order = np.argsort(key, kind="stable")  # keys unique (post-groupBy)
-        ucb, cmass = key[order], bm[order]
-        cbx = ucb >> np.int64(32)
-        cby = ((ucb & np.int64(0xFFFFFFFF)) << np.int64(32)) >> np.int64(32)
-        nbh = np.zeros(len(ucb))
-        for dbx in (-1, 0, 1):
-            for dby in (-1, 0, 1):
-                nkey = ((cbx + dbx) << np.int64(32)) \
-                    ^ ((cby + dby) & np.int64(0xFFFFFFFF))
-                pos = np.searchsorted(ucb, nkey)
-                pos = np.clip(pos, 0, len(ucb) - 1)
-                hit = ucb[pos] == nkey
-                np.add.at(nbh, pos[hit], cmass[np.where(hit)[0]])
-        cand = ucb[nbh >= thr]
-        if len(cand) == 0:
-            return empty
-        cdx = cand >> np.int64(32)
-        cdy = ((cand & np.int64(0xFFFFFFFF)) << np.int64(32)) >> np.int64(32)
-        dil = np.unique(np.concatenate(
-            [((cdx + a) << np.int64(32)) ^ ((cdy + b) & np.int64(0xFFFFFFFF))
-             for a in (-1, 0, 1) for b in (-1, 0, 1)]))
-        dbx = dil >> np.int64(32)
-        dby = ((dil & np.int64(0xFFFFFFFF)) << np.int64(32)) >> np.int64(32)
-        return pd.DataFrame({"host": pdf["host"].iloc[0],
-                             "bx": dbx, "by": dby})
+        dil = _dilated_buckets(_pack(pdf["bx"].to_numpy(np.int64),
+                                     pdf["by"].to_numpy(np.int64)),
+                               pdf["bm"].to_numpy(np.float64), thr)
+        bx, by = _unpack(dil)
+        return pd.DataFrame({"host": pdf["host"].iloc[0], "bx": bx, "by": by})
 
     return kernel
 
@@ -671,24 +557,23 @@ def _bin_stream(cfg: EngineConfig, quant: bool = False):
     row), bin to grid cells, and emit per-(host, cell) partial masses.
 
     Fully vectorized across hosts within a batch: host strings are
-    dictionary-encoded and the dictionary code is packed into the cell key
-    (code << 46 | (ix+2^22) << 23 | (iy+2^22)), so one np.unique/bincount
-    bins the whole batch.  |x|,|y| <= 2*pi*R ~ 40,075 km < 2^22 * 12.5 m,
-    and a batch holds < 2^17 distinct hosts, so the packing is collision-
-    free."""
+    dictionary-encoded, and one lexsort on (host code, cell key) plus one
+    reduceat sums every (host, cell) run of the whole batch — no bits of
+    the cell key are spent on the host, so a batch may hold any number of
+    distinct hosts."""
     import pyarrow as pa
 
     cell = cfg.grid_cell_m
     step = cfg.interpolation_step_m
-    OFF = np.int64(1 << 22)
-    M23 = np.int64((1 << 23) - 1)
+    num_cols = ("lat", "lon", "next_lat", "next_lon", "next_dt_s",
+                "alat", "alon")
     schema = pa.schema([("host", pa.string()), ("ix", pa.int64()),
                         ("iy", pa.int64()), ("mass", pa.float64()),
                         ("alat", pa.float64()), ("alon", pa.float64())])
 
     def stream(batches):
         # Coalesce input batches (Spark's Arrow default is 10k rows) to
-        # ~256k rows before binning: one np.unique per big batch dedups
+        # ~256k rows before binning: one sort per big batch dedups
         # cells ~25x better, so the partial-mass shuffle shrinks by the
         # same factor and per-batch kernel overhead amortizes.
         buf: list = []
@@ -705,61 +590,29 @@ def _bin_stream(cfg: EngineConfig, quant: bool = False):
             yield from _bin_table(pa.Table.from_batches(buf))
 
     def _bin_table(tbl):
-        ndt = tbl["next_dt_s"].to_numpy(zero_copy_only=False)
-        seg = ~np.isnan(ndt)
-        if not bool(seg.any()):
+        lat, lon, nlat, nlon, ndt, alat, alon = (
+            tbl[c].to_numpy(zero_copy_only=False) for c in num_cols)
+        slat, slon, mass, row = _sites_numpy(lat, lon, nlat, nlon, ndt,
+                                             step, quant)
+        if len(row) == 0:
             return
-        denc = tbl["host"].combine_chunks().dictionary_encode()
-        codes = (denc.indices.to_numpy(zero_copy_only=False)
-                 .astype(np.int64))
-        dic = denc.dictionary
-        lat = tbl["lat"].to_numpy(zero_copy_only=False)
-        lon = tbl["lon"].to_numpy(zero_copy_only=False)
-        nlat = tbl["next_lat"].to_numpy(zero_copy_only=False)
-        nlon = tbl["next_lon"].to_numpy(zero_copy_only=False)
-        alat = tbl["alat"].to_numpy(zero_copy_only=False)
-        alon = tbl["alon"].to_numpy(zero_copy_only=False)
-        a_lat, a_lon = lat[seg], lon[seg]
-        b_lat, b_lon, dt = nlat[seg], nlon[seg], ndt[seg]
-        c_seg = codes[seg]
-        an_lat, an_lon = alat[seg], alon[seg]
-        # X3 twin — identical arithmetic to _sites_numpy
-        d = geo.haversine_m(a_lat, a_lon, b_lat, b_lon)
-        n = np.maximum(1, np.ceil(d / step)).astype(np.int64)
-        total = int(n.sum())
-        sidx = np.repeat(np.arange(len(n)), n)
-        starts = np.concatenate([[0], np.cumsum(n)[:-1]])
-        k = np.arange(total) - starts[sidx]
-        frac = (k + 0.5) / n[sidx]
-        slat = a_lat[sidx] + frac * (b_lat - a_lat)[sidx]
-        slon = a_lon[sidx] + frac * (b_lon - a_lon)[sidx]
-        mass = (dt / n)[sidx]
-        # site-level snap BEFORE any accumulation — identical per-site
-        # values to kde_locations_numpy's, so partial-mass sums merge to
-        # the wholehost totals exactly (see FLOAT_MASS_SCALE note)
-        if quant:
-            mass = np.floor(mass * QUANT_MASS_SCALE)
-        else:
-            mass = np.round(mass * FLOAT_MASS_SCALE)
-        x, y = geo.equirect_project(slat, slon,
-                                    an_lat[sidx], an_lon[sidx])
+        x, y = geo.equirect_project(slat, slon, alat[row], alon[row])
         ix = np.floor(x / cell).astype(np.int64)
         iy = np.floor(y / cell).astype(np.int64)
-        key = ((c_seg[sidx] << np.int64(46))
-               | ((ix + OFF) << np.int64(23)) | (iy + OFF))
-        uk, inv = np.unique(key, return_inverse=True)
-        m0 = np.bincount(inv, weights=mass)
-        ucode = (uk >> np.int64(46)).astype(np.int32)
-        uix = ((uk >> np.int64(23)) & M23) - OFF
-        uiy = (uk & M23) - OFF
-        alat_by = np.empty(len(dic))
-        alon_by = np.empty(len(dic))
-        alat_by[codes] = alat          # constant per host
-        alon_by[codes] = alon
+        denc = tbl["host"].combine_chunks().dictionary_encode()
+        code = denc.indices.to_numpy(zero_copy_only=False)[row]
+        key = _pack(ix, iy)
+        order = np.lexsort((key, code))
+        code, key, row, mass = code[order], key[order], row[order], mass[order]
+        first = np.flatnonzero(np.r_[True, (code[1:] != code[:-1])
+                                     | (key[1:] != key[:-1])])
+        uix, uiy = _unpack(key[first])
+        arow = row[first]                       # anchors are per-host
         yield pa.record_batch([
-            dic.take(pa.array(ucode, type=pa.int32())),
-            pa.array(uix), pa.array(uiy), pa.array(m0),
-            pa.array(alat_by[ucode]), pa.array(alon_by[ucode]),
+            denc.dictionary.take(pa.array(code[first])),
+            pa.array(uix), pa.array(uiy),
+            pa.array(np.add.reduceat(mass, first)),
+            pa.array(alat[arow]), pa.array(alon[arow]),
         ], schema=schema)
 
     return stream
@@ -767,12 +620,11 @@ def _bin_stream(cfg: EngineConfig, quant: bool = False):
 
 def _grid_kernel(cfg: EngineConfig, quant: bool = False):
     """Per-host A2(smooth)-A5 on the host's pruned partial-mass rows:
-    merges per-chunk partials itself (sorted np.unique + bincount — one
-    kernel instead of a groupBy(host, ix, iy) merge shuffle followed by a
-    groupBy(host) shuffle), then runs _kde_from_grid — O(cells),
-    independent of point count.  Rows are lexsorted first so every float
-    accumulation runs in a deterministic order regardless of shuffle
-    arrival order."""
+    merges per-chunk partials itself (_cell_sums — one kernel instead of
+    a groupBy(host, ix, iy) merge shuffle followed by a groupBy(host)
+    shuffle), then runs _kde_from_grid — O(cells), independent of point
+    count.  Rows are lexsorted first so every float accumulation runs in
+    a deterministic order regardless of shuffle arrival order."""
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) == 0:
             return pd.DataFrame({"host": [], "location_id": [], "lat": [],
@@ -781,21 +633,10 @@ def _grid_kernel(cfg: EngineConfig, quant: bool = False):
         iy = pdf["iy"].to_numpy(np.int64)
         m = pdf["mass"].to_numpy(np.float64)
         order = np.lexsort((m, iy, ix))
-        ix, iy, m = ix[order], iy[order], m[order]
-        key = (ix << np.int64(23)) | (iy + np.int64(1 << 22))
-        uk, inv = np.unique(key, return_inverse=True)
-        m0 = np.bincount(inv, weights=m)
-        uix = uk >> np.int64(23)
-        uiy = (uk & np.int64((1 << 23) - 1)) - np.int64(1 << 22)
-        if quant:
-            la, lo, dw, nc = _kde_from_grid_quant(
-                uix, uiy, m0,
-                float(pdf["alat"].iloc[0]), float(pdf["alon"].iloc[0]), cfg)
-        else:
-            la, lo, dw, nc = _kde_from_grid(
-                uix, uiy, m0,
-                float(pdf["alat"].iloc[0]), float(pdf["alon"].iloc[0]), cfg,
-                scale=FLOAT_MASS_SCALE)
+        uix, uiy, m0 = _cell_sums(ix[order], iy[order], m[order])
+        kde = _kde_from_grid_quant if quant else _kde_from_grid
+        la, lo, dw, nc = kde(uix, uiy, m0, float(pdf["alat"].iloc[0]),
+                             float(pdf["alon"].iloc[0]), cfg)
         return pd.DataFrame({
             "host": pdf["host"].iloc[0],
             "location_id": np.arange(len(la), dtype=np.int32),
@@ -819,10 +660,9 @@ def detect_locations(points: DataFrame, cfg: EngineConfig = DEFAULT,
     ``auto`` picks whole-host when ``n_points_hint`` (a count the caller
     already has, e.g. from a persisted upstream) is under
     cfg.kde_chunked_min_points; with no hint it assumes scale and goes
-    chunk-parallel.  Both paths are parity-tested to 1e-9.
+    chunk-parallel.  Both paths give byte-identical output (parity-tested).
 
-    Chunk-parallel shape (the whole-host variant is kept above as the
-    parity oracle):
+    Chunk-parallel shape:
 
       1. per-host anchor = coords of the min-seq point (tiny agg, joined
          back — AQE broadcasts it at bench scale; at cluster scale it is a
@@ -831,7 +671,7 @@ def detect_locations(points: DataFrame, cfg: EngineConfig = DEFAULT,
          + bin each arbitrary partition into per-(host, cell) partial
          masses — the O(sites) work, embarrassingly parallel, so the Zipf
          mega-host spreads across all cores instead of serializing;
-      3. a distributed twin of the kernel's threshold-aware bucket prune
+      3. the kernel's threshold-aware bucket prune, run distributed,
          drops ~95% of corridor cells before any wide shuffle (see inline
          comment — provably exact);
       4. `_grid_kernel` per host merges the surviving partials (sorted
@@ -881,8 +721,7 @@ def detect_locations(points: DataFrame, cfg: EngineConfig = DEFAULT,
     # the dilation, so its neighborhood mass is complete), hence the result
     # is exactly the unpruned one.  The dilated-candidate table is tiny —
     # AQE turns the semi-join into a broadcast at runtime.
-    r_cells = int(np.ceil(3.0 * cfg.kernel_bandwidth_m / cfg.grid_cell_m))
-    bshift = int(max(4, int(np.ceil(np.log2(r_cells + 1)))))
+    bshift = _bucket_shift(cfg)
     part_b = (partial
               .withColumn("bx", F.shiftright("ix", bshift))
               .withColumn("by", F.shiftright("iy", bshift)))

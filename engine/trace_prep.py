@@ -34,7 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import DEFAULT, EngineConfig
-from .functions import geotag_cols, haversine_m_col, host_from_url
+from .functions import (geotag_cols, haversine_m_col, host_from_url,
+                        host_runs)
 
 GEOPOINT_SCHEMA = ("host string, url string, warc_ts timestamp, lat double, "
                    "lon double, acc_m double, seq int, subset_id int, "
@@ -185,45 +186,13 @@ def _prep_host_sorted(tbl, cfg: EngineConfig):
 
 def _prep_stream(cfg: EngineConfig):
     """mapInArrow stream over a (host, warc_ts, url)-sorted partition:
-    buffers exactly one host at a time (hosts are contiguous runs), flushes
-    each completed host through _prep_host_sorted.  Peak Python memory is
-    one host's rows, never the partition — and only numeric columns ever
-    become numpy; strings live in Arrow buffers throughout."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
+    flushes each completed host run (functions.host_runs) through
+    _prep_host_sorted.  Peak Python memory is one host's rows, never the
+    partition — and only numeric columns ever become numpy; strings live
+    in Arrow buffers throughout."""
     def stream(batches):
-        buf: list[pa.Table] = []
-        cur: str | None = None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            h = tbl["host"].combine_chunks()
-            n = len(h)
-            if n > 1:
-                neq = pc.not_equal(h.slice(1), h.slice(0, n - 1))
-                cut = np.flatnonzero(neq.to_numpy(zero_copy_only=False)) + 1
-            else:
-                cut = np.empty(0, dtype=np.int64)
-            starts = np.r_[0, cut]
-            ends = np.r_[cut, n]
-            for s, e in zip(starts, ends):
-                run_host = h[int(s)].as_py()  # one scalar per host-run
-                g = tbl.slice(int(s), int(e - s))
-                if cur is None or run_host == cur:
-                    buf.append(g)
-                    cur = run_host
-                else:
-                    out = _prep_host_sorted(
-                        pa.concat_tables(buf).combine_chunks(), cfg)
-                    if out is not None:
-                        yield out
-                    buf = [g]
-                    cur = run_host
-        if buf:
-            out = _prep_host_sorted(
-                pa.concat_tables(buf).combine_chunks(), cfg)
+        for _, tbl in host_runs(batches):
+            out = _prep_host_sorted(tbl, cfg)
             if out is not None:
                 yield out
 

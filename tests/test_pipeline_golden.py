@@ -221,3 +221,30 @@ def test_build_episodes_presorted_parity(spark, unit_pages_sdf):
             assert (pd.isna(la) == pd.isna(lb)).all(), c
             m = ~pd.isna(la)
             assert (la[m] == lb[m]).all(), c
+
+
+def test_bin_stream_many_hosts_per_batch():
+    """The chunk-parallel binning kernel bins a batch holding 2^17 + 1
+    distinct hosts (single-point hosts are common at crawl scale): the
+    last host's partial masses equal binning that host alone."""
+    import pyarrow as pa
+
+    n_single = 1 << 17
+    lat = np.r_[np.full(n_single, 10.0), 48.8566, 48.8584]
+    lon = np.r_[np.full(n_single, 20.0), 2.3522, 2.2945]
+    nlat, nlon, ndt = (np.full(n_single + 2, np.nan) for _ in range(3))
+    # one segment: the last host's first point -> its second point
+    nlat[-2], nlon[-2], ndt[-2] = lat[-1], lon[-1], 3600.0
+    alat, alon = np.r_[lat[:-1], lat[-2]], np.r_[lon[:-1], lon[-2]]
+    hosts = [f"h{i:06d}" for i in range(n_single)] + ["paris", "paris"]
+    batch = pa.record_batch(
+        [pa.array(hosts)] + [pa.array(v, from_pandas=True) for v in
+                             (lat, lon, nlat, nlon, ndt, alat, alon)],
+        names=["host", "lat", "lon", "next_lat", "next_lon", "next_dt_s",
+               "alat", "alon"])
+    kernel = loc._bin_stream(DEFAULT)
+    many = pa.Table.from_batches(list(kernel([batch])))
+    alone = pa.Table.from_batches(list(kernel([batch.slice(n_single)])))
+    assert alone.num_rows > 1
+    keys = [("ix", "ascending"), ("iy", "ascending")]
+    assert many.sort_by(keys).equals(alone.sort_by(keys))

@@ -88,15 +88,44 @@ def test_interpolation_mass_conservation(spark, unit_pages_sdf):
 
 
 def test_partitioning_invariance(spark, unit_pages_sdf):
-    """Output identical at 1 vs 8 shuffle partitions (SURVEY.md §5.2.3)."""
-    outs = []
-    for in_parts, shuf in ((2, 2), (16, 8)):
+    """Output identical at 2 vs 8 shuffle partitions (SURVEY.md §5.2.3)
+    and with 7-row Arrow batches, which split host runs across batch
+    boundaries in the host-run streams: geopoints, whole-host locations
+    and presorted episodes."""
+    from engine import episodes as ep
+    from engine import locations as loc
+
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default_batch = spark.conf.get(batch_conf)
+
+    def run(in_parts, shuf, batch):
         spark.conf.set("spark.sql.shuffle.partitions", str(shuf))
-        df = trace_prep.geopoints(unit_pages_sdf.repartition(in_parts))
-        outs.append(df.toPandas().sort_values("url").reset_index(drop=True)
-                    [["url", "subset_id", "weight_s", "cell_id"]])
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    pd.testing.assert_frame_equal(outs[0], outs[1])
+        spark.conf.set(batch_conf, str(batch))
+        gp = trace_prep.geopoints(unit_pages_sdf.repartition(in_parts))
+        gp = gp.cache()
+        locs = loc.detect_locations_wholehost(gp).cache()
+        eps = ep.build_episodes(ep.knn_assign_collected(gp, locs),
+                                presorted=True)
+        out = (gp.toPandas().sort_values("url").reset_index(drop=True)
+               [["url", "subset_id", "weight_s", "cell_id"]],
+               locs.toPandas().sort_values(["host", "location_id"])
+               .reset_index(drop=True),
+               eps.toPandas().sort_values(["host", "seq"])
+               .reset_index(drop=True))
+        gp.unpersist()
+        locs.unpersist()
+        return out
+
+    try:
+        outs = [run(2, 2, default_batch), run(16, 8, default_batch),
+                run(16, 8, 7)]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        spark.conf.set(batch_conf, default_batch)
+    assert len(outs[0][1]) > 0 and len(outs[0][2]) > 0
+    for out in outs[1:]:
+        for a, b in zip(outs[0], out):
+            pd.testing.assert_frame_equal(a, b)
 
 
 def test_geopoints_cell_level(spark, unit_pages_sdf):
