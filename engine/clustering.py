@@ -323,6 +323,14 @@ def kmeans_prune(df: DataFrame, k: int = 8, iters: int = 4,
     return keep.select("vec_id", "cl", "rk")
 
 
+# Driver envelope for the DBSCAN labelling (the MAX_DRIVER_LLOYD_BYTES
+# precedent: 64 MB): up to this many (p_id, q_id) int64 pairs, the
+# labels are computed on ONE driver collect with numpy instead of the
+# ~20 Spark jobs of the distributed tail (counts, core edges, connected
+# components, border probe) — same labels by the same rules.
+DBSCAN_DRIVER_MAX_PAIRS = 1 << 22
+
+
 def _dbscan_from_pairs(pairs: DataFrame, id_col: str, min_pts: int,
                        max_iters: int) -> DataFrame:
     """The DBSCAN labelling shared by dbscan_grid, dbscan_geo and
@@ -330,11 +338,59 @@ def _dbscan_from_pairs(pairs: DataFrame, id_col: str, min_pts: int,
     (p_id, q_id), both orientations plus (i, i): n_neighbors counts the
     pairs per point, core iff n_neighbors >= min_pts, clusters are the
     min-id components of the core-core graph, a border point takes the
-    MIN cluster among its core neighbours, noise gets NULL.  The pairs
-    are materialized once (localCheckpoint) because three consumers
-    read them: counts, core-core edges and the border probe."""
-    from . import ops
+    MIN cluster among its core neighbours, noise gets NULL.  Returns
+    (id_col long, n_neighbors long, role string, cluster long NULLABLE).
+
+    The pairs are materialized once (localCheckpoint) and counted.  Up
+    to DBSCAN_DRIVER_MAX_PAIRS pairs the points are labelled on the
+    driver (_dbscan_driver); past it the distributed tail runs
+    (_dbscan_distributed)."""
     pairs = pairs.localCheckpoint(eager=True)
+    if pairs.count() <= DBSCAN_DRIVER_MAX_PAIRS:
+        return _dbscan_driver(pairs, id_col, min_pts)
+    return _dbscan_distributed(pairs, id_col, min_pts, max_iters)
+
+
+def _dbscan_driver(pairs: DataFrame, id_col: str,
+                   min_pts: int) -> DataFrame:
+    """_dbscan_from_pairs on one collect of the pairs: every point has
+    its own (i, i) pair, so the sorted distinct p_id are the points and
+    dense indices into them keep the id order; the core components come
+    from ops.min_label_roots (min index = min id), a border point takes
+    the min label over its core neighbours, and the labels return as one
+    small DataFrame."""
+    import numpy as np
+    import pyarrow as pa
+    from . import ops
+    tbl = pairs.toArrow()
+    p = tbl.column("p_id").to_numpy()
+    q = tbl.column("q_id").to_numpy()
+    ids = np.unique(p)
+    n = len(ids)
+    pi, qi = np.searchsorted(ids, p), np.searchsorted(ids, q)
+    n_nbr = np.bincount(pi, minlength=n)
+    core = n_nbr >= min_pts
+    ce = core[pi] & core[qi] & (pi < qi)
+    root = ops.min_label_roots(n, pi[ce], qi[ce])
+    lbl = np.where(core, root, n)
+    border = ~core[pi] & core[qi]
+    np.minimum.at(lbl, pi[border], root[qi[border]])
+    has = lbl < n
+    out = pa.table({
+        id_col: ids, "n_neighbors": n_nbr,
+        "role": np.where(core, "core", np.where(has, "border", "noise")),
+        "cluster": pa.array(ids[np.minimum(lbl, n - 1)], mask=~has)})
+    return pairs.sparkSession.createDataFrame(
+        out, f"{id_col} long, n_neighbors long, role string, cluster long")
+
+
+def _dbscan_distributed(pairs: DataFrame, id_col: str, min_pts: int,
+                        max_iters: int) -> DataFrame:
+    """_dbscan_from_pairs as Spark jobs over the checkpointed pairs, which
+    three consumers read: counts, core-core edges and the border probe.
+    Components via ops.min_label_components; every exchange carries ids
+    only."""
+    from . import ops
     counts = pairs.groupBy("p_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_neighbors"))
     core = counts.filter(F.col("n_neighbors") >= min_pts).select("p_id")
@@ -390,7 +446,9 @@ def dbscan_grid(pts: DataFrame, id_col: str, x_col: str, y_col: str,
 
     100-TB shape: ONE grid-cell radius self-join (radius_join_2d — 9x
     cell-occupancy fan-out, never quadratic) materialized once via
-    localCheckpoint because three consumers read it (counts, core-core
+    localCheckpoint.  Inputs below the pair envelope
+    (DBSCAN_DRIVER_MAX_PAIRS) are labelled on the driver from one
+    collect.  Above it three consumers read the pairs (counts, core-core
     edges, border probe); components via pointer-jumping min-label
     propagation (O(log diameter) rounds, (id,label)-only exchanges).
     Every exchange after the radius join carries ids only.
@@ -431,9 +489,11 @@ def dbscan_geo(pts: DataFrame, id_col: str, lat_col: str, lon_col: str,
     candidates and never affect the decision.
 
     100-TB shape: identical to dbscan_grid — the radius join
-    materializes once (three consumers), components via pointer-
-    jumping min-label propagation, every exchange after the join
-    carries ids only.
+    materializes once; inputs below the pair envelope
+    (DBSCAN_DRIVER_MAX_PAIRS) are labelled on the driver; above it
+    three consumers read the pairs, components via pointer-jumping
+    min-label propagation, every exchange after the join carries ids
+    only.
     """
     if min_pts < 1:
         raise ValueError("dbscan_geo: min_pts must be >= 1")
@@ -467,9 +527,11 @@ def st_dbscan(pts: DataFrame, id_col: str, x_col: str, y_col: str,
 
     100-TB shape: ONE J15 spatiotemporal radius join (3-D banding —
     27x bin-occupancy fan-out, time- and space-sliced) materialized
-    once for its three consumers; components via pointer-jumping;
-    every exchange after the join carries ids only.  max_iters
-    defaults HIGHER than the spatial variants (40 vs 16): ST core
+    once.  Inputs below the pair envelope (DBSCAN_DRIVER_MAX_PAIRS) are
+    labelled on the driver; above it the join's three consumers run,
+    components via pointer-jumping, and every exchange after the join
+    carries ids only.  max_iters (distributed side only) defaults
+    HIGHER than the spatial variants (40 vs 16): ST core
     graphs are chains-of-cliques along the time axis (each stop links
     only its temporal neighbors), and min-label pointer-jumping on
     such chains needs ~2·log2(n) rounds in practice (measured: 23

@@ -192,6 +192,34 @@ def sample_stratified(df: DataFrame, fractions: dict[str, float] | float,
 CC_DRIVER_MAX_EDGES = 1 << 20
 
 
+def min_label_roots(n: int, a, b):
+    """Driver union-find over dense node indices 0..n-1 and undirected
+    edge index arrays (a, b): returns, per node, the MIN index of its
+    connected component (isolated nodes map to themselves).
+
+    Min-label propagation with pointer jumping: each round hooks both
+    endpoints and both endpoints' labels onto the smaller label
+    (np.minimum.at both ways), then jumps pointers (lab = lab[lab]) to
+    their fixpoint.  Labels only fall and always name a component
+    member no larger than the node, so at the fixpoint every edge joins
+    equal labels and each label is its component's minimum index."""
+    import numpy as np
+    lab = np.arange(n, dtype=np.int64)
+    while True:
+        la, lb = lab[a], lab[b]
+        nxt = lab.copy()
+        for dst, src in ((a, lb), (b, la), (la, lb), (lb, la)):
+            np.minimum.at(nxt, dst, src)
+        while True:
+            jumped = nxt[nxt]
+            if np.array_equal(jumped, nxt):
+                break
+            nxt = jumped
+        if np.array_equal(nxt, lab):
+            return lab
+        lab = nxt
+
+
 def min_label_components(nodes: DataFrame, edges: DataFrame,
                          id_col: str = "id", a_col: str = "a",
                          b_col: str = "b", max_iters: int = 16) -> DataFrame:
@@ -254,42 +282,30 @@ def min_label_components(nodes: DataFrame, edges: DataFrame,
             break
         if n_le <= CC_DRIVER_MAX_EDGES:
             # the contracted label graph fits the driver envelope (the
-            # repo's standard auto-strategy): finish with one union-find
-            # pass — min-root semantics, identical fixpoint — and ONE
-            # map join, instead of O(log regions) further rounds of
-            # several jobs each
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent.get(r, r) != r:
-                    r = parent[r]
-                while parent.get(x, x) != x:
-                    parent[x], x = r, parent[x]
-                return r
-
-            for row in le.collect():
-                ra, rb = find(row["_ls"]), find(row["_ld"])
-                if ra != rb:
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-            mp = [(k, find(k)) for k in list(parent)]
-            spark = nodes.sparkSession
-            if mp:
-                from pyspark.sql import types as T
-                lt = cur.schema["label"].dataType
-                mdf = spark.createDataFrame(
-                    mp, T.StructType([T.StructField("label", lt),
-                                      T.StructField("_lt", lt)]))
-            else:
-                mdf = None
-            if mdf is not None:
-                cur = (cur.join(F.broadcast(mdf), "label", "left")
-                       .select("_nid",
-                               F.coalesce(F.col("_lt"), F.col("label"))
-                               .alias("label"))
-                       .localCheckpoint(eager=True))
+            # repo's standard auto-strategy): finish with one numpy
+            # union-find pass (min_label_roots — min-root semantics,
+            # identical fixpoint) and ONE map join, instead of
+            # O(log regions) further rounds of several jobs each
+            import numpy as np
+            import pyarrow as pa
+            from pyspark.sql import types as T
+            tbl = le.toArrow()
+            ls = tbl.column("_ls").to_numpy()
+            ld = tbl.column("_ld").to_numpy()
+            uniq = np.unique(np.concatenate([ls, ld]))
+            root = min_label_roots(len(uniq), np.searchsorted(uniq, ls),
+                                   np.searchsorted(uniq, ld))
+            moved = root != np.arange(len(uniq))
+            lt = cur.schema["label"].dataType
+            mdf = nodes.sparkSession.createDataFrame(
+                pa.table({"label": uniq[moved], "_lt": uniq[root[moved]]}),
+                T.StructType([T.StructField("label", lt),
+                              T.StructField("_lt", lt)]))
+            cur = (cur.join(F.broadcast(mdf), "label", "left")
+                   .select("_nid",
+                           F.coalesce(F.col("_lt"), F.col("label"))
+                           .alias("label"))
+                   .localCheckpoint(eager=True))
             converged = True
             break
         lmin = le.groupBy("_ls").agg(F.min("_ld").alias("_lm"))

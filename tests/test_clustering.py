@@ -1,5 +1,7 @@
 """Lloyd k-means (engine/clustering.py): parity vs an independent numpy
-implementation, empty-cluster handling, and the map-only assignment plan."""
+implementation, empty-cluster handling, and the map-only assignment plan;
+the three DBSCANs vs one brute replay, on both sides of the pair
+envelope."""
 
 import numpy as np
 import pandas as pd
@@ -119,16 +121,14 @@ def test_kmeans_prune_matches_numpy(spark):
     assert got == want
 
 
-def _brute_dbscan(pts, eps, min_pts):
+def _brute_dbscan(pts, near, min_pts):
     """Independent DBSCAN replay with the engine's deterministic rules:
-    closed neighborhood, min-core-id cluster label, border -> min
-    neighboring core cluster."""
+    closed neighborhood ({j : near(p_i, p_j)}, i itself included, over
+    the coordinate tuples after each point's id), min-core-id cluster
+    label, border -> min neighboring core cluster."""
     ids = [p[0] for p in pts]
-    xy = {i: (x, y) for i, x, y in pts}
-    nbr = {i: [j for j in ids
-               if (xy[j][0] - xy[i][0]) ** 2
-               + (xy[j][1] - xy[i][1]) ** 2 <= eps * eps]
-           for i in ids}
+    at = {p[0]: p[1:] for p in pts}
+    nbr = {i: [j for j in ids if near(at[i], at[j])] for i in ids}
     core = {i for i in ids if len(nbr[i]) >= min_pts}
     # components over core-core eps edges (BFS), label = min core id
     label = {}
@@ -160,7 +160,25 @@ def _brute_dbscan(pts, eps, min_pts):
     return out
 
 
-def test_dbscan_grid_matches_brute(spark):
+def _planar(eps):
+    return lambda a, b: (b[0] - a[0]) ** 2 + (b[1] - a[1]) ** 2 <= eps * eps
+
+
+@pytest.fixture(params=["driver", "distributed"])
+def dbscan_side(request, monkeypatch):
+    """Force one side of clustering._dbscan_from_pairs through its pair
+    envelope; the other side raises, so a passing case ran this side."""
+    def other_side(*_args):
+        raise AssertionError(f"{request.param} case left its side")
+    if request.param == "driver":
+        monkeypatch.setattr(clustering, "DBSCAN_DRIVER_MAX_PAIRS", 1 << 62)
+        monkeypatch.setattr(clustering, "_dbscan_distributed", other_side)
+    else:
+        monkeypatch.setattr(clustering, "DBSCAN_DRIVER_MAX_PAIRS", -1)
+        monkeypatch.setattr(clustering, "_dbscan_driver", other_side)
+
+
+def test_dbscan_grid_matches_brute(spark, dbscan_side):
     rng = np.random.default_rng(7)
     # two planted blobs + uniform noise
     pts = []
@@ -182,7 +200,7 @@ def test_dbscan_grid_matches_brute(spark):
     out = clustering.dbscan_grid(df, "i", "x", "y", eps=5, min_pts=6)
     got = {r["i"]: (r["n_neighbors"], r["role"], r["cluster"])
            for r in out.collect()}
-    want = _brute_dbscan(pts, 5, 6)
+    want = _brute_dbscan(pts, _planar(5), 6)
     assert got == want
     roles = {v[1] for v in got.values()}
     assert roles == {"core", "border", "noise"}
@@ -192,43 +210,7 @@ def test_dbscan_grid_matches_brute(spark):
         clustering.dbscan_grid(df, "i", "x", "y", eps=5, min_pts=0)
 
 
-def _brute_dbscan_geo(pts, eps_m, min_pts):
-    """Geodesic brute: same deterministic rules over numpy haversine."""
-    from engine.geo import haversine_m
-    ids = [p[0] for p in pts]
-    ll = {i: (la, lo) for i, la, lo in pts}
-    nbr = {i: [j for j in ids
-               if haversine_m(ll[i][0], ll[i][1],
-                              ll[j][0], ll[j][1]) <= eps_m]
-           for i in ids}
-    core = {i for i in ids if len(nbr[i]) >= min_pts}
-    label = {}
-    for s in sorted(core):
-        if s in label:
-            continue
-        comp, stack, seen = [], [s], {s}
-        while stack:
-            u = stack.pop()
-            comp.append(u)
-            for v in nbr[u]:
-                if v in core and v not in seen:
-                    seen.add(v)
-                    stack.append(v)
-        m = min(comp)
-        for u in comp:
-            label[u] = m
-    out = {}
-    for i in ids:
-        if i in core:
-            out[i] = (len(nbr[i]), "core", label[i])
-        else:
-            cand = [label[j] for j in nbr[i] if j in core and j != i]
-            out[i] = ((len(nbr[i]), "border", min(cand)) if cand
-                      else (len(nbr[i]), "noise", None))
-    return out
-
-
-def test_dbscan_geo_matches_brute(spark):
+def test_dbscan_geo_matches_brute(spark, dbscan_side):
     """Geodesic DBSCAN equals the numpy-haversine brute replay on a
     layout the planar variant cannot handle: a cluster straddling the
     antimeridian, a high-latitude blob, a core chain and noise.  All
@@ -261,7 +243,9 @@ def test_dbscan_geo_matches_brute(spark):
                                 eps_m=60000.0, min_pts=3)
     got = {r["i"]: (r["n_neighbors"], r["role"], r["cluster"])
            for r in out.collect()}
-    want = _brute_dbscan_geo(pts, 60000.0, 3)
+    from engine.geo import haversine_m
+    want = _brute_dbscan(
+        pts, lambda a, b: haversine_m(a[0], a[1], b[0], b[1]) <= 60000.0, 3)
     assert got == want
     # the antimeridian blob is ONE cluster despite the lon seam
     am = {got[i][2] for i in range(8)}
@@ -273,45 +257,7 @@ def test_dbscan_geo_matches_brute(spark):
                               min_pts=0)
 
 
-def _brute_st_dbscan(pts, eps, eps_t, min_pts):
-    """Independent ST-DBSCAN replay: neighborhood requires BOTH
-    dist2 <= eps^2 AND |dt| <= eps_t; same deterministic rules as the
-    spatial brute (closed neighborhoods, min-core-id labels, border ->
-    min neighboring core cluster)."""
-    ids = [p[0] for p in pts]
-    d = {i: (x, y, t) for i, x, y, t in pts}
-    nbr = {i: [j for j in ids
-               if (d[j][0] - d[i][0]) ** 2 + (d[j][1] - d[i][1]) ** 2
-               <= eps * eps and abs(d[j][2] - d[i][2]) <= eps_t]
-           for i in ids}
-    core = {i for i in ids if len(nbr[i]) >= min_pts}
-    label = {}
-    for s in sorted(core):
-        if s in label:
-            continue
-        comp, stack, seen = [], [s], {s}
-        while stack:
-            u = stack.pop()
-            comp.append(u)
-            for v in nbr[u]:
-                if v in core and v not in seen:
-                    seen.add(v)
-                    stack.append(v)
-        m = min(comp)
-        for u in comp:
-            label[u] = m
-    out = {}
-    for i in ids:
-        if i in core:
-            out[i] = (len(nbr[i]), "core", label[i])
-        else:
-            cand = [label[j] for j in nbr[i] if j in core and j != i]
-            out[i] = (len(nbr[i]), "border", min(cand)) if cand \
-                else (len(nbr[i]), "noise", None)
-    return out
-
-
-def test_st_dbscan_matches_brute(spark):
+def test_st_dbscan_matches_brute(spark, dbscan_side):
     rng = np.random.default_rng(17)
     pts, k = [], 0
     # blob A: tight in space AND time
@@ -345,7 +291,8 @@ def test_st_dbscan_matches_brute(spark):
                                eps=5, eps_t=100, min_pts=5)
     got = {r["i"]: (r["n_neighbors"], r["role"], r["cluster"])
            for r in out.collect()}
-    want = _brute_st_dbscan(pts, 5, 100, 5)
+    want = _brute_dbscan(
+        pts, lambda a, b: _planar(5)(a, b) and abs(b[2] - a[2]) <= 100, 5)
     assert got == want
     # the revisit property: blob A and blob B share space but NOT cluster
     la = {got[i][2] for i in range(12) if got[i][2] is not None}
@@ -354,3 +301,23 @@ def test_st_dbscan_matches_brute(spark):
     with pytest.raises(ValueError):
         clustering.st_dbscan(df, "i", "x", "y", "t",
                              eps=5, eps_t=100, min_pts=0)
+
+
+def test_dbscan_empty_and_all_noise(spark, dbscan_side):
+    """Both sides of the DBSCAN tail keep the output schema on an empty
+    input and label every point noise (NULL cluster) when min_pts
+    exceeds every neighborhood."""
+    schema = [("i", "bigint"), ("n_neighbors", "bigint"),
+              ("role", "string"), ("cluster", "bigint")]
+    empty = spark.createDataFrame([], "i long, x long, y long")
+    out = clustering.dbscan_grid(empty, "i", "x", "y", eps=5, min_pts=2)
+    assert out.dtypes == schema
+    assert out.count() == 0
+    # neighborhoods of at most 2 points
+    pts = [(0, 0, 0), (1, 3, 0), (2, 100, 100), (3, 103, 100), (4, 500, 0)]
+    df = spark.createDataFrame(pts, "i long, x long, y long")
+    out = clustering.dbscan_grid(df, "i", "x", "y", eps=5, min_pts=3)
+    assert out.dtypes == schema
+    rows = out.collect()
+    assert sorted(r["i"] for r in rows) == [0, 1, 2, 3, 4]
+    assert all(r["role"] == "noise" and r["cluster"] is None for r in rows)

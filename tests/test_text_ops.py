@@ -304,11 +304,25 @@ def test_boilerplate_properties(spark):
         assert out.loc[i, "n_removed"] == len(toks) - len(expect)
 
 
-def test_min_label_components_chain_and_isolates(spark):
+@pytest.mark.parametrize("max_edges", [
+    pytest.param(None, id="driver_finish"),
+    pytest.param(0, id="contraction")])
+def test_min_label_components_chain_and_isolates(spark, monkeypatch,
+                                                 max_edges):
     """CC over a planted graph: a 5-chain (0-1-2-3-4), a 2-cycle pair
     (10, 11), and isolates (20, 21) — pointer jumping must converge and
-    label every component by its min id, isolates by themselves."""
+    label every component by its min id, isolates by themselves.  At the
+    default CC_DRIVER_MAX_EDGES the driver union-find finishes in round
+    1; at 0 every round runs the distributed contraction and path
+    compression."""
+    from engine import ops
     from engine.ops import min_label_components
+    if max_edges is not None:
+        monkeypatch.setattr(ops, "CC_DRIVER_MAX_EDGES", max_edges)
+    calls = []
+    roots = ops.min_label_roots
+    monkeypatch.setattr(ops, "min_label_roots",
+                        lambda *a: calls.append(a) or roots(*a))
     nodes = spark.createDataFrame(
         [(i,) for i in [0, 1, 2, 3, 4, 10, 11, 20, 21]], "id long")
     edges = spark.createDataFrame(
@@ -317,6 +331,34 @@ def test_min_label_components_chain_and_isolates(spark):
            .toPandas().set_index("id")["component_id"].to_dict())
     assert out == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 10: 10, 11: 10,
                    20: 20, 21: 21}
+    assert len(calls) == (1 if max_edges is None else 0)
+
+
+def test_min_label_roots_matches_union_find():
+    """The numpy driver union-find equals a per-edge Python union-find
+    (min root per component) on random graphs, including a long path
+    visited in random id order."""
+    from engine.ops import min_label_roots
+    rng = np.random.default_rng(5)
+    graphs = [(n, rng.integers(0, n, m), rng.integers(0, n, m))
+              for n, m in ((1, 0), (7, 0), (50, 30), (200, 150),
+                           (300, 900))]
+    perm = rng.permutation(500)
+    graphs.append((500, perm[:-1], perm[1:]))
+    for n, a, b in graphs:
+        parent = list(range(n))
+
+        def find(x):
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for x, y in zip(a.tolist(), b.tolist()):
+            rx, ry = find(x), find(y)
+            if rx != ry:
+                parent[max(rx, ry)] = min(rx, ry)
+        want = [find(x) for x in range(n)]
+        assert min_label_roots(n, a, b).tolist() == want
 
 
 def test_dedup_clusters_partition_and_reps(spark, docs):
