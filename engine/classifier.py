@@ -199,12 +199,14 @@ def train_quality_classifier(docs: DataFrame, label: Column,
                              hash_fn: str = "md5_60",
                              binary: bool = True,
                              lr_num: int = LR_NUM,
-                             use_arrow: bool = True,
-                             strategy: str = "auto"):
+                             use_arrow: bool = True):
     """Full-batch GD; returns (weights, feats) — weights a python list of
     dims+1 ints (quant) / floats (float mode, true-sigmoid link), feats
     the cached featurized DataFrame (caller scores with apply_classifier
-    and MUST unpersist feats when done)."""
+    and MUST unpersist feats when done).  Quant mode trains on the driver
+    below MAX_DRIVER_TRAIN_BYTES; past it the distributed rounds use the
+    Arrow gradient kernel, or with use_arrow=False its expression-form
+    reference."""
     if mode not in ("quant", "float"):
         raise ValueError(f"unknown mode {mode!r}")
     feats = featurize(docs, label, dims, text_col, id_col, hash_fn,
@@ -216,13 +218,7 @@ def train_quality_classifier(docs: DataFrame, label: Column,
             f"quant-mode exactness envelope is {MAX_TRAIN_ROWS} training "
             f"rows (got {n}); use mode='float' or raise RESID_SCALE "
             "headroom consciously")
-    if strategy not in ("auto", "driver", "distributed"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy == "auto":
-        strategy = ("driver"
-                    if n * (dims + 1) * 8 <= MAX_DRIVER_TRAIN_BYTES
-                    else "distributed")
-    if mode == "quant" and strategy == "driver":
+    if mode == "quant" and n * (dims + 1) * 8 <= MAX_DRIVER_TRAIN_BYTES:
         # sub-envelope path: one collect of the narrow feature table, all
         # rounds as int64 matmuls + elementwise IEEE float64 on the driver
         # — op-for-op the same computation as the distributed rounds.

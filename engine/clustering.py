@@ -1,23 +1,27 @@
 """Lloyd k-means over an embedding column — the coarse-quantizer /
 corpus-clustering primitive a training-data pipeline uses for
 cluster-balanced sampling, semantic dedup buckets, and IVF cell training.
+One quantized Lloyd loop (_lloyd, over m subspaces) trains k-means (m =
+1) and the PQ / IVFPQ codebooks of engine.similarity.
 
 Spark shape (the MLlib KMeans pattern, re-expressed on DataFrames):
-  * each iteration's ASSIGN step is MAP-ONLY — the k x dim centroid
-    matrix rides in the closure of an Arrow batch kernel (same closure
-    strategy as `engine.episodes.knn_assign_collected`), so the corpus is
-    never shuffled for assignment.  The kernel (_assign_arrow) is the
-    bit-identical twin of the higher-order-function expression form
-    (_assign_expr, kept as the semantic reference): same left-to-right
-    fold order, same strict-less argmin — Spark interprets HOF exprs
-    node by node (not codegen), measured ~10x slower at bench scale;
-  * the UPDATE step is a posexplode -> groupBy(cl, dim) partial-agg: the
-    exchange carries at most (partitions x k x dim) pre-combined rows,
-    never the vectors; the k x dim result is collected to the driver
-    (tiny — this is exactly what MLlib's runAlgorithm does per step);
+  * each iteration's ASSIGN step is MAP-ONLY — the centroid matrix
+    rides in the closure of an Arrow batch kernel (_assign_arrow; same
+    closure strategy as `engine.episodes.knn_assign_collected`), so the
+    corpus is never shuffled for assignment.  Its argmin (_argmin) uses
+    the left-to-right fold order and strict-less tiebreak of the
+    chained SQL oracle (`_kmeans_chain_sql` in __spark_entry__.py), the
+    semantic reference;
+  * the UPDATE step is an explode(s, cl, slice) -> posexplode ->
+    groupBy(s, cl, d) partial-agg: the exchange carries at most
+    (partitions x m x k x dim/m) pre-combined rows, never the vectors;
+    the result is collected to the driver (tiny — this is exactly what
+    MLlib's runAlgorithm does per step);
   * total per iteration: one corpus scan + one k*dim-row shuffle.
   At 100 TB this is the right plan: assignment cost is the unavoidable
   O(n*k*dim) scan, and nothing vector-shaped ever crosses an exchange.
+  Below MAX_DRIVER_LLOYD_BYTES the updates run on one driver collect
+  with the same argmin instead.
 
 Exact cross-engine determinism (the oracle contract): vectors are
 quantized to INTEGER-VALUED doubles (floor(x*Q + 0.5), Q = 1024).  Sums
@@ -53,9 +57,8 @@ QUANT_SCALE = 1024.0
 # this, the (iters-1) centroid updates run as numpy matvecs on ONE
 # driver collect instead of one assign-UDF scan + posexplode shuffle +
 # collect PER ROUND — bit-identical by the module's exactness contract
-# (assignment replicates _assign_arrow's op order; update sums are exact
-# order-free integer sums; centroid = one IEEE division either way).
-# Past the envelope the distributed rounds run unchanged.
+# (both sides assign with _argmin; update sums are exact order-free
+# integer sums; centroid = one IEEE division either way).
 MAX_DRIVER_LLOYD_BYTES = 64 << 20
 
 
@@ -66,212 +69,156 @@ def quantize_vec(vec: Column, scale: float = QUANT_SCALE) -> Column:
         lambda x: F.floor(x * F.lit(scale) + F.lit(0.5)).cast("double"))
 
 
-def _dot_lit(e: Column, c: list[float]) -> Column:
-    """Left-to-right dot(e, literal c) — mirrors DuckDB list_reduce."""
-    arr = F.array(*[F.lit(float(v)) for v in c])
-    return F.aggregate(F.zip_with(e, arr, lambda a, b: a * b),
-                       F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _self_dot(c: list[float]) -> float:
+def _fold_dot(a, b) -> float:
+    """dot(a, b) as the left-to-right scalar fold the SQL oracles replay
+    (Spark `F.aggregate`, DuckDB `list_reduce`)."""
     acc = 0.0
-    for v in c:
-        acc = acc + v * v
+    for x, y in zip(a, b):
+        acc = acc + x * y
     return acc
 
 
-def _assign_expr(cents: list[list[float]], vec: Column | None = None) -> Column:
-    """argmin_j [ dot(c_j,c_j) - 2*dot(x,c_j) ], tiebreak lowest j.
-    One codegen expression over the k-literal centroid closure; returns
-    the winning (score, cl) struct.  `score` is dist^2 minus the
-    per-row-constant dot(x,x) term (constant shifts don't move argmin).
-    `vec` overrides the default `e` column (PQ assigns on subvector
-    slices of the same quantized vector)."""
-    e = F.col("e") if vec is None else vec
-    cands = F.array(*[
-        F.struct(
-            (F.lit(_self_dot(c)) - 2.0 * _dot_lit(e, c))
-            .alias("score"),
-            F.lit(j).cast("long").alias("cl"))
-        for j, c in enumerate(cents)])
-    return F.array_min(cands)
-
-
-def _assign_arrow(cents: list[list[float]], slices=None):
-    """Arrow twin of _assign_expr: same argmin, same FLOAT OP ORDER —
-    per dimension, acc = acc + x_d * c_d (a vectorized left-to-right
-    fold), score = self_dot - 2.0 * acc, strict-less argmin so ties keep
-    the lowest cluster id (array_min's lexicographic (score, cl)
-    semantics).  Every elementwise numpy op is one correctly-rounded
-    IEEE double op, so assignments and scores are bit-identical to the
-    higher-order-function expression — which Spark interprets node by
-    node (HOFs are not codegen'd; measured ~10x slower at bench scale).
-
-    With ``slices`` (PQ): a list of (lo0, k_cents) per subspace — returns
-    one struct column of m code fields instead of (score, cl).
-    """
-    if slices is None:
-        C = [list(map(float, c)) for c in cents]
-        sd = [_self_dot(c) for c in C]
-
-        @F.pandas_udf("struct<score:double,cl:bigint>")
-        def assign_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-            import numpy as np
-            for es in it:
-                yield _assign_block(es, np)
-
-        def _assign_block(es, np):
-            n = len(es)
-            if n == 0:
-                return pd.DataFrame({"score": [], "cl": []})
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in es])
-            best_s = None
-            best_c = None
-            for j, c in enumerate(C):
-                acc = np.zeros(n, dtype=np.float64)
-                for d in range(len(c)):
-                    acc = acc + M[:, d] * c[d]
-                score = sd[j] - 2.0 * acc
-                if best_s is None:
-                    best_s, best_c = score, np.zeros(n, dtype=np.int64)
-                else:
-                    lt = score < best_s
-                    best_s = np.where(lt, score, best_s)
-                    best_c = np.where(lt, j, best_c)
-            return pd.DataFrame({"score": best_s, "cl": best_c})
-
-        return assign_udf
-
-    m = len(cents)
-    fields = ", ".join(f"c{s}:bigint" for s in range(m))
-    CS = [[list(map(float, c)) for c in cents[s]] for s in range(m)]
-    SD = [[_self_dot(c) for c in CS[s]] for s in range(m)]
-
-    @F.pandas_udf(f"struct<{fields}>")
-    def pq_assign_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for es in it:
-            yield _pq_block(es, np)
-
-    def _pq_block(es, np):
-        n = len(es)
-        if n == 0:
-            return pd.DataFrame({f"c{s}": [] for s in range(m)})
-        M = np.stack([np.asarray(v, dtype=np.float64) for v in es])
-        out = {}
-        for s, (lo, _) in enumerate(slices):
-            sub = len(CS[s][0])
-            Ms = M[:, lo:lo + sub]
-            best_s = None
-            best_c = None
-            for j, c in enumerate(CS[s]):
-                acc = np.zeros(n, dtype=np.float64)
-                for d in range(sub):
-                    acc = acc + Ms[:, d] * c[d]
-                score = SD[s][j] - 2.0 * acc
-                if best_s is None:
-                    best_s, best_c = score, np.zeros(n, dtype=np.int64)
-                else:
-                    lt = score < best_s
-                    best_s = np.where(lt, score, best_s)
-                    best_c = np.where(lt, j, best_c)
-            out[f"c{s}"] = best_c
-        return pd.DataFrame(out)
-
-    return pq_assign_udf
-
-
-def _assign_driver(M, cents):
-    """Numpy twin of _assign_arrow's argmin for the driver Lloyd path —
-    IDENTICAL float op order (acc = acc + M[:,d]*c[d] left-to-right,
-    score = self_dot - 2.0*acc, strict-less argmin keeping the lowest
-    cluster id), so assignments match the distributed rounds bit-for-bit."""
+def _argmin(M, cents):
+    """(score, code) per row of M against centroid lists ``cents``:
+    score_j = fold(c_j, c_j) - 2.0 * acc_j with acc_j = acc_j + M[:, d] *
+    c_j[d] accumulated left to right, strict-less argmin so ties keep
+    the lowest j.  Every elementwise numpy op is one correctly-rounded
+    IEEE double op, so scores and codes equal the oracle's folds
+    bit-for-bit.  The one argmin of the Arrow kernel and the driver
+    Lloyd loop."""
     import numpy as np
     n = M.shape[0]
-    best_s = None
-    best_c = None
+    best_s = best_c = None
     for j, c in enumerate(cents):
         acc = np.zeros(n, dtype=np.float64)
         for d in range(len(c)):
             acc = acc + M[:, d] * c[d]
-        score = _self_dot(c) - 2.0 * acc
+        score = _fold_dot(c, c) - 2.0 * acc
         if best_s is None:
             best_s, best_c = score, np.zeros(n, dtype=np.int64)
         else:
             lt = score < best_s
             best_s = np.where(lt, score, best_s)
             best_c = np.where(lt, j, best_c)
-    return best_c
+    return best_s, best_c
 
 
-def _lloyd_driver_updates(q: DataFrame, cents: list[list[float]],
-                          iters: int, k: int) -> list[list[float]]:
-    """(iters-1) Lloyd updates on ONE driver collect of the quantized
-    table — value-identical to the distributed rounds (see
-    MAX_DRIVER_LLOYD_BYTES): assignment via _assign_driver (bit-equal op
-    order), per-(cluster, dim) sums are exact order-free integer sums
-    (< 2^53 by the module envelope), centroid = sum/count in one IEEE
-    division exactly as the driver fold of the collected stats did."""
+def _assign_arrow(cents: list[list[list[float]]]):
+    """Map-only Arrow assign kernel over m subspaces: ``cents[s][j]`` is
+    subspace s's centroid j, and subspace s reads the s-th equal slice of
+    `e`.  Returns a pandas UDF e -> struct<c0, score0, ..., c{m-1},
+    score{m-1}> with each subspace's _argmin code and score (k-means is
+    the m = 1 case).  The centroid matrix rides in the closure."""
+    m = len(cents)
+    CS = [[list(map(float, c)) for c in cs] for cs in cents]
+    sub = len(CS[0][0])
+    fields = ", ".join(f"c{s}:bigint, score{s}:double" for s in range(m))
+
+    @F.pandas_udf(f"struct<{fields}>")
+    def assign_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        import numpy as np
+        for es in it:
+            M = (np.stack([np.asarray(v, dtype=np.float64) for v in es])
+                 if len(es) else np.empty((0, m * sub)))
+            out = {}
+            for s in range(m):
+                score, code = _argmin(M[:, s * sub:(s + 1) * sub], CS[s])
+                out[f"c{s}"], out[f"score{s}"] = code, score
+            yield pd.DataFrame(out)
+
+    return assign_udf
+
+
+def _lloyd(q: DataFrame, m: int, k: int, iters: int):
+    """The one quantized Lloyd loop, over m subspaces of a prepared
+    (..., vec_id, e) frame whose `e` holds integer-valued doubles.
+    Init: subspace s's centroid j is the s-th slice of the j-th
+    lowest-id vector; then (iters - 1) updates, where empty clusters
+    keep their centroid.  Below MAX_DRIVER_LLOYD_BYTES the updates run
+    on one driver collect (_lloyd_driver), past it as Spark rounds
+    (_lloyd_distributed) — the same values either way.  Returns (q plus
+    the final _assign_arrow struct `_cs`, cents[m][k])."""
+    if k < 1 or iters < 1:
+        raise ValueError("k and iters must be >= 1")
+    init = sorted(q.select("vec_id", "e").orderBy("vec_id").limit(k)
+                  .collect(), key=lambda r: r["vec_id"])
+    if len(init) < k:
+        raise ValueError(f"k={k} exceeds {len(init)} input vectors")
+    dim = len(init[0]["e"])
+    sub = dim // m
+    cents = [[list(r["e"][s * sub:(s + 1) * sub]) for r in init]
+             for s in range(m)]
+    if iters > 1:
+        update = (_lloyd_driver
+                  if q.count() * dim * 8 <= MAX_DRIVER_LLOYD_BYTES
+                  else _lloyd_distributed)
+        cents = update(q, cents, iters - 1)
+    return q.withColumn("_cs", _assign_arrow(cents)(F.col("e"))), cents
+
+
+def _lloyd_driver(q: DataFrame, cents, rounds: int):
+    """`rounds` Lloyd updates on ONE collect of `e`: per subspace the
+    shared _argmin, then the member mean — per-(cluster, dim) sums are
+    exact order-free integer sums and centroid = sum/count is one IEEE
+    division, as in _lloyd_distributed."""
     import numpy as np
     M = np.array(q.select("e").toPandas()["e"].tolist(), dtype=np.float64)
-    for _ in range(iters - 1):
-        assign = _assign_driver(M, cents)
+    sub = len(cents[0][0])
+    for _ in range(rounds):
         nxt = []
-        for j in range(k):
-            members = M[assign == j]
-            if len(members):
-                s = members.sum(axis=0)
-                nxt.append([float(v) / len(members) for v in s])
-            else:
-                nxt.append(cents[j])
+        for s, cs in enumerate(cents):
+            Ms = M[:, s * sub:(s + 1) * sub]
+            _, code = _argmin(Ms, cs)
+            new = []
+            for j, c in enumerate(cs):
+                members = Ms[code == j]
+                new.append([float(v) / len(members)
+                            for v in members.sum(axis=0)]
+                           if len(members) else c)
+            nxt.append(new)
         cents = nxt
+    return cents
+
+
+def _lloyd_distributed(q: DataFrame, cents, rounds: int):
+    """`rounds` Lloyd updates as Spark rounds: the map-only assign kernel,
+    then one exchange of (s, cl, slice) -> posexplode -> groupBy(s, cl,
+    d) partial sums (at most partitions x m x k x sub rows), collected
+    to the driver."""
+    m, sub = len(cents), len(cents[0][0])
+    for _ in range(rounds):
+        coded = q.withColumn("_cs", _assign_arrow(cents)(F.col("e")))
+        stats = (coded.select(F.explode(F.array(*[
+                    F.struct(F.lit(s).alias("s"),
+                             F.col(f"_cs.c{s}").alias("cl"),
+                             F.slice("e", s * sub + 1, sub).alias("v"))
+                    for s in range(m)])).alias("z"))
+                 .select(F.col("z.s").alias("s"), F.col("z.cl").alias("cl"),
+                         F.posexplode("z.v").alias("d", "x"))
+                 .groupBy("s", "cl", "d")
+                 .agg(F.sum("x").alias("sx"), F.count(F.lit(1)).alias("n"))
+                 .collect())
+        upd: dict[tuple, list] = {}
+        for r in stats:
+            upd.setdefault((r["s"], r["cl"]), [None] * sub)[r["d"]] = \
+                r["sx"] / r["n"]
+        cents = [[upd.get((s, j), c) for j, c in enumerate(cs)]
+                 for s, cs in enumerate(cents)]
     return cents
 
 
 def _kmeans_core(df: DataFrame, k: int, iters: int, vec_col: str,
                  id_col: str, scale: float) -> DataFrame:
-    """Shared Lloyd loop; returns ((vec_id, e, cl, score) DataFrame under
-    the final centroids, final centroid lists) — score = dist^2 - dot(x,x)
-    (see _assign_expr).  Below MAX_DRIVER_LLOYD_BYTES the (iters-1)
-    centroid updates run on the driver (value-identical; one collect
-    replaces a per-round scan + shuffle + collect); the final assignment
-    is always the distributed map-only Arrow kernel."""
-    if k < 1 or iters < 1:
-        raise ValueError("k and iters must be >= 1")
+    """k-means as the one-subspace _lloyd; returns ((vec_id, e, cl, score)
+    under the final centroids, final centroid lists) — score = dist^2 -
+    dot(x,x)."""
     q = df.select(F.col(id_col).cast("long").alias("vec_id"),
                   quantize_vec(F.col(vec_col), scale).alias("e"))
     q = q.persist()
     try:
-        init = sorted(q.orderBy("vec_id").limit(k).collect(),
-                      key=lambda r: r["vec_id"])
-        if len(init) < k:
-            raise ValueError(f"k={k} exceeds {len(init)} input vectors")
-        cents = [list(r["e"]) for r in init]
-        dim = len(cents[0])
-        if iters > 1 and q.count() * dim * 8 <= MAX_DRIVER_LLOYD_BYTES:
-            cents = _lloyd_driver_updates(q, cents, iters, k)
-        else:
-            for it in range(iters - 1):
-                assigned_it = q.withColumn("_b",
-                                           _assign_arrow(cents)(F.col("e")))
-                stats = (assigned_it
-                         .select(F.col("_b.cl").alias("cl"),
-                                 F.posexplode("e").alias("dim", "x"))
-                         .groupBy("cl", "dim")
-                         .agg(F.sum("x").alias("s"),
-                              F.count(F.lit(1)).alias("n"))
-                         .collect())
-                upd: dict[int, list] = {}
-                for r in stats:
-                    upd.setdefault(r["cl"], [None] * dim)[r["dim"]] = \
-                        r["s"] / r["n"]
-                cents = [upd[j] if j in upd else cents[j] for j in range(k)]
-        best = _assign_arrow(cents)(F.col("e"))
-        assigned = q.withColumn("_b", best) \
-                    .withColumn("cl", F.col("_b.cl")) \
-                    .withColumn("score", F.col("_b.score")) \
-                    .drop("_b")
-        return assigned, cents
+        coded, cents = _lloyd(q, 1, k, iters)
+        return coded.select("vec_id", "e", F.col("_cs.c0").alias("cl"),
+                            F.col("_cs.score0").alias("score")), cents[0]
     finally:
         q.unpersist()
 

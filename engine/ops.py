@@ -225,10 +225,10 @@ def min_label_components(nodes: DataFrame, edges: DataFrame,
                          b_col: str = "b", max_iters: int = 16) -> DataFrame:
     """Generic undirected connected components: min-label propagation WITH
     pointer jumping, so convergence is O(log component-diameter) rounds
-    (plain 1-hop propagation is O(diameter)).  The cell-raster twin is
-    tiles.extract_components; this form takes an arbitrary node table and
-    (a, b) edge table — e.g. near-dup pairs over 10^12 docs, where edges
-    are LSH-bucketed candidates (tiny vs the corpus) and each round is a
+    (plain 1-hop propagation is O(diameter)).  It takes an arbitrary node
+    table and (a, b) edge table — a hot-cell raster's ring-1 adjacency
+    (tiles.extract_components), or near-dup pairs over 10^12 docs, where
+    edges are LSH-bucketed candidates (tiny vs the corpus) and each round is a
     pair of equi-joins + a min-aggregation, all shuffle-keyed on ids.
 
     Returns (id_col, component_id) for EVERY node; isolated nodes are their

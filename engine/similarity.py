@@ -400,10 +400,12 @@ def pq_train_encode(df: DataFrame, m: int = 4, n_codes: int = 16,
     fit in RAM).
 
     Spark-first improvement over the FAISS per-subspace training loop:
-    all m subspace k-means run IN ONE PASS per iteration — assignment is
-    a single map-only projection evaluating m literal-closure argmins,
-    and the update is one exchange carrying at most
-    (partitions x m x n_codes x dim/m) pre-combined rows.  Total cost per
+    all m subspace k-means run IN ONE PASS per iteration of
+    engine/clustering.py's one Lloyd loop (_lloyd; k-means is its m = 1
+    case) — assignment is a single map-only Arrow kernel evaluating m
+    closure argmins, and the update is one exchange carrying at most
+    (partitions x m x n_codes x dim/m) pre-combined rows, or one driver
+    collect below clustering.MAX_DRIVER_LLOYD_BYTES.  Total cost per
     iteration: one corpus scan + one tiny shuffle, independent of m.
 
     Exactness contract: engine/clustering.py's quantized-integer-double
@@ -425,97 +427,23 @@ def pq_train_encode(df: DataFrame, m: int = 4, n_codes: int = 16,
     q = df.select(F.col(id_col).cast("long").alias("vec_id"),
                   quantize_vec(F.col(vec_col), sc).alias("e")).persist()
     try:
-        return _pq_core(q, m, n_codes, iters, dim)
+        return _pq_core(q, m, n_codes, iters)
     finally:
         q.unpersist()
 
 
-def _pq_core(q: DataFrame, m: int, n_codes: int, iters: int, dim: int):
-    """Shared PQ Lloyd loop over a prepared (..., vec_id, e) frame whose
-    `e` holds integer-valued doubles (quantized vectors OR integer
-    residuals — the IVFPQ path).  All non-`e` input columns pass through
-    to the coded output.  Returns (codes_df, cents[m][n_codes]).
-
-    Below clustering.MAX_DRIVER_LLOYD_BYTES the (iters-1) codebook
-    updates run on ONE driver collect (value-identical: the numpy
-    per-subspace argmin replicates _assign_arrow's op order bit-for-bit
-    and the update sums are exact order-free integer sums); the final
-    encode is always the distributed map-only Arrow kernel."""
-    from .clustering import (MAX_DRIVER_LLOYD_BYTES, _assign_arrow,
-                             _self_dot)
-    sub = dim // m
-    init = sorted(q.select("vec_id", "e").orderBy("vec_id")
-                   .limit(n_codes).collect(),
-                  key=lambda r: r["vec_id"])
-    if len(init) < n_codes:
-        raise ValueError(f"n_codes={n_codes} exceeds input size")
-    cents = [[list(r["e"][s * sub:(s + 1) * sub]) for r in init]
-             for s in range(m)]
+def _pq_core(q: DataFrame, m: int, n_codes: int, iters: int):
+    """PQ as clustering._lloyd over m subspaces of a prepared (...,
+    vec_id, e) frame whose `e` holds integer-valued doubles (quantized
+    vectors OR integer residuals — the IVFPQ path).  All non-`e` input
+    columns pass through to the coded output.  Returns (codes_df,
+    cents[m][n_codes])."""
+    from .clustering import _lloyd
+    coded, cents = _lloyd(q, m, n_codes, iters)
     passthrough = [c for c in q.columns if c != "e"]
-    if iters > 1 and q.count() * dim * 8 <= MAX_DRIVER_LLOYD_BYTES:
-        M = np.array(q.select("e").toPandas()["e"].tolist(),
-                     dtype=np.float64)
-        for _ in range(iters - 1):
-            nxt = []
-            for s in range(m):
-                Ms = M[:, s * sub:(s + 1) * sub]
-                # numpy twin of _pq_block: identical fold order and
-                # strict-less argmin per subspace
-                best_s = None
-                best_c = None
-                for j, c in enumerate(cents[s]):
-                    acc = np.zeros(len(Ms), dtype=np.float64)
-                    for d in range(sub):
-                        acc = acc + Ms[:, d] * c[d]
-                    score = _self_dot(c) - 2.0 * acc
-                    if best_s is None:
-                        best_s = score
-                        best_c = np.zeros(len(Ms), dtype=np.int64)
-                    else:
-                        lt = score < best_s
-                        best_s = np.where(lt, score, best_s)
-                        best_c = np.where(lt, j, best_c)
-                cs = []
-                for j in range(n_codes):
-                    members = Ms[best_c == j]
-                    if len(members):
-                        t = members.sum(axis=0)
-                        cs.append([float(v) / len(members) for v in t])
-                    else:
-                        cs.append(cents[s][j])
-                nxt.append(cs)
-            cents = nxt
-    else:
-        for it in range(iters - 1):
-            codes_struct = _assign_arrow(
-                cents, slices=[(s * sub, n_codes) for s in range(m)])(
-                    F.col("e"))
-            it_codes = (q.withColumn("_cs", codes_struct)
-                        .select("e", *[F.col(f"_cs.c{s}").alias(f"c{s}")
-                                       for s in range(m)]))
-            ex = (it_codes.select(F.explode(F.array(*[
-                    F.struct(F.lit(s).alias("s"),
-                             F.col(f"c{s}").alias("cl"),
-                             F.slice("e", s * sub + 1, sub).alias("v"))
-                    for s in range(m)])).alias("z"))
-                  .select(F.col("z.s").alias("s"), F.col("z.cl").alias("cl"),
-                          F.posexplode("z.v").alias("d", "x"))
-                  .groupBy("s", "cl", "d")
-                  .agg(F.sum("x").alias("sx"), F.count(F.lit(1)).alias("n"))
-                  .collect())
-            upd: dict[tuple, list] = {}
-            for r in ex:
-                upd.setdefault((r["s"], r["cl"]), [None] * sub)[r["d"]] = \
-                    r["sx"] / r["n"]
-            cents = [[upd.get((s, j), cents[s][j]) for j in range(n_codes)]
-                     for s in range(m)]
-    codes_struct = _assign_arrow(
-        cents, slices=[(s * sub, n_codes) for s in range(m)])(F.col("e"))
-    assigned = (q.withColumn("_cs", codes_struct)
-                .select(*passthrough, "e",
+    return coded.select(*passthrough, "e",
                         *[F.col(f"_cs.c{s}").alias(f"c{s}")
-                          for s in range(m)]))
-    return assigned, cents
+                          for s in range(m)]), cents
 
 
 # LUT-closure query ceiling for PQ/IVFPQ search: nq x m x n_codes doubles
@@ -572,19 +500,13 @@ def pq_adc_topk(df: DataFrame, queries: DataFrame, k: int = 3, m: int = 4,
     excluded.  Recall vs exact L2 is property-tested; the ADC values
     themselves are exact given the codes (that is PQ's contract).
     """
-    from .clustering import QUANT_SCALE, quantize_vec
+    from .clustering import QUANT_SCALE, _fold_dot, quantize_vec
     sc = QUANT_SCALE if scale is None else scale
     sub = dim // m
     codes, cents = pq_train_encode(df, m=m, n_codes=n_codes, iters=iters,
                                    vec_col=vec_col, id_col=id_col, dim=dim,
                                    scale=sc)
     qrows = _collect_queries(queries, id_col, vec_col, sc, quantize_vec)
-
-    def _fold_dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
 
     q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     # LUT[qi, s, j] — every term a left-to-right float fold (oracle order)
@@ -670,7 +592,8 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 3,
     """
     import math
 
-    from .clustering import QUANT_SCALE, _kmeans_core, quantize_vec
+    from .clustering import (QUANT_SCALE, _fold_dot, _kmeans_core,
+                             quantize_vec)
     sc = QUANT_SCALE if scale is None else scale
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -686,15 +609,9 @@ def ivfpq_topk(df: DataFrame, queries: DataFrame, k: int = 3,
         F.zip_with(F.col("e"), F.element_at(cmat, F.col("cl").cast("int") + 1),
                    lambda a, b: a - b).alias("e")).persist()
     try:
-        codes, cents_pq = _pq_core(resid, m, n_codes, iters_pq, dim)
+        codes, cents_pq = _pq_core(resid, m, n_codes, iters_pq)
 
         qrows = _collect_queries(queries, id_col, vec_col, sc, quantize_vec)
-
-        def _fold_dot(a, b):
-            acc = 0.0
-            for x, y in zip(a, b):
-                acc = acc + x * y
-            return acc
 
         q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
         nq = len(qrows)

@@ -7,9 +7,8 @@ salting).  This is the GLOBAL (cross-host) twin of the per-host KDE kernel:
            kring_smooth    Gaussian ring-stencil join      — 1 shuffle
            rollup_pyramid  groupBy(parent(cell)) per level — native bit math,
                                                              1 shuffle/level
-  vector:  extract_components  threshold + connected components via
-                               iterative min-label propagation (ring-1
-                               equi-join, O(log diameter) rounds)
+  vector:  extract_components  threshold + ring-1 edges, connected
+                               components via ops.min_label_components
   J4:      pip_join        two-phase: equi-join on exploded polygon cell
                            cover (cheap prefilter) then exact vectorized
                            ray-casting refine per polygon group.
@@ -144,22 +143,15 @@ def extract_components(density: DataFrame, threshold_s: float,
                        level: int | None = None,
                        max_iters: int = 12) -> DataFrame:
     """Vector extraction: super-threshold cells -> connected components
-    (ring-1 adjacency) via min-label propagation WITH pointer jumping.
-
-    Each round does (a) a 1-hop neighbor-min and (b) a pointer jump
-    label <- label(label) through the current label table, so convergence is
-    O(log component-diameter) rounds (plain 1-hop propagation alone is
-    O(diameter)).  Raises RuntimeError if max_iters rounds don't reach a
-    fixpoint instead of silently splitting components.  Superseded iteration
-    caches are unpersisted each round (the final label table stays cached —
-    the returned DataFrame reads from it).
-    Returns (component_id, cell_id, mass_s).
+    of their ring-1 adjacency, labelled by ops.min_label_components
+    (component_id = the minimum cell id; RuntimeError if max_iters
+    label-contraction rounds don't reach a fixpoint).
+    Returns (cell_id, mass_s, component_id).
     """
+    from .ops import min_label_components
     lvl = level if level is not None else cfg.cell_level
     hot = (density.filter(F.col("mass_s") >= F.lit(threshold_s))
-           .select("cell_id", "mass_s")
-           .withColumn("label", F.col("cell_id")))
-    hot = hot.cache()
+           .select("cell_id", "mass_s")).cache()
     hot.count()
     # native ring-1 explode (UDF-free); duplicate (cell, ncell) edges can
     # appear for corner cells where the ring folds onto itself — harmless
@@ -176,48 +168,12 @@ def extract_components(density: DataFrame, threshold_s: float,
     # keep only edges between two hot cells
     edges = (ring.filter(F.col("cell_id") != F.col("ncell"))
              .join(hot.select(F.col("cell_id").alias("ncell")), "ncell",
-                   "left_semi")).cache()
-    edges.count()
+                   "left_semi"))
+    comp = min_label_components(hot.select("cell_id"), edges,
+                                id_col="cell_id", a_col="cell_id",
+                                b_col="ncell", max_iters=max_iters)
     ring.unpersist()
-    cur = hot.select("cell_id", "label")
-    prev_cached: DataFrame | None = None
-    converged = False
-    for _ in range(max_iters):
-        nbr_min = (edges.join(cur.select(F.col("cell_id").alias("ncell"),
-                                         F.col("label").alias("nlabel")),
-                              "ncell")
-                   .groupBy("cell_id").agg(F.min("nlabel").alias("nbr_label")))
-        mined = (cur.join(nbr_min, "cell_id", "left")
-                 .select("cell_id",
-                         F.least(F.col("label"),
-                                 F.coalesce(F.col("nbr_label"), F.col("label")))
-                         .alias("label")))
-        # pointer jump: label <- mined(mined(.)) via the POST-neighbor-min
-        # table — true doubling per round (see ops.min_label_components)
-        jump = mined.select(F.col("cell_id").alias("label"),
-                            F.col("label").alias("_jlabel"))
-        nxt = (mined.join(jump, "label", "left")
-               .select("cell_id",
-                       F.least(F.col("label"),
-                               F.coalesce(F.col("_jlabel"), F.col("label")))
-                       .alias("label"))).cache()
-        # full count (not limit(1)) so nxt is fully materialized into its
-        # cache before the previous round's cache is dropped
-        changed = (nxt.join(cur.withColumnRenamed("label", "old"), "cell_id")
-                   .filter(F.col("label") != F.col("old")).count())
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        prev_cached = nxt
-        cur = nxt
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"extract_components: no fixpoint after {max_iters} pointer-"
-            f"jumping rounds (component diameter > 2^{max_iters})")
-    return (hot.select("cell_id", "mass_s")
-            .join(cur.withColumnRenamed("label", "component_id"), "cell_id"))
+    return hot.join(comp, "cell_id")
 
 
 # ---------------------------------------------------------------------------

@@ -89,22 +89,40 @@ def test_quant_learns_and_matches_numpy(spark):
     docs.unpersist()
 
 
-def test_all_training_paths_identical(spark):
+def test_all_training_paths_identical(spark, monkeypatch):
     """The three quant training paths — distributed Arrow gradient
     kernel, distributed expression form, and the sub-envelope driver
-    (collected numpy) strategy — are bit-identical twins: same weights
+    (collected numpy) side — are bit-identical twins: same weights
     after every round (integer matvec margins + elementwise IEEE residual
-    chain in all three)."""
+    chain in all three).  Each side is forced through
+    MAX_DRIVER_TRAIN_BYTES, and the kernel / expression calls show
+    which side ran."""
+    from engine import classifier
     docs = _docs(spark)
     label = F.array_contains(F.split(F.col("text"), r"\s+"),
                              F.lit("aardvark"))
+    calls = []
+
+    def spy(name):
+        real = getattr(classifier, name)
+
+        def wrapped(*args):
+            calls.append(name)
+            return real(*args)
+        monkeypatch.setattr(classifier, name, wrapped)
+    spy("_grad_arrow")
+    spy("_margin_micro")
+    rounds = 3
     ws = []
-    for kw in ({"strategy": "distributed", "use_arrow": True},
-               {"strategy": "distributed", "use_arrow": False},
-               {"strategy": "driver"}):
-        w, f = train_quality_classifier(docs, label, dims=64, rounds=3,
-                                        **kw)
+    for limit, use_arrow, ran in ((-1, True, ["_grad_arrow"] * rounds),
+                                  (-1, False, ["_margin_micro"] * rounds),
+                                  (1 << 62, True, [])):
+        monkeypatch.setattr(classifier, "MAX_DRIVER_TRAIN_BYTES", limit)
+        calls.clear()
+        w, f = train_quality_classifier(docs, label, dims=64, rounds=rounds,
+                                        use_arrow=use_arrow)
         f.unpersist()
+        assert calls == ran
         ws.append(w)
     assert ws[0] == ws[1] == ws[2]
 

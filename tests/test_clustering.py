@@ -1,7 +1,7 @@
-"""Lloyd k-means (engine/clustering.py): parity vs an independent numpy
-implementation, empty-cluster handling, and the map-only assignment plan;
-the three DBSCANs vs one brute replay, on both sides of the pair
-envelope."""
+"""Lloyd k-means and PQ training (engine/clustering.py): parity vs an
+independent numpy implementation on both sides of the Lloyd envelope,
+empty-cluster handling, and the map-only assignment plan; the three
+DBSCANs vs one brute replay, on both sides of the pair envelope."""
 
 import numpy as np
 import pandas as pd
@@ -31,7 +31,21 @@ def _numpy_lloyd(vecs: np.ndarray, ids: np.ndarray, k: int, iters: int):
     return {int(i): int(c) for i, c in zip(ids, assign)}
 
 
-def test_kmeans_matches_numpy_oracle(spark):
+@pytest.fixture(params=["driver", "distributed"])
+def lloyd_side(request, monkeypatch):
+    """Force one side of clustering._lloyd's update envelope; the other
+    side raises, so a passing case ran this side."""
+    def other_side(*_args):
+        raise AssertionError(f"{request.param} case left its side")
+    if request.param == "driver":
+        monkeypatch.setattr(clustering, "MAX_DRIVER_LLOYD_BYTES", 1 << 62)
+        monkeypatch.setattr(clustering, "_lloyd_distributed", other_side)
+    else:
+        monkeypatch.setattr(clustering, "MAX_DRIVER_LLOYD_BYTES", -1)
+        monkeypatch.setattr(clustering, "_lloyd_driver", other_side)
+
+
+def test_kmeans_matches_numpy_oracle(spark, lloyd_side):
     rng = np.random.default_rng(17)
     n, dim, k, iters = 300, 16, 5, 4
     centers = rng.normal(size=(k, dim)) * 3.0
@@ -50,7 +64,7 @@ def test_kmeans_matches_numpy_oracle(spark):
     assert got1 != got
 
 
-def test_kmeans_empty_cluster_keeps_centroid(spark):
+def test_kmeans_empty_cluster_keeps_centroid(spark, lloyd_side):
     # ids 0 and 1 quantize identically -> cluster 1 ties everywhere and
     # loses every argmin tiebreak; the update round must keep its
     # centroid (not crash / NaN) and the output must stay total.
@@ -84,7 +98,7 @@ def test_kmeans_validates_args(spark):
         clustering.kmeans_lloyd(df, k=5, iters=2)
 
 
-def test_kmeans_prune_matches_numpy(spark):
+def test_kmeans_prune_matches_numpy(spark, lloyd_side):
     """Prune keeps exactly ceil(frac * |cluster|) per cluster, the
     closest-to-centroid by (dist^2, vec_id) — checked against an
     independent numpy replay of the full Lloyd + rank pipeline."""
@@ -119,6 +133,31 @@ def test_kmeans_prune_matches_numpy(spark):
             want[int(vid)] = (j, rk)
     got = {r["vec_id"]: (r["cl"], r["rk"]) for r in out}
     assert got == want
+
+
+def test_pq_codes_match_numpy_lloyd_per_subspace(spark, lloyd_side):
+    """PQ is m independent subspace Lloyd chains: each subspace's codes
+    equal _numpy_lloyd run on that subspace's columns (same init, same
+    iteration count)."""
+    from engine import similarity
+    rng = np.random.default_rng(31)
+    n, dim, m, k, iters = 160, 8, 2, 4, 3
+    sub = dim // m
+    centers = rng.normal(size=(k, dim)) * 2.0
+    vecs = (centers[rng.integers(0, k, n)]
+            + rng.normal(size=(n, dim)) * 0.6).astype(np.float32)
+    ids = rng.permutation(n).astype(np.int64)
+    df = spark.createDataFrame(pd.DataFrame(
+        {"vec_id": ids, "embedding": list(map(list, vecs))}))
+    codes, _ = similarity.pq_train_encode(df, m=m, n_codes=k, iters=iters,
+                                          dim=dim)
+    rows = codes.collect()
+    for s in range(m):
+        got = {r["vec_id"]: r[f"c{s}"] for r in rows}
+        want = _numpy_lloyd(vecs[:, s * sub:(s + 1) * sub], ids, k, iters)
+        assert got == want
+        assert got != _numpy_lloyd(vecs[:, s * sub:(s + 1) * sub], ids,
+                                   k, 1)
 
 
 def _brute_dbscan(pts, near, min_pts):

@@ -81,6 +81,24 @@ def test_extract_components_near_stops(spark, sites, unit_pages):
     assert pdf.groupby("cell_id").size().max() == 1
 
 
+def test_extract_components_mesh_block(spark):
+    """A contiguous 170-cell level-16 block (a 0.016 deg square sampled
+    every 0.0004 deg from (43.60, -79.45)) is one mesh-shaped component
+    labelled with its minimum cell id."""
+    g = np.arange(40) * 0.0004
+    lat, lon = np.meshgrid(43.60 + g, -79.45 + g, indexing="ij")
+    cells = np.unique(geo.cell_encode(lat.ravel(), lon.ravel(),
+                                      DEFAULT.cell_level))
+    assert len(cells) == 170
+    sites = spark.createDataFrame(pd.DataFrame({
+        "site_lat": lat.ravel(), "site_lon": lon.ravel(),
+        "mass_s": np.full(lat.size, DEFAULT.kde_time_threshold_s)}))
+    pdf = tiles.extract_components(tiles.cell_density(sites),
+                                   DEFAULT.kde_time_threshold_s).toPandas()
+    assert sorted(pdf["cell_id"]) == cells.tolist()
+    assert set(pdf["component_id"]) == {int(cells.min())}
+
+
 def _polygons_sdf(spark, unit_pages):
     _, stops, _ = unit_pages
     polys = gen_activity_polygons(stops)
