@@ -2047,10 +2047,7 @@ def q_tiles_pyramid(spark, sf_dir):
     sites = (trace_prep.interpolate_sites(gp, DEFAULT)
              .withColumn("mass_s", F.floor(F.col("mass_s") * 1000.0)))
     dens = tiles.cell_density(sites, DEFAULT)
-    # integer-ms masses -> hierarchical rollup is exact (sums of sums of
-    # integers), and each level aggregates the previous level instead of
-    # the corpus-sized base
-    pyr = tiles.rollup_pyramid(dens, DEFAULT, hierarchical=True)
+    pyr = tiles.rollup_pyramid(dens, DEFAULT)
     return pyr.select("level", "cell_id",
                       F.col("mass_s").cast("long").alias("mass_ms"))
 

@@ -8,6 +8,7 @@ same builder is used by ``spark-submit --py-files`` jobs (engine/submit.py).
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -60,7 +61,14 @@ def get_spark(app_name: str = "spark-trip-tiler",
         .config("spark.driver.memory", driver_memory or os.environ.get(
             "SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
-    for k, v in (extra_conf or {}).items():
+    # Arrow kernels call module-level engine functions, so the Python
+    # workers must import `engine` even when the driver started elsewhere
+    # with the package only on its own sys.path.
+    conf = dict(extra_conf or {})
+    key = "spark.executorEnv.PYTHONPATH"
+    root = str(Path(__file__).resolve().parent.parent)
+    conf[key] = os.pathsep.join(filter(None, [root, conf.get(key)]))
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -121,6 +121,51 @@ def minhash_signature(df: DataFrame, text_col: str = "text",
     return df.withColumn("sig", sig_udf(base))
 
 
+def _band_rows(signed: DataFrame, id_col: str, bands: int) -> DataFrame:
+    """(id, band, bucket) rows: band b of `sig` is its b-th slice of
+    floor(len / bands) permutation minima, bucketed by hash(slice, b).
+    The one banding expression: lsh_candidate_pairs buckets these rows and
+    the persisted dedup index stores them, so an incremental probe meets
+    exactly the buckets the batch path computes."""
+    r = F.floor(F.size("sig") / bands).cast("int")
+    return signed.select(
+        F.col(id_col),
+        F.posexplode(F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda bnd: F.hash(F.slice(F.col("sig"), bnd * r + 1, r), bnd)))
+        .alias("band", "bucket"))
+
+
+def _hashed_shingles(df: DataFrame, text_col: str, id_col: str,
+                     shingle_n: int) -> DataFrame:
+    """(id, sh): the xxhash64 of each distinct shingle, array<long>."""
+    return df.select(
+        F.col(id_col),
+        F.transform(shingles_col(F.col(text_col), shingle_n),
+                    lambda s: F.xxhash64(s)).alias("sh"))
+
+
+def _jaccard_col() -> Column:
+    """|sa ∩ sb| / |sa ∪ sb| over the set columns sa and sb, rounded to 6
+    places, 0.0 for two empty sets — the Jaccard every verify and the
+    all-pairs twin report."""
+    inter = F.size(F.array_intersect("sa", "sb")).cast("double")
+    union = F.size(F.array_union("sa", "sb")).cast("double")
+    return F.round(F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6)
+
+
+def _verify_jaccard(pairs: DataFrame, sh_a: DataFrame, sh_b: DataFrame,
+                    id_col: str) -> DataFrame:
+    """(a, b, jaccard) for candidate pairs (a, b): a's hashed shingle set
+    comes from sh_a, b's from sh_b (both (id, sh) frames)."""
+    return (pairs
+            .join(sh_a.select(F.col(id_col).alias("a"),
+                              F.col("sh").alias("sa")), "a")
+            .join(sh_b.select(F.col(id_col).alias("b"),
+                              F.col("sh").alias("sb")), "b")
+            .select("a", "b", _jaccard_col().alias("jaccard")))
+
+
 def lsh_candidate_pairs(signed: DataFrame, id_col: str = "doc_id",
                         bands: int = 16) -> DataFrame:
     """Band the signature, bucket by (band, bucket-hash): distinct (a, b)
@@ -135,15 +180,7 @@ def lsh_candidate_pairs(signed: DataFrame, id_col: str = "doc_id",
     O(bucket) and total streamed work O(sum bucket^2) — the same
     asymptotics the self-join streams through its hash join; run exact
     dedup first so identical docs can't form mega-buckets."""
-    sigs = signed.select(id_col, "sig")
-    r = F.floor(F.size("sig") / bands).cast("int")
-    banded = (sigs.select(
-        id_col,
-        F.posexplode(F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda bnd: F.hash(F.slice(F.col("sig"), bnd * r + 1, r), bnd)))
-        .alias("band", "bucket")))
-    buckets = (banded.groupBy("band", "bucket")
+    buckets = (_band_rows(signed, id_col, bands).groupBy("band", "bucket")
                .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("ids"))
                .filter(F.size("ids") > 1))
     lefts = buckets.select("ids", F.posexplode("ids").alias("i", "a"))
@@ -167,17 +204,8 @@ def jaccard_verify(df: DataFrame, pairs: DataFrame,
     exchange to reuse, it re-evaluates the whole candidate subplan once
     per reference — measured 2.5x slower than just re-shingling the
     corpus map-side under the broadcast pair join.)"""
-    sh = df.select(F.col(id_col),
-                   F.transform(shingles_col(F.col(text_col), shingle_n),
-                               lambda s: F.xxhash64(s)).alias("sh"))
-    j = (pairs
-         .join(sh.select(F.col(id_col).alias("a"), F.col("sh").alias("sa")), "a")
-         .join(sh.select(F.col(id_col).alias("b"), F.col("sh").alias("sb")), "b"))
-    inter = F.size(F.array_intersect("sa", "sb")).cast("double")
-    union = F.size(F.array_union("sa", "sb")).cast("double")
-    return j.select("a", "b",
-                    F.round(F.when(union > 0, inter / union)
-                            .otherwise(F.lit(0.0)), 6).alias("jaccard"))
+    sh = _hashed_shingles(df, text_col, id_col, shingle_n)
+    return _verify_jaccard(pairs, sh, sh, id_col)
 
 
 def dedup_minhash(df: DataFrame, threshold: float = 0.5,
@@ -216,17 +244,6 @@ def dedup_clusters(df: DataFrame, threshold: float = 0.5,
         (F.col(id_col) == F.col("component_id")).alias("is_kept"))
 
 
-def dedup_remove(df: DataFrame, threshold: float = 0.5,
-                 text_col: str = "text", id_col: str = "doc_id",
-                 num_hashes: int = 64, bands: int = 16) -> DataFrame:
-    """Deduplicated corpus: df minus every near-dup that is not its
-    cluster's representative (see dedup_clusters)."""
-    keep = (dedup_clusters(df, threshold, text_col, id_col, num_hashes,
-                           bands)
-            .filter(F.col("is_kept")).select(id_col))
-    return df.join(keep, id_col, "left_semi")
-
-
 def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
                         text_col: str = "text", id_col: str = "doc_id",
                         shingle_n: int = 3) -> DataFrame:
@@ -239,11 +256,7 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
              .crossJoin(sh.alias("y").select(F.col(f"y.{id_col}").alias("b"),
                                              F.col("y.sh").alias("sb")))
              .filter(F.col("a") < F.col("b")))
-    inter = F.size(F.array_intersect("sa", "sb")).cast("double")
-    union = F.size(F.array_union("sa", "sb")).cast("double")
-    return (pairs.select("a", "b",
-                         F.round(F.when(union > 0, inter / union)
-                                 .otherwise(F.lit(0.0)), 6).alias("jaccard"))
+    return (pairs.select("a", "b", _jaccard_col().alias("jaccard"))
             .filter(F.col("jaccard") >= threshold))
 
 
@@ -323,16 +336,18 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,
                        bands: int | None = None) -> DataFrame:
     """Near-dup pairs by SimHash: band the 64 bits into `bands` contiguous
     chunks (default max_hamming + 1 — the pigeonhole guarantee: a pair with
-    hamming <= bands-1 must agree exactly on >= 1 band), bucket-join per
-    band, then exact popcount verify — native bit ops end to end.
+    hamming <= bands-1 must agree exactly on >= 1 band), posexplode each
+    doc into its (band, key) rows, ONE self-join on (band, key) with a < b
+    and a distinct over the pairs that share several bands, then exact
+    popcount verify — native bit ops end to end.
 
     Scale envelope: each band has 2^(64/bands) buckets, so expected bucket
-    occupancy is n / 2^(64/bands) and the per-band self-join is quadratic in
-    that.  At n = 10^12 docs keep bands <= 5 (>= 12-bit bands, <= ~2.4e8
-    rows/bucket-universe) — i.e. exact recall up to hamming 4; larger
-    thresholds at that scale need multi-probe or the rotation-sort method,
-    not wider banding.  The recall guarantee is property-tested in
-    tests/test_text_ops.py."""
+    occupancy is n / 2^(64/bands) and the join is quadratic in that per
+    (band, key) bucket.  At n = 10^12 docs keep bands <= 5 (>= 12-bit
+    bands, <= ~2.4e8 rows/bucket-universe) — i.e. exact recall up to
+    hamming 4; larger thresholds at that scale need multi-probe or the
+    rotation-sort method, not wider banding.  The recall guarantee is
+    property-tested in tests/test_text_ops.py."""
     if bands is None:
         bands = max_hamming + 1
     if bands < max_hamming + 1:
@@ -341,20 +356,17 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,
             f" (pigeonhole needs >= {max_hamming + 1} bands)")
     if bands > 64:
         raise ValueError("more bands than bits")
-    chunks = _simhash_band_bounds(bands)
-    key_cols = [(F.shiftrightunsigned(F.col("simhash"), lo)
-                 .bitwiseAND(F.lit((1 << width) - 1))).alias(f"b{i}")
-                for i, (lo, width) in enumerate(chunks)]
-    sh = df.select(F.col(id_col), "simhash", *key_cols)
-    cands = None
-    for i in range(bands):
-        l = sh.select(F.col(id_col).alias("a"), F.col("simhash").alias("ha"),
-                      F.col(f"b{i}").alias("k"))
-        r = sh.select(F.col(id_col).alias("b"), F.col("simhash").alias("hb"),
-                      F.col(f"b{i}").alias("k"))
-        c = l.join(r, "k").filter(F.col("a") < F.col("b")).drop("k")
-        cands = c if cands is None else cands.unionByName(c)
-    cands = cands.distinct()
+    keys = F.array(*[F.shiftrightunsigned(F.col("simhash"), lo)
+                     .bitwiseAND(F.lit((1 << width) - 1))
+                     for lo, width in _simhash_band_bounds(bands)])
+    sh = df.select(F.col(id_col), "simhash",
+                   F.posexplode(keys).alias("band", "k"))
+    l = sh.select(F.col(id_col).alias("a"), F.col("simhash").alias("ha"),
+                  "band", "k")
+    r = sh.select(F.col(id_col).alias("b"), F.col("simhash").alias("hb"),
+                  "band", "k")
+    cands = (l.join(r, ["band", "k"]).filter(F.col("a") < F.col("b"))
+             .select("a", "ha", "b", "hb").distinct())
     ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
     return (cands.withColumn("hamming", ham)
             .filter(F.col("hamming") <= max_hamming)
@@ -1476,6 +1488,58 @@ def decontaminate_bloom(docs: DataFrame, benchmark: DataFrame, n: int = 3,
 # blocked edit-distance similarity join (PassJoin shape)
 # ---------------------------------------------------------------------------
 
+def _passjoin_segments(base: DataFrame, d: int) -> DataFrame:
+    """(_gid, _glen, _gst, _gfrag): the d+1 canonical segments of every
+    string of length >= d+1 in an (id, string, length) frame — an even
+    partition whose first len % (d+1) segments are one char longer;
+    _gst is the segment's 1-based start."""
+    i, s, n = base.columns
+    blen = F.floor(F.col(n) / (d + 1)).cast("int")
+    rem = (F.col(n) % (d + 1)).cast("int")
+    return (base.filter(F.col(n) >= d + 1)
+            .select(i, n,
+                    F.explode(F.transform(
+                        F.sequence(F.lit(0), F.lit(d)),
+                        lambda j: F.struct(
+                            (j * blen + F.least(j, rem) + 1).alias("st"),
+                            F.col(s).substr(
+                                j * blen + F.least(j, rem) + 1,
+                                blen + (j < rem).cast("int")).alias("frag"))))
+                    .alias("_g"))
+            .select(F.col(i).alias("_gid"), F.col(n).alias("_glen"),
+                    F.col("_g.st").alias("_gst"),
+                    F.col("_g.frag").alias("_gfrag")))
+
+
+def _passjoin_probes(base: DataFrame, d: int) -> DataFrame:
+    """(_pid, _plen, _pst, _pfrag): every substring of each string in an
+    (id, string, length) frame at the segment lengths a partner within
+    the +/-d length band can have, with its 1-based start."""
+    i, s, n = base.columns
+    qmin = F.greatest(F.lit(1), F.floor((F.col(n) - d) / (d + 1)).cast("int"))
+    qmax = F.least(F.col(n), F.ceil((F.col(n) + d) / (d + 1)).cast("int"))
+    return (base.select(
+        i, n,
+        F.explode(F.when(qmax >= qmin, F.flatten(F.transform(
+            F.sequence(qmin, qmax),
+            lambda q: F.transform(
+                F.sequence(F.lit(1), (F.col(n) - q + 1).cast("int")),
+                lambda k: F.struct(k.alias("st"),
+                                   F.col(s).substr(k, q).alias("frag"))))))
+            .otherwise(F.array().cast(
+                "array<struct<st:int,frag:string>>"))).alias("_g"))
+        .select(F.col(i).alias("_pid"), F.col(n).alias("_plen"),
+                F.col("_g.st").alias("_pst"),
+                F.col("_g.frag").alias("_pfrag")))
+
+
+def _passjoin_match(d: int) -> Column:
+    """Probe fragment == segment, start shift <= d, length gap <= d."""
+    return ((F.col("_pfrag") == F.col("_gfrag"))
+            & (F.abs(F.col("_pst") - F.col("_gst")) <= d)
+            & (F.abs(F.col("_plen") - F.col("_glen")) <= d))
+
+
 def fuzzy_pairs(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id", max_dist: int = 2,
                 max_len: int = 256, tiny_envelope: int = 4096) -> DataFrame:
@@ -1508,7 +1572,7 @@ def fuzzy_pairs(df: DataFrame, text_col: str = "text",
 
     Output: (id_a, id_b, dist), id_a < id_b, exact distances — so an
     all-pairs oracle agrees row-for-row (blocking is lossless)."""
-    d, B = max_dist, max_dist + 1
+    d = max_dist
     if d < 1:
         raise ValueError("max_dist must be >= 1")
     base = df.select(F.col(id_col).alias("_id"),
@@ -1521,41 +1585,9 @@ def fuzzy_pairs(df: DataFrame, text_col: str = "text",
         raise ValueError(
             f"max len {stats['mx']} exceeds max_len={max_len}: fuzzy_pairs "
             "is a short-string join; use dedup_minhash_lsh for documents")
-    blen = F.floor(F.col("_len") / B).cast("int")
-    rem = (F.col("_len") % B).cast("int")
-    segs = (base.filter(F.col("_len") >= B)
-            .select(F.col("_id").alias("_gid"),
-                    F.col("_len").alias("_glen"),
-                    F.explode(F.transform(
-                        F.sequence(F.lit(0), F.lit(d)),
-                        lambda j: F.struct(
-                            (j * blen + F.least(j, rem) + 1).alias("st"),
-                            F.col("_s").substr(
-                                j * blen + F.least(j, rem) + 1,
-                                blen + (j < rem).cast("int")).alias("frag"))))
-                    .alias("_g"))
-            .select("_gid", "_glen", F.col("_g.st").alias("_gst"),
-                    F.col("_g.frag").alias("_gfrag")))
-    qmin = F.greatest(F.lit(1), F.floor((F.col("_len") - d) / B).cast("int"))
-    qmax = F.least(F.col("_len"),
-                   F.ceil((F.col("_len") + d) / B).cast("int"))
-    probe = (base.select(
-        F.col("_id").alias("_pid"), F.col("_len").alias("_plen"),
-        F.explode(F.when(qmax >= qmin, F.flatten(F.transform(
-            F.sequence(qmin, qmax),
-            lambda q: F.transform(
-                F.sequence(F.lit(1), (F.col("_len") - q + 1).cast("int")),
-                lambda i: F.struct(i.alias("st"),
-                                   F.col("_s").substr(i, q).alias("frag"))))))
-            .otherwise(F.array().cast(
-                "array<struct<st:int,frag:string>>"))).alias("_g"))
-        .select("_pid", "_plen", F.col("_g.st").alias("_pst"),
-                F.col("_g.frag").alias("_pfrag")))
-    cand = (probe.join(segs,
-                       (F.col("_pfrag") == F.col("_gfrag"))
-                       & (F.abs(F.col("_pst") - F.col("_gst")) <= d)
-                       & (F.abs(F.col("_plen") - F.col("_glen")) <= d)
-                       & (F.col("_pid") != F.col("_gid")))
+    cand = (_passjoin_probes(base, d)
+            .join(_passjoin_segments(base, d),
+                  _passjoin_match(d) & (F.col("_pid") != F.col("_gid")))
             .select(F.least("_pid", "_gid").alias("id_a"),
                     F.greatest("_pid", "_gid").alias("id_b"))
             .distinct())
@@ -1584,27 +1616,6 @@ def fuzzy_pairs(df: DataFrame, text_col: str = "text",
 # ---------------------------------------------------------------------------
 # incremental near-dup: persisted index + batch probe
 # ---------------------------------------------------------------------------
-
-def _band_rows(signed: DataFrame, id_col: str, bands: int) -> DataFrame:
-    """(id, band, bucket) rows — the same banding expressions
-    lsh_candidate_pairs buckets with, factored so the persisted dedup
-    index stores exactly the buckets the batch path would compute."""
-    r = F.floor(F.size("sig") / bands).cast("int")
-    return signed.select(
-        F.col(id_col),
-        F.posexplode(F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda bnd: F.hash(F.slice(F.col("sig"), bnd * r + 1, r), bnd)))
-        .alias("band", "bucket"))
-
-
-def _hashed_shingles(df: DataFrame, text_col: str, id_col: str,
-                     shingle_n: int) -> DataFrame:
-    return df.select(
-        F.col(id_col),
-        F.transform(shingles_col(F.col(text_col), shingle_n),
-                    lambda s: F.xxhash64(s)).alias("sh"))
-
 
 def dedup_index_write(df: DataFrame, path, batch_id: int,
                       text_col: str = "text", id_col: str = "doc_id",
@@ -1695,16 +1706,7 @@ def dedup_probe_incremental(spark, new_docs: DataFrame, path,
     cand_new = lsh_candidate_pairs(signed, id_col, params["bands"])
     all_sh = stored_sh.unionByName(new_sh)
     pairs = cand_cross.unionByName(cand_new)
-    j = (pairs
-         .join(all_sh.select(F.col(id_col).alias("a"),
-                             F.col("sh").alias("sa")), "a")
-         .join(new_sh.select(F.col(id_col).alias("b"),
-                             F.col("sh").alias("sb")), "b"))
-    inter = F.size(F.array_intersect("sa", "sb")).cast("double")
-    union = F.size(F.array_union("sa", "sb")).cast("double")
-    return (j.select("a", "b",
-                     F.round(F.when(union > 0, inter / union)
-                             .otherwise(F.lit(0.0)), 6).alias("jaccard"))
+    return (_verify_jaccard(pairs, all_sh, new_sh, id_col)
             .filter(F.col("jaccard") >= threshold))
 
 
@@ -1977,7 +1979,7 @@ def fuzzy_lookup(corpus: DataFrame, gazetteer: DataFrame,
     Output: (corpus_id, gaz_id, dist, is_best); corpus rows with no
     match within max_dist emit nothing.
     """
-    d, B = int(max_dist), int(max_dist) + 1
+    d = int(max_dist)
     if d < 1:
         raise ValueError("fuzzy_lookup: max_dist must be >= 1")
     g = gazetteer.select(F.col(gaz_id).alias("_gid"),
@@ -2004,46 +2006,9 @@ def fuzzy_lookup(corpus: DataFrame, gazetteer: DataFrame,
         raise ValueError(
             f"fuzzy_lookup: corpus max len {mx} exceeds "
             f"max_len={max_len} — short-string contract")
-    blen = F.floor(F.col("_glen") / B).cast("int")
-    rem = (F.col("_glen") % B).cast("int")
-    segs = (g.filter(F.col("_glen") >= B)
-            .select("_gid", "_glen",
-                    F.explode(F.transform(
-                        F.sequence(F.lit(0), F.lit(d)),
-                        lambda j: F.struct(
-                            (j * blen + F.least(j, rem) + 1)
-                            .alias("st"),
-                            F.col("_gs").substr(
-                                j * blen + F.least(j, rem) + 1,
-                                blen + (j < rem).cast("int"))
-                            .alias("frag"))))
-                    .alias("_g"))
-            .select("_gid", "_glen", F.col("_g.st").alias("_gst"),
-                    F.col("_g.frag").alias("_gfrag")))
-    qmin = F.greatest(F.lit(1),
-                      F.floor((F.col("_plen") - d) / B).cast("int"))
-    qmax = F.least(F.col("_plen"),
-                   F.ceil((F.col("_plen") + d) / B).cast("int"))
-    probe = (c.select(
-        "_pid", "_plen",
-        F.explode(F.when(qmax >= qmin, F.flatten(F.transform(
-            F.sequence(qmin, qmax),
-            lambda q: F.transform(
-                F.sequence(F.lit(1),
-                           (F.col("_plen") - q + 1).cast("int")),
-                lambda i: F.struct(
-                    i.alias("st"),
-                    F.col("_ps").substr(i, q).alias("frag"))))))
-            .otherwise(F.array().cast(
-                "array<struct<st:int,frag:string>>"))).alias("_g"))
-        .select("_pid", "_plen", F.col("_g.st").alias("_pst"),
-                F.col("_g.frag").alias("_pfrag")))
-    cand = (probe.join(
-        F.broadcast(segs),
-        (F.col("_pfrag") == F.col("_gfrag"))
-        & (F.abs(F.col("_pst") - F.col("_gst")) <= d)
-        & (F.abs(F.col("_plen") - F.col("_glen")) <= d))
-        .select("_pid", "_gid").distinct())
+    cand = (_passjoin_probes(c, d)
+            .join(F.broadcast(_passjoin_segments(g, d)), _passjoin_match(d))
+            .select("_pid", "_gid").distinct())
     main = (cand
             .join(c.select("_pid", "_ps"), "_pid")
             .join(F.broadcast(g.select("_gid", "_gs")), "_gid")

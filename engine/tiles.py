@@ -96,44 +96,25 @@ def kring_smooth(density: DataFrame, cfg: EngineConfig = DEFAULT,
 
 def rollup_pyramid(density: DataFrame, cfg: EngineConfig = DEFAULT,
                    levels: tuple[int, ...] | None = None,
-                   base_level: int | None = None,
-                   hierarchical: bool = False) -> DataFrame:
+                   base_level: int | None = None) -> DataFrame:
     """Tile pyramid: union of per-level rollups (level, cell_id, mass_s).
 
     Parent ids are pure bit math (parent_cell_col) — stays in codegen; each
-    level is one partial-aggregated shuffle of the already-small raster.
-
-    ``hierarchical=True`` aggregates each coarser level from the NEAREST
-    already-computed finer level (the coarsest of the finer ones, the
-    cheapest input) instead of from the base: total aggregation input
-    drops from n_levels x base to ~1.33 x base (the classic pyramid build
-    — the shape that matters when the base raster is corpus-sized).
-    Levels are computed in the order given, so they must be ordered fine
-    to coarse for this to take effect; coarse-to-fine levels find no
-    finer level computed yet and aggregate from the base.  Only exact for
-    integer-valued masses (sums of sums regroup float rounding), which is
-    why the default stays False: the float-mass path's per-cell values
-    remain bit-identical to the flat form, and the integer-ms callers opt
-    in.
+    coarser level is one partial-aggregated shuffle of the base raster
+    (never of another level, so float masses are not re-rounded through
+    sums of sums).
     """
     lvls = levels if levels is not None else cfg.tile_levels
     base = base_level if base_level is not None else cfg.cell_level
     out = None
-    done: list[tuple[int, DataFrame]] = []
     for lvl in lvls:
         if lvl == base:
             d = density.select(F.lit(lvl).alias("level"), "cell_id", "mass_s")
         else:
-            src, src_lvl = density, base
-            if hierarchical:
-                finer = [(sl, sd) for sl, sd in done if sl > lvl]
-                if finer:
-                    src_lvl, src = min(finer, key=lambda t: t[0] - lvl)
-            d = (src
+            d = (density
                  .groupBy(parent_cell_col(F.col("cell_id"), lvl).alias("cell_id"))
                  .agg(F.sum("mass_s").alias("mass_s"))
                  .select(F.lit(lvl).alias("level"), "cell_id", "mass_s"))
-        done.append((lvl, d.select("cell_id", "mass_s")))
         out = d if out is None else out.unionByName(d)
     return out
 

@@ -709,6 +709,20 @@ def test_grid_join_generates_each_pair_once(spark, build):
     assert "HashAggregate" not in plan.split("Join")[0], plan
 
 
+def test_simhash_near_pairs_plans_one_band_join(spark):
+    """SimHash banding posexplodes each doc into its (band, key) rows and
+    self-joins them once on (band, key): one join for all 9 bands of
+    max_hamming 8, not one join per band."""
+    import re
+    from engine import text
+    docs = spark.createDataFrame(
+        [(i, f"w{i} w{i % 7} shared words") for i in range(20)],
+        ["doc_id", "text"])
+    out = text.simhash_near_pairs(text.simhash(docs), max_hamming=8)
+    plan = plan_str(out, "simple")
+    assert len(re.findall(r"\wJoin", plan)) == 1, plan
+
+
 def test_pca_projection_is_map_only(spark):
     """PCA's projection claim: after the (tiny, driver-side) Gram solve,
     scoring the corpus is MAP-ONLY — the final projection plan contains

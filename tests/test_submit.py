@@ -51,3 +51,20 @@ def test_submit_pipeline_and_resume(spark, unit_pages_sdf, tmp_path):
     eps2 = {tuple(r) for r in
             spark.read.parquet(str(wd / "episodes")).collect()}
     assert eps2 == eps1
+
+
+def test_workers_import_path_holds_engine_root(spark):
+    """get_spark puts the directory holding the `engine` package on the
+    Python workers' PYTHONPATH, so Arrow kernels that call engine
+    functions import it whatever directory the driver started in."""
+    import os
+
+    import pandas as pd
+
+    def read_path(batches):
+        for _ in batches:
+            yield pd.DataFrame({"p": [os.environ.get("PYTHONPATH", "")]})
+
+    root = str(Path(submit.__file__).resolve().parent.parent)
+    got = spark.range(1).mapInPandas(read_path, "p string").first()["p"]
+    assert root in got.split(os.pathsep), got

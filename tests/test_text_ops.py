@@ -363,9 +363,9 @@ def test_min_label_roots_matches_union_find():
 
 def test_dedup_clusters_partition_and_reps(spark, docs):
     """dedup_clusters: every doc assigned, representative = min id of its
-    component, kept set = one per cluster, and dedup_remove returns
-    exactly the kept docs.  Cross-checked against a single-threaded
-    union-find over the engine's own verified pair list."""
+    component, kept set = one per cluster.  Cross-checked against a
+    single-threaded union-find over the engine's own verified pair
+    list."""
     pairs = text.dedup_minhash(docs, threshold=0.5).toPandas()
     out = text.dedup_clusters(docs, threshold=0.5).toPandas()
     n_docs = docs.count()
@@ -389,8 +389,6 @@ def test_dedup_clusters_partition_and_reps(spark, docs):
     assert got == expect
     kept = set(out[out["is_kept"]]["doc_id"])
     assert kept == set(expect[d] for d in expect)
-    removed = text.dedup_remove(docs, threshold=0.5).toPandas()
-    assert set(removed["doc_id"]) == kept
 
 
 def test_sample_stratified_deterministic_under_repartition(spark):
@@ -1155,11 +1153,11 @@ def _lev(a, b):
     return dp[-1]
 
 
-def test_fuzzy_pairs_equals_all_pairs(spark):
-    """PassJoin blocking is LOSSLESS: over a seeded corpus mixing exact
-    dups, 1-2-edit variants, tiny strings and the empty string, the
-    blocked join returns exactly the brute-force all-pairs result."""
-    import itertools
+@pytest.fixture(scope="module")
+def fuzzy_corpus(spark):
+    """Seeded 60 strings mixing exact dups, 1-2-edit variants, tiny
+    strings and the empty string, and fuzzy_pairs' sorted rows over them
+    at max_dist 1, 2 and 3."""
     import random
     rng = random.Random(7)
     words = ["spark", "spork", "stark", "shark", "sharp", "parse",
@@ -1167,12 +1165,36 @@ def test_fuzzy_pairs_equals_all_pairs(spark):
     rows = [(i, rng.choice(words) + rng.choice(["", "s", "x", "ing"]))
             for i in range(60)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
+    pairs = {d: sorted((r.id_a, r.id_b, r.dist)
+                       for r in text.fuzzy_pairs(df, max_dist=d).collect())
+             for d in (1, 2, 3)}
+    return rows, df, pairs
+
+
+def test_fuzzy_pairs_equals_all_pairs(fuzzy_corpus):
+    """PassJoin blocking is LOSSLESS: over the seeded corpus the blocked
+    join returns exactly the brute-force all-pairs result."""
+    import itertools
+    rows, _, got = fuzzy_corpus
     for d in (1, 2, 3):
-        got = sorted((r.id_a, r.id_b, r.dist)
-                     for r in text.fuzzy_pairs(df, max_dist=d).collect())
         want = sorted((a, b, _lev(sa, sb))
                       for (a, sa), (b, sb) in itertools.combinations(rows, 2)
                       if _lev(sa, sb) <= d)
+        assert got[d] == want, d
+
+
+def test_fuzzy_lookup_self_equals_fuzzy_pairs(fuzzy_corpus):
+    """The two PassJoin callers share their blocking: looking the seeded
+    corpus up against itself gives fuzzy_pairs' pairs in both
+    orientations plus every string matching itself at distance 0."""
+    rows, df, pairs = fuzzy_corpus
+    gaz = df.select(F.col("doc_id").alias("gaz_id"),
+                    F.col("text").alias("name"))
+    for d in (1, 2):
+        got = sorted((r.doc_id, r.gaz_id, r.dist) for r in
+                     text.fuzzy_lookup(df, gaz, max_dist=d).collect())
+        want = sorted(pairs[d] + [(b, a, k) for a, b, k in pairs[d]]
+                      + [(i, i, 0) for i, _ in rows])
         assert got == want, d
 
 
@@ -1436,15 +1458,6 @@ def test_fuzzy_lookup_matches_brute(spark):
     from pyspark.sql import functions as F
     from engine import text
 
-    def lev(a, b):
-        dp = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            prev, dp[0] = dp[0], i
-            for j, cb in enumerate(b, 1):
-                prev, dp[j] = dp[j], min(dp[j] + 1, dp[j - 1] + 1,
-                                         prev + (ca != cb))
-        return dp[len(b)]
-
     gaz = [(0, "springfield"), (1, "shelbyville"), (2, "ogdenville"),
            (3, "np"), (4, "x")]          # two tiny entries (len <= 2)
     corp = [(100, "springfeld"),          # deletion typo -> 0
@@ -1459,8 +1472,8 @@ def test_fuzzy_lookup_matches_brute(spark):
            for r in text.fuzzy_lookup(cdf, gdf, max_dist=2).collect()}
     brute = {}
     for did, t in corp:
-        ms = sorted((lev(t, n), gid) for gid, n in gaz
-                    if lev(t, n) <= 2)
+        ms = sorted((_lev(t, n), gid) for gid, n in gaz
+                    if _lev(t, n) <= 2)
         for i, (dd, gid) in enumerate(ms):
             brute[(did, gid)] = (dd, i == 0)
     assert got == brute
