@@ -35,10 +35,6 @@ from .config import DEFAULT, EngineConfig
 from .functions import (haversine_m_col, make_cell_encode_udf,
                         make_cell_neighbors_udf, parent_cell_col)
 
-EPISODE_SCHEMA = ("host string, seq int, start_ts timestamp, end_ts timestamp, "
-                  "kind string, location_id int")
-
-
 # Quadratic-ST cells are not uniform: the shortest cell edge is ~0.6x the
 # (pi/2)/2^level nominal edge (S2 quadratic metrics: kMinEdge/kMaxEdge).
 # Sizing the kNN index by the nominal edge let points ~radius apart fall

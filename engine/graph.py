@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .envelope import require, wide
+
 RANK_SCALE = 1_000_000_000  # integer micro-rank units per node
 DAMP_NUM, DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio
 PAGERANK_ITERS = 6
@@ -369,12 +371,13 @@ def link_prediction_cn(edges: DataFrame, src: str = "src",
            .unionByName(ce.select(F.col("b").alias("c"),
                                   F.col("a").alias("n"))))
     deg = adj.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    total = deg.agg(
-        F.sum(F.col("deg") * (F.col("deg") - 1) / 2)).collect()[0][0]
-    if total is not None and total > max_wedges:
-        raise ValueError(
-            f"link_prediction_cn: Sigma C(deg,2) = {int(total)} wedges "
-            f"exceeds max_wedges={max_wedges}; cap hub degrees upstream")
+    # twice Sigma C(deg,2), exact
+    require(deg, (
+        F.sum(wide("deg") * (wide("deg") - 1)),
+        lambda w2: w2 > 2 * max_wedges,
+        lambda w2: f"link_prediction_cn: Sigma C(deg,2) = {w2 // 2} wedges "
+                   f"exceeds max_wedges={max_wedges}; cap hub degrees "
+                   f"upstream"))
     l = adj.select(F.col("c"), F.col("n").alias("u"))
     r = adj.select(F.col("c"), F.col("n").alias("w"))
     cn = (l.join(r, "c")
@@ -424,14 +427,11 @@ def sssp_rounds(edges: DataFrame, sources: DataFrame, rounds: int,
          .groupBy("src", "dst").agg(F.min("w").alias("w"))
          .repartition(F.col("src")).persist())
     try:
-        lim = e.agg(F.min("w"), F.max("w")).collect()[0]
-        wmin, wmax = lim[0], lim[1]
-        if wmin is not None and int(wmin) < 0:
-            raise ValueError("sssp_rounds: negative edge weight present")
-        if wmax is not None and rounds * int(wmax) >= (1 << 62):
-            raise ValueError(
-                f"sssp_rounds: rounds*max_w = {rounds * int(wmax)} "
-                f"breaches the int64 envelope (< 2^62)")
+        require(e, (F.min("w"), lambda lo: lo < 0,
+                    "sssp_rounds: negative edge weight present"), (
+            F.max("w"), lambda hi: rounds * hi >= (1 << 62),
+            lambda hi: f"sssp_rounds: rounds*max_w = {rounds * hi} "
+                       f"breaches the int64 envelope (< 2^62)"))
         dist = (sources.select(F.col("node").cast("long").alias("node"))
                 .distinct()
                 .select("node", F.lit(0).cast("long").alias("dist"))
@@ -482,15 +482,11 @@ def catchment_rounds(edges: DataFrame, sources: DataFrame, rounds: int,
          .groupBy("src", "dst").agg(F.min("w").alias("w"))
          .repartition(F.col("src")).persist())
     try:
-        lim = e.agg(F.min("w"), F.max("w")).collect()[0]
-        wmin, wmax = lim[0], lim[1]
-        if wmin is not None and int(wmin) < 0:
-            raise ValueError(
-                "catchment_rounds: negative edge weight present")
-        if wmax is not None and rounds * int(wmax) >= (1 << 62):
-            raise ValueError(
-                f"catchment_rounds: rounds*max_w = "
-                f"{rounds * int(wmax)} breaches the int64 envelope")
+        require(e, (F.min("w"), lambda lo: lo < 0,
+                    "catchment_rounds: negative edge weight present"), (
+            F.max("w"), lambda hi: rounds * hi >= (1 << 62),
+            lambda hi: f"catchment_rounds: rounds*max_w = {rounds * hi} "
+                       f"breaches the int64 envelope"))
         dist = (sources.select(F.col("node").cast("long").alias("node"))
                 .distinct()
                 .select("node", F.lit(0).cast("long").alias("dist"),

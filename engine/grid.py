@@ -26,6 +26,8 @@ from itertools import product
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .envelope import require
+
 # wide enough for the difference of any two longs, plus one
 _SPAN = "decimal(21,0)"
 
@@ -98,14 +100,12 @@ def fence_cells(fences: DataFrame, fence_id: str, cx_col: str, cy_col: str,
                        F.col(cx_col).cast("long").alias("_cx"),
                        F.col(cy_col).cast("long").alias("_cy"),
                        F.col(r_col).cast("long").alias("_r"))
-    lo, hi = fr.agg(F.min("_r"), F.max("_r")).collect()[0]
-    if lo is None:
-        raise ValueError(f"{op}: fences is empty")
-    if lo < 1 or hi > (1 << 29):
-        raise ValueError(
-            f"{op}: fence radii must be in [1, 2^29] so dist² stays a "
+    rmsg = (f"{op}: fence radii must be in [1, 2^29] so dist² stays a "
             f"provable int64")
-    cw = int(hi)
+    _, _, cw = require(fr, (F.count("_r"), lambda n: n == 0,
+                            f"{op}: fences is empty"),
+                       (F.min("_r"), lambda lo: lo < 1, rmsg),
+                       (F.max("_r"), lambda hi: hi > (1 << 29), rmsg))
     cx, cy, r = F.col("_cx"), F.col("_cy"), F.col("_r")
     cells = explode_box(fr, ("_gx", "_gy"),
                         (bin_floor(cx - r, cw), bin_floor(cy - r, cw)),

@@ -11,10 +11,12 @@ against the fused kernel in tests.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from decimal import Decimal
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .envelope import beyond, require, wide, wide_abs
 from .functions import epoch_s
 from .grid import (bin_floor, box_cell_count, explode_box,
                    explode_neighbours, fence_cells)
@@ -799,12 +801,13 @@ def zscore_outliers(df: DataFrame, keys: Sequence[str], val_col: str,
         F.count(F.lit(1)).cast("long").alias("_n"),
         F.sum(v).cast("long").alias("_s"),
         F.sum(v * v).cast("long").alias("_ss"),
-        F.max(F.abs(v)).cast("long").alias("_amax"))
-    env = stats.agg(F.max(F.col("_n") * F.col("_amax"))).collect()[0][0]
-    if env is not None and k * env >= (1 << 31):
-        raise ValueError(
-            f"zscore_outliers: k*n*max|x| = {k * env} breaches the int64 "
-            f"envelope (< 2^31); shrink groups or rescale values")
+        F.max(wide_abs(v)).alias("_amax"))
+    require(stats, (
+        F.max(wide("_n") * F.col("_amax")),
+        lambda env: k * env >= (1 << 31),
+        lambda env: f"zscore_outliers: k*n*max|x| = {k * env} breaches "
+                    f"the int64 envelope (< 2^31); shrink groups or "
+                    f"rescale values"))
     j = df.join(stats, list(keys))
     lhs = F.col("_n") * v - F.col("_s")
     rhs_var = F.col("_n") * F.col("_ss") - F.col("_s") * F.col("_s")
@@ -1013,15 +1016,14 @@ def linreg_per_group(df: DataFrame, keys: Sequence[str], x_col: str,
         F.sum(y).cast("long").alias("sy"),
         F.sum(x * x).cast("long").alias("sxx"),
         F.sum(x * y).cast("long").alias("sxy"),
-        F.max(F.abs(x)).cast("long").alias("_ax"),
-        F.max(F.abs(y)).cast("long").alias("_ay"))
-    env = st.agg(F.max(
-        F.greatest(F.col("n") * F.col("_ax"),
-                   F.col("n") * F.col("_ay")))).collect()[0][0]
-    if env is not None and env >= (1 << 31):
-        raise ValueError(
-            f"linreg_per_group: max(n*max|x|, n*max|y|) = {env} breaches "
-            f"the int64 envelope (< 2^31); rebase/rescale x or y")
+        F.max(wide_abs(x)).alias("_ax"),
+        F.max(wide_abs(y)).alias("_ay"))
+    require(st, (
+        F.max(wide("n") * F.greatest("_ax", "_ay")),
+        lambda env: env >= (1 << 31),
+        lambda env: f"linreg_per_group: max(n*max|x|, n*max|y|) = {env} "
+                    f"breaches the int64 envelope (< 2^31); "
+                    f"rebase/rescale x or y"))
     den = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     slope = F.when(den != 0, num.cast("double") / den.cast("double"))
@@ -1120,15 +1122,18 @@ def polygon_area_centroid(df: DataFrame, poly_keys: Sequence[str],
                   (y - F.min(y).over(wp)).alias("_yr"),
                   F.min(x).over(wp).alias("_mx"),
                   F.min(y).over(wp).alias("_my"))
-    env = (d.groupBy(*poly_keys)
-           .agg(F.max(F.greatest("_xr", "_yr")).alias("_ext"),
-                F.count(F.lit(1)).alias("_len"))
-           .agg(F.max("_ext"), F.max("_len")).collect()[0])
-    if env[0] is not None and (env[0] >= (1 << 14) or env[1] >= (1 << 16)):
-        raise ValueError(
-            f"polygon_area_centroid: rebased extent {env[0]} / ring "
-            f"length {env[1]} breach the int64 envelope "
-            f"(extent < 2^14, length < 2^16); rescale coordinates")
+    wx, wy = wide(x), wide(y)
+    ext = F.greatest(wx - F.min(wx).over(wp), wy - F.min(wy).over(wp))
+    rings = (df.select(*poly_keys, ext.alias("_ext")).groupBy(*poly_keys)
+             .agg(F.max("_ext").alias("_ext"),
+                  F.count(F.lit(1)).alias("_len")))
+    require(rings, (
+        F.struct(F.max("_ext").alias("ext"), F.max("_len").alias("len")),
+        lambda e: e.ext is not None
+        and (e.ext >= (1 << 14) or e.len >= (1 << 16)),
+        lambda e: f"polygon_area_centroid: rebased extent {e.ext} / ring "
+                  f"length {e.len} breach the int64 envelope "
+                  f"(extent < 2^14, length < 2^16); rescale coordinates"))
     x2 = F.coalesce(F.lead("_xr").over(wo), F.first("_xr").over(wfull))
     y2 = F.coalesce(F.lead("_yr").over(wo), F.first("_yr").over(wfull))
     cross = F.col("_xr") * y2 - x2 * F.col("_yr")
@@ -1178,13 +1183,14 @@ def cusum_alarm(df: DataFrame, keys: Sequence[str], ts_col: str,
     y = F.col(val_col).cast("long") - F.lit(int(drift_k))
     ob = [F.unix_micros(F.col(ts_col).cast("timestamp"))] + \
          [F.col(c) for c in (order or [])]
-    env = (df.groupBy(*keys)
-           .agg((F.count(F.lit(1)) * F.max(F.abs(y))).alias("_b"))
-           .agg(F.max("_b")).collect()[0][0])
-    if env is not None and env >= (1 << 62):
-        raise ValueError(
-            f"cusum_alarm: n*max|x-k| = {env} breaches the int64 "
-            f"envelope (< 2^62); rescale values")
+    wy = wide(F.col(val_col).cast("long")) - int(drift_k)
+    require(df.groupBy(*keys)
+            .agg((wide(F.count(F.lit(1))) * F.max(wide_abs(wy)))
+                 .alias("_b")), (
+        F.max("_b"),
+        lambda env: env >= (1 << 62),
+        lambda env: f"cusum_alarm: n*max|x-k| = {env} breaches the int64 "
+                    f"envelope (< 2^62); rescale values"))
     d = (df.select(*keys, *[o.alias(f"_ob{i}") for i, o in enumerate(ob)],
                    y.alias("_y"))
          .withColumn("_p", F.sum("_y").over(
@@ -1302,11 +1308,11 @@ def simplify_radial(df: DataFrame, keys: Sequence[str],
         raise ValueError("simplify_radial: eps must be positive")
     x = F.col(x_col).cast("long")
     y = F.col(y_col).cast("long")
-    env = df.agg(F.max(F.greatest(F.abs(x), F.abs(y)))).collect()[0][0]
-    if env is not None and env >= (1 << 30):
-        raise ValueError(
-            f"simplify_radial: max |coord| = {env} breaches the int64 "
-            f"envelope (< 2^30); rescale coordinates")
+    require(df, (
+        F.max(F.greatest(wide_abs(x), wide_abs(y))),
+        lambda env: env >= (1 << 30),
+        lambda env: f"simplify_radial: max |coord| = {env} breaches the "
+                    f"int64 envelope (< 2^30); rescale coordinates"))
     dts = dict(df.dtypes)
     ob = [(F.unix_micros(F.col(c).cast("timestamp"))
            if dts.get(c, "").startswith("timestamp")
@@ -1471,14 +1477,12 @@ def gini_coefficient(df: DataFrame, keys: Sequence[str],
     pre = df.groupBy(*keys).agg(
         F.count(F.lit(1)).alias("_n"), F.max(v).alias("_mx"),
         F.min(v).alias("_mn"))
-    env = pre.agg(F.max(F.col("_n") * F.col("_mx")),
-                  F.min("_mn")).collect()[0]
-    if env[1] is not None and env[1] < 0:
-        raise ValueError("gini_coefficient: values must be non-negative")
-    if env[0] is not None and env[0] >= (1 << 31):
-        raise ValueError(
-            f"gini_coefficient: n*max(x) = {env[0]} breaches the int64 "
-            f"envelope (< 2^31); rescale values")
+    require(pre, (F.min("_mn"), lambda mn: mn < 0,
+                  "gini_coefficient: values must be non-negative"), (
+        F.max(wide("_n") * F.col("_mx")),
+        lambda env: env >= (1 << 31),
+        lambda env: f"gini_coefficient: n*max(x) = {env} breaches the "
+                    f"int64 envelope (< 2^31); rescale values"))
     w = Window.partitionBy(*keys).orderBy("_v")
     d = df.select(*keys, v.alias("_v")) \
           .withColumn("_r", F.row_number().over(w))
@@ -1806,13 +1810,12 @@ def autocorr_lag(df: DataFrame, keys: Sequence[str], ts_col: str,
         F.sum(F.col("_x") * F.col("_x")).cast("long").alias("sxx"),
         F.sum(F.col("_y") * F.col("_y")).cast("long").alias("syy"),
         F.sum(F.col("_x") * F.col("_y")).cast("long").alias("sxy"),
-        F.max(F.greatest(F.abs(F.col("_x")), F.abs(F.col("_y"))))
-         .cast("long").alias("_am"))
-    env = st.agg(F.max(F.col("n") * F.col("_am"))).collect()[0][0]
-    if env is not None and env >= (1 << 31):
-        raise ValueError(
-            f"autocorr_lag: n*max|x| = {env} breaches the int64 envelope "
-            f"(< 2^31); rescale values")
+        F.max(F.greatest(wide_abs("_x"), wide_abs("_y"))).alias("_am"))
+    require(st, (
+        F.max(wide("n") * F.col("_am")),
+        lambda env: env >= (1 << 31),
+        lambda env: f"autocorr_lag: n*max|x| = {env} breaches the int64 "
+                    f"envelope (< 2^31); rescale values"))
     vx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
     num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
@@ -1847,13 +1850,13 @@ def basket_pairs(df: DataFrame, basket_col: str, item_col: str,
     m = df.select(F.col(basket_col).alias("_b"),
                   F.col(item_col).alias("_i")).distinct()
     sizes = m.groupBy("_b").agg(F.count(F.lit(1)).alias("_sz"))
-    top = sizes.agg(F.max("_sz"), F.count(F.lit(1))).collect()[0]
-    if top[0] is not None and top[0] > max_basket:
-        raise ValueError(
-            f"basket_pairs: largest basket has {top[0]} items "
-            f"(> max_basket={max_basket}); pair fan-out is quadratic in "
-            f"basket size — cap or pre-filter degenerate baskets")
-    n_baskets = int(top[1])
+    _, n_baskets = require(sizes, (
+        F.max("_sz"),
+        lambda sz: sz > max_basket,
+        lambda sz: f"basket_pairs: largest basket has {sz} items "
+                   f"(> max_basket={max_basket}); pair fan-out is "
+                   f"quadratic in basket size — cap or pre-filter "
+                   f"degenerate baskets"), F.count(F.lit(1)))
     supp = m.groupBy("_i").agg(F.count(F.lit(1)).cast("long").alias("_n"))
     a = m.select(F.col("_b"), F.col("_i").alias("item_a"))
     b = m.select(F.col("_b"), F.col("_i").alias("item_b"))
@@ -2156,11 +2159,9 @@ def merge_intervals(df: DataFrame, keys: Sequence[str], start_col: str,
     group agg; only (keys, start, end) ride the exchange.
     """
     s, e = F.col(start_col).cast("long"), F.col(end_col).cast("long")
-    bad = df.agg(F.max(F.when(e < s, 1).otherwise(0))).collect()[0][0]
-    if bad:
-        raise ValueError(
-            "merge_intervals: inverted interval (end < start) present — "
-            "fix or filter upstream")
+    require(df, (F.bool_or(e < s), bool,
+                 "merge_intervals: inverted interval (end < start) "
+                 "present — fix or filter upstream"))
     d = df.select(*keys, s.alias("_s"), e.alias("_e"))
     wprev = (Window.partitionBy(*keys).orderBy("_s", "_e")
              .rowsBetween(Window.unboundedPreceding, -1))
@@ -2323,12 +2324,12 @@ def theil_sen_slope(df: DataFrame, keys: Sequence[str], x_col: str,
                   F.col(y_col).cast("long").alias("_y"))
     stats = d.groupBy(*keys).agg(F.count(F.lit(1)).cast("long")
                                  .alias("n_pts"))
-    worst = stats.agg(F.max("n_pts")).collect()[0][0]
-    if worst is not None and worst > max_points:
-        raise ValueError(
-            f"theil_sen_slope: a key group has {worst} points "
-            f"(> max_points={max_points}) — the pairwise fan-out is "
-            f"quadratic; sample per key upstream")
+    require(stats, (
+        F.max("n_pts"),
+        lambda worst: worst > max_points,
+        lambda worst: f"theil_sen_slope: a key group has {worst} points "
+                      f"(> max_points={max_points}) — the pairwise "
+                      f"fan-out is quadratic; sample per key upstream"))
     a = d.select(*keys, F.col("_i").alias("_ia"), F.col("_x").alias("_xa"),
                  F.col("_y").alias("_ya"))
     b = d.select(*keys, F.col("_i").alias("_ib"), F.col("_x").alias("_xb"),
@@ -2409,15 +2410,11 @@ def trip_stats(df: DataFrame, keys: Sequence[str], ts_col: str,
                   F.col(tiebreak).alias("_tb"),
                   F.col(lat_col).alias("_lat"), F.col(lon_col).alias("_lon"))
     if metric == "euclid":
-        lim = 1 << 25
-        bad = d.agg(F.max(F.when(
-            (F.abs(F.col("_lat").cast("long")) > lim)
-            | (F.abs(F.col("_lon").cast("long")) > lim), 1)
-            .otherwise(0))).collect()[0][0]
-        if bad:
-            raise ValueError(
-                "trip_stats: euclid metric needs |coord| <= 2^25 so "
-                "dist2 -> double stays exact; rescale upstream")
+        require(d, (
+            F.bool_or(beyond(1 << 25, F.col("_lat").cast("long"),
+                             F.col("_lon").cast("long"))), bool,
+            "trip_stats: euclid metric needs |coord| <= 2^25 so "
+            "dist2 -> double stays exact; rescale upstream"))
         d = d.select(*keys, "_ts", "_tb",
                      F.col("_lat").cast("long").alias("_lat"),
                      F.col("_lon").cast("long").alias("_lon"))
@@ -2439,24 +2436,25 @@ def trip_stats(df: DataFrame, keys: Sequence[str], ts_col: str,
            .groupBy(*keys)
            .agg(F.count(F.lit(1)).cast("long").alias("n_points"),
                 F.count("_leg_um").cast("long").alias("n_legs"),
-                F.coalesce(F.sum("_leg_um"), F.lit(0)).cast("long")
+                # decimal: a long sum could overflow under ANSI while
+                # the check below materialises the persisted agg
+                F.coalesce(F.sum(wide("_leg_um")), F.lit(0))
                 .alias("path_um"),
                 F.max("_leg_um").alias("_max_leg"),
                 F.min(F.struct("_ts", "_tb", "_lat", "_lon")).alias("_f"),
                 F.max(F.struct("_ts", "_tb", "_lat", "_lon")).alias("_l")))
     agg = agg.persist()
     try:
-        worst = agg.agg(F.max(F.col("n_legs") * F.col("_max_leg"))
-                        ).collect()[0][0]
-        if worst is not None and worst > (1 << 62):
-            raise ValueError(
-                "trip_stats: n_legs * max_leg_um exceeds 2^62 for some "
-                "key — the exact BIGINT path sum could wrap; split "
-                "traces upstream")
+        require(agg, (
+            F.max(wide("n_legs") * F.col("_max_leg")),
+            lambda worst: worst > (1 << 62),
+            "trip_stats: n_legs * max_leg_um exceeds 2^62 for some "
+            "key — the exact BIGINT path sum could wrap; split "
+            "traces upstream"))
         net = leg_tree(F.col("_f._lat"), F.col("_f._lon"),
                        F.col("_l._lat"), F.col("_l._lon"))
-        out = (agg.withColumn("net_disp_m",
-                              F.when(F.col("n_legs") > 0, net))
+        out = (agg.withColumn("path_um", F.col("path_um").cast("long"))
+               .withColumn("net_disp_m", F.when(F.col("n_legs") > 0, net))
                .withColumn(
                    "straightness",
                    F.when(F.col("path_um") > 0,
@@ -2523,20 +2521,14 @@ def bbox_overlap_join(a: DataFrame, b: DataFrame, keys: Sequence[str],
                | (F.col(f"{px}y2") < F.col(f"{px}y1")))
         lo = [bin_floor(F.col(f"{px}{c}1"), cs) for c in "xy"]
         hi = [bin_floor(F.col(f"{px}{c}2"), cs) for c in "xy"]
-        # inverted-box and worst-fanout checks fused into ONE scan
-        chk = d.agg(F.max(F.when(inv, 1).otherwise(0)).alias("bad"),
-                    F.max(box_cell_count(lo, hi, max_cells))
-                    .alias("worst")).collect()[0]
-        if chk["bad"]:
-            raise ValueError(
-                "bbox_overlap_join: inverted box (x2 < x1 or y2 < y1) "
-                "present — fix or filter upstream")
-        worst = chk["worst"]
-        if worst is not None and worst > max_cells:
-            raise ValueError(
-                f"bbox_overlap_join: a box covers more than "
-                f"max_cells={max_cells} grid cells — coarsen `cell` or "
-                f"split giant boxes upstream")
+        require(d, (F.bool_or(inv), bool,
+                    "bbox_overlap_join: inverted box (x2 < x1 or y2 < y1) "
+                    "present — fix or filter upstream"), (
+            F.max(box_cell_count(lo, hi, max_cells)),
+            lambda worst: worst > max_cells,
+            f"bbox_overlap_join: a box covers more than "
+            f"max_cells={max_cells} grid cells — coarsen `cell` or "
+            f"split giant boxes upstream"))
         return explode_box(d, ("_cx", "_cy"), lo, hi)
 
     aa = prep(a, a_box, a_id, "_a", carry_a)
@@ -2590,15 +2582,10 @@ def segment_intersect_join(a: DataFrame, b: DataFrame,
     def prep(df: DataFrame, seg: Sequence[str], ident: str,
              px: str) -> DataFrame:
         x1, y1, x2, y2 = (F.col(c).cast("long") for c in seg)
-        lim = 1 << 30
-        bad = df.agg(F.max(F.when(
-            (F.abs(x1) > lim) | (F.abs(y1) > lim)
-            | (F.abs(x2) > lim) | (F.abs(y2) > lim), 1).otherwise(0)
-        )).collect()[0][0]
-        if bad:
-            raise ValueError(
-                "segment_intersect_join: |coordinate| exceeds 2^30 — "
-                "cross products could overflow int64; rescale upstream")
+        require(df, (F.bool_or(beyond(1 << 30, x1, y1, x2, y2)), bool,
+                     "segment_intersect_join: |coordinate| exceeds 2^30 — "
+                     "cross products could overflow int64; rescale "
+                     "upstream"))
         return df.select(
             *keys, F.col(ident),
             x1.alias(f"{px}ex1"), y1.alias(f"{px}ey1"),
@@ -2684,29 +2671,23 @@ def rect_union_area(df: DataFrame, keys: Sequence[str],
     x1, y1, x2, y2 = (F.col(c).cast("long") for c in box)
     d = df.select(*keys, x1.alias("_x1"), y1.alias("_y1"),
                   x2.alias("_x2"), y2.alias("_y2"))
-    lim = 1 << 30
-    # envelope + group-size checks fused into the one key-sized
-    # validation aggregation (one scan, was two)
     badrow = ((F.col("_x2") < F.col("_x1")) | (F.col("_y2") < F.col("_y1"))
-              | (F.greatest(F.abs(F.col("_x1")), F.abs(F.col("_y1")),
-                            F.abs(F.col("_x2")), F.abs(F.col("_y2")))
-                 > lim))
+              | beyond(1 << 30, *(F.col(c) for c in
+                                  ("_x1", "_y1", "_x2", "_y2"))))
     stats = (d.groupBy(*keys)
              .agg(F.count(F.lit(1)).cast("long").alias("n_rects"),
-                  F.max(F.when(badrow, 1).otherwise(0)).alias("_b")))
-    chk = stats.agg(F.max("_b").alias("bad"),
-                    F.max("n_rects").alias("worst")).collect()[0]
+                  F.bool_or(badrow).alias("_b")))
+    require(stats, (
+        F.bool_or("_b"), bool,
+        "rect_union_area: inverted box or |coord| > 2^30 present — "
+        "the union area must stay a provable int64; fix upstream"), (
+        F.max("n_rects"),
+        lambda worst: worst > max_rects,
+        lambda worst: f"rect_union_area: a key group has {worst} boxes "
+                      f"(> max_rects={max_rects}) — the strip sweep is "
+                      f"quadratic in the worst case; rasterize instead "
+                      f"at this scale"))
     stats = stats.select(*keys, "n_rects")
-    if chk["bad"]:
-        raise ValueError(
-            "rect_union_area: inverted box or |coord| > 2^30 present — "
-            "the union area must stay a provable int64; fix upstream")
-    worst = chk["worst"]
-    if worst is not None and worst > max_rects:
-        raise ValueError(
-            f"rect_union_area: a key group has {worst} boxes "
-            f"(> max_rects={max_rects}) — the strip sweep is quadratic "
-            f"in the worst case; rasterize instead at this scale")
     # drop degenerate (empty) boxes: they add no area and no strips
     live = d.filter((F.col("_x2") > F.col("_x1"))
                     & (F.col("_y2") > F.col("_y1")))
@@ -2770,12 +2751,10 @@ def comovement_pairs(df: DataFrame, id_col: str, t_col: str,
                   F.col(t_col).cast("long").alias("_t"),
                   F.col(x_col).cast("long").alias("_x"),
                   F.col(y_col).cast("long").alias("_y"))
-    dup = (d.groupBy("_id", "_t").agg(F.count(F.lit(1)).alias("_n"))
-           .agg(F.max("_n")).collect()[0][0])
-    if dup is not None and dup > 1:
-        raise ValueError(
-            "comovement_pairs: multiple positions for one (id, t) — "
-            "dedup or re-bucket upstream")
+    require(d.groupBy("_id", "_t").agg(F.count(F.lit(1)).alias("_n")), (
+        F.max("_n"), lambda dup: dup > 1,
+        "comovement_pairs: multiple positions for one (id, t) — "
+        "dedup or re-bucket upstream"))
     a = d.select(F.col("_t"), F.col("_id").alias("a_id"),
                  F.col("_x").alias("ax"), F.col("_y").alias("ay"))
     b = d.select(F.col("_t"), F.col("_id").alias("b_id"),
@@ -2883,25 +2862,17 @@ def simplify_vw_rounds(df: DataFrame, keys: Sequence[str], seq_col: str,
     d = df.select(*keys, F.col(seq_col).cast("long").alias("_seq"),
                   F.col(x_col).cast("long").alias("_x"),
                   F.col(y_col).cast("long").alias("_y"))
-    lim = 1 << 30
-    # coordinate-envelope and duplicate-seq checks fused into ONE
-    # validation job (one scan + a seq-sized agg, was two full scans);
-    # raise order (coords first) preserved
-    chk = (d.groupBy(*keys, "_seq")
-           .agg(F.count(F.lit(1)).alias("_n"),
-                F.max(F.when((F.abs(F.col("_x")) > lim)
-                             | (F.abs(F.col("_y")) > lim), 1)
-                      .otherwise(0)).alias("_b"))
-           .agg(F.max("_b").alias("bad"), F.max("_n").alias("dup"))
-           .collect()[0])
-    if chk["bad"]:
-        raise ValueError(
-            "simplify_vw_rounds: |coordinate| exceeds 2^30 — outside "
-            "the exact cross-product envelope; rescale upstream")
-    if chk["dup"] is not None and chk["dup"] > 1:
-        raise ValueError(
-            "simplify_vw_rounds: duplicate (key, seq) rows — neighbor "
-            "relations are ill-defined; dedup upstream")
+    seqs = (d.groupBy(*keys, "_seq")
+            .agg(F.count(F.lit(1)).alias("_n"),
+                 F.bool_or(beyond(1 << 30, F.col("_x"), F.col("_y")))
+                 .alias("_b")))
+    require(seqs, (F.bool_or("_b"), bool,
+                   "simplify_vw_rounds: |coordinate| exceeds 2^30 — "
+                   "outside the exact cross-product envelope; rescale "
+                   "upstream"), (
+        F.max("_n"), lambda dup: dup > 1,
+        "simplify_vw_rounds: duplicate (key, seq) rows — neighbor "
+        "relations are ill-defined; dedup upstream"))
     cur = d.localCheckpoint(eager=True)
     for _ in range(rounds):
         wo = Window.partitionBy(*keys).orderBy("_seq")
@@ -3137,30 +3108,30 @@ def idw_quantized(targets: DataFrame, sources: DataFrame,
             f"sum(w·v) stays a provable int64")
     keys = list(keys)
     src = sources.withColumn("_v", F.col(val_col).cast("long"))
-    vlo, vhi = src.agg(F.min("_v"), F.max("_v")).collect()[0]
-    if vlo is not None and (vlo < 0 or vhi >= (1 << 31)):
-        raise ValueError(
-            "idw_quantized: source values must be integers in "
+    vmsg = ("idw_quantized: source values must be integers in "
             "[0, 2^31) for the exact-sum envelope")
+    require(src, (F.min("_v"), lambda lo: lo < 0, vmsg),
+            (F.max("_v"), lambda hi: hi >= (1 << 31), vmsg))
     cand = radius_join_2d(targets, src, keys, t_x, t_y, s_x, s_y, r,
                           a_id=t_id, b_id=s_id, carry_b=["_v"])
     wq = F.lit(1 << w_bits).cast("long") - F.pmod(
         F.lit(1 << w_bits).cast("long"), F.col("dist2") + F.lit(1))
     wq = (wq / (F.col("dist2") + F.lit(1))).cast("long")
+    # sums in decimal: past max_neighbors a long sum could overflow under
+    # ANSI while the check below materialises the persisted agg
     agg = (cand.withColumn("_w", wq)
            .groupBy(*keys, t_id)
            .agg(F.count(F.lit(1)).cast("long").alias("n_src"),
-                F.sum("_w").cast("long").alias("sum_w"),
-                F.sum(F.col("_w") * F.col("_v")).cast("long")
-                .alias("_swv")))
+                F.sum(wide("_w")).alias("sum_w"),
+                F.sum(wide(F.col("_w") * F.col("_v"))).alias("_swv")))
     agg = agg.persist()
     try:
-        worst = agg.agg(F.max("n_src")).collect()[0][0]
-        if worst is not None and worst > max_neighbors:
-            raise ValueError(
-                f"idw_quantized: a target has {worst} in-range "
-                f"sources (> max_neighbors={max_neighbors}); raise "
-                f"the cap or shrink r")
+        require(agg, (
+            F.max("n_src"),
+            lambda worst: worst > max_neighbors,
+            lambda worst: f"idw_quantized: a target has {worst} in-range "
+                          f"sources (> max_neighbors={max_neighbors}); "
+                          f"raise the cap or shrink r"))
         out = (targets.select(*keys, F.col(t_id))
                .join(agg, [*keys, t_id], "left")
                .select(*keys, t_id,
@@ -3229,12 +3200,12 @@ def ripley_k(df: DataFrame, keys: Sequence[str], id_col: str,
             .agg(F.count(F.lit(1)).cast("long").alias("n_pts")))
     nagg = nagg.persist()
     try:
-        nmax = nagg.agg(F.max("n_pts")).collect()[0][0] or 0
-        if int(area) * nmax * nmax >= (1 << 62):
-            raise ValueError(
-                f"ripley_k: area·n_max² breaches the int64 envelope "
-                f"(area={area}, n_max={nmax}); shrink area units or "
-                f"partition the keys")
+        require(nagg, (
+            F.max("n_pts"),
+            lambda nmax: int(area) * nmax * nmax >= (1 << 62),
+            lambda nmax: f"ripley_k: area·n_max² breaches the int64 "
+                         f"envelope (area={area}, n_max={nmax}); shrink "
+                         f"area units or partition the keys"))
         skel = nagg.withColumn("r", F.explode(ladder))
         n = F.col("n_pts")
         out = (skel.join(paircnt, [*keys, "r"], "left")
@@ -3308,11 +3279,11 @@ def knox_test(df: DataFrame, keys: Sequence[str], id_col: str,
             .agg(F.count(F.lit(1)).cast("long").alias("n_pts")))
     nagg = nagg.persist()
     try:
-        nmax = nagg.agg(F.max("n_pts")).collect()[0][0] or 0
-        if nmax > 65535:
-            raise ValueError(
-                f"knox_test: a key holds {nmax} points (> 65535) — "
-                f"x_st·n_den would breach int64; partition the key")
+        require(nagg, (
+            F.max("n_pts"), lambda nmax: nmax > 65535,
+            lambda nmax: f"knox_test: a key holds {nmax} points "
+                         f"(> 65535) — x_st·n_den would breach int64; "
+                         f"partition the key"))
         base = nagg
         for d in (sp, tm, st):
             base = base.join(d, keys, "left")
@@ -3388,17 +3359,13 @@ def join_count_stats(df: DataFrame, keys: Sequence[str], id_col: str,
         F.min("_m").alias("_lo"), F.max("_m").alias("_hi")))
     nagg = nagg.persist()
     try:
-        lo, hi, nmax = nagg.agg(F.min("_lo"), F.max("_hi"),
-                                F.max("n_pts")).collect()[0]
-        if lo is not None and (lo < 0 or hi > 1):
-            raise ValueError(
-                "join_count_stats: marks must be binary 0/1")
-        nmax = nmax or 0
-        if nmax > 65535:
-            raise ValueError(
-                f"join_count_stats: a key holds {nmax} points "
-                f"(> 65535) — w·n² would breach int64; partition "
-                f"the key")
+        mmsg = "join_count_stats: marks must be binary 0/1"
+        require(nagg, (F.min("_lo"), lambda lo: lo < 0, mmsg),
+                (F.max("_hi"), lambda hi: hi > 1, mmsg), (
+            F.max("n_pts"), lambda nmax: nmax > 65535,
+            lambda nmax: f"join_count_stats: a key holds {nmax} points "
+                         f"(> 65535) — w·n² would breach int64; "
+                         f"partition the key"))
         z = F.lit(0).cast("long")
         n, n1 = F.col("n_pts"), F.col("n1")
         n0 = n - n1
@@ -3463,18 +3430,21 @@ def areal_interp(src: DataFrame, tgt: DataFrame, keys: Sequence[str],
         "_scells",
         (F.col(sx2).cast("long") - F.col(sx1).cast("long") + 1)
         * (F.col(sy2).cast("long") - F.col(sy1).cast("long") + 1))
-    chk = s.agg(F.min("_v"), F.max("_v"), F.max("_scells")).collect()[0]
-    vlo, vhi, cmax = chk
-    if vlo is not None:
-        if vlo < 0 or vhi >= (1 << 31):
-            raise ValueError(
-                "areal_interp: source values must be integers in "
-                "[0, 2^31) for the exact-product envelope")
-        if cmax >= (1 << 31):
-            raise ValueError(
-                f"areal_interp: a source box covers {cmax} cells "
-                f"(>= 2^31) — v·cells would breach int64; split "
-                f"giant zones upstream")
+    # each span clamped to [-2^63, 2^63]: a clamp changes the product
+    # only where the long product overflows, and keeps it below 10^38
+    span = [F.least(F.greatest(wide(F.col(c2).cast("long"))
+                               - wide(F.col(c1).cast("long")) + 1,
+                               F.lit(-(1 << 63))), F.lit(Decimal(1 << 63)))
+            for c1, c2 in ((sx1, sx2), (sy1, sy2))]
+    vmsg = ("areal_interp: source values must be integers in "
+            "[0, 2^31) for the exact-product envelope")
+    require(s, (F.min("_v"), lambda lo: lo < 0, vmsg),
+            (F.max("_v"), lambda hi: hi >= (1 << 31), vmsg), (
+        F.when(F.count("_v") > 0, F.max(span[0] * span[1])),
+        lambda cmax: cmax >= (1 << 31),
+        lambda cmax: f"areal_interp: a source box covers {cmax} cells "
+                     f"(>= 2^31) — v·cells would breach int64; split "
+                     f"giant zones upstream"))
     pieces = bbox_overlap_join(
         s, tgt, keys, src_box, tgt_box, cell,
         a_id=src_id, b_id=tgt_id, max_cells=max_cells,
@@ -3538,14 +3508,11 @@ def quadrat_test(df: DataFrame, keys: Sequence[str],
     keys = list(keys)
     px = F.col(x_col).cast("long")
     py = F.col(y_col).cast("long")
-    oob = df.agg(F.max(F.when(
-        (px < x0) | (px >= x0 + w) | (py < y0) | (py >= y0 + h), 1)
-        .otherwise(0))).collect()[0][0]
-    if oob:
-        raise ValueError(
-            "quadrat_test: a point lies outside the declared extent "
-            "— clip or widen upstream (silent drops would bias the "
-            "statistic)")
+    require(df, (
+        F.bool_or((px < x0) | (px >= x0 + w) | (py < y0) | (py >= y0 + h)),
+        bool, "quadrat_test: a point lies outside the declared extent "
+              "— clip or widen upstream (silent drops would bias the "
+              "statistic)"))
     q = (df.select(*keys,
                    ((px - F.lit(x0)) / F.lit(cw)).cast("long")
                    .alias("_qx"),
@@ -3560,12 +3527,13 @@ def quadrat_test(df: DataFrame, keys: Sequence[str],
                 .alias("sum_sq")))
     agg = agg.persist()
     try:
-        nmax = agg.agg(F.max("n_pts")).collect()[0][0] or 0
-        if nmax > (1 << 30) or gx * gy * nmax * nmax >= (1 << 62):
-            raise ValueError(
-                f"quadrat_test: n_quadrats·n² breaches int64 "
-                f"(n_max={nmax}, quadrats={gx * gy}); partition the "
-                f"key or coarsen the grid")
+        require(agg, (
+            F.max("n_pts"),
+            lambda nmax: nmax > (1 << 30)
+            or gx * gy * nmax * nmax >= (1 << 62),
+            lambda nmax: f"quadrat_test: n_quadrats·n² breaches int64 "
+                         f"(n_max={nmax}, quadrats={gx * gy}); partition "
+                         f"the key or coarsen the grid"))
         nq = F.lit(gx * gy).cast("long")
         out = agg.select(
             *keys, "n_pts", nq.alias("n_quadrats"), "occ", "sum_sq",
@@ -3632,11 +3600,11 @@ def ripley_cross_k(a: DataFrame, b: DataFrame, keys: Sequence[str],
         F.coalesce(F.col("n_b"), F.lit(0).cast("long")).alias("n_b"))
     nagg = nagg.persist()
     try:
-        mx = nagg.agg(F.max("n_a"), F.max("n_b")).collect()[0]
-        if int(area) * (mx[0] or 0) * (mx[1] or 0) >= (1 << 62):
-            raise ValueError(
-                f"ripley_cross_k: area·n_a_max·n_b_max breaches "
-                f"int64 (area={area}, n_a={mx[0]}, n_b={mx[1]})")
+        require(nagg, (
+            F.struct(F.max("n_a").alias("a"), F.max("n_b").alias("b")),
+            lambda m: int(area) * (m.a or 0) * (m.b or 0) >= (1 << 62),
+            lambda m: f"ripley_cross_k: area·n_a_max·n_b_max breaches "
+                      f"int64 (area={area}, n_a={m.a}, n_b={m.b})"))
         skel = nagg.withColumn("r", F.explode(ladder))
         out = (skel.join(paircnt, [*keys, "r"], "left")
                .select(*keys, "r", "n_a", "n_b",
@@ -3706,12 +3674,11 @@ def colocation_participation(df: DataFrame, keys: Sequence[str],
           .agg(F.count(F.lit(1)).cast("long").alias("_n")))
     tc = tc.persist()
     try:
-        nmax = tc.agg(F.max("_n")).collect()[0][0] or 0
-        if nmax >= (1 << (62 - int(frac_bits))):
-            raise ValueError(
-                f"colocation_participation: a type holds {nmax} "
-                f"points — the << {frac_bits} shift would breach "
-                f"int64; lower frac_bits or partition the key")
+        require(tc, (
+            F.max("_n"), lambda nmax: nmax >= (1 << (62 - int(frac_bits))),
+            lambda nmax: f"colocation_participation: a type holds {nmax} "
+                         f"points — the << {frac_bits} shift would breach "
+                         f"int64; lower frac_bits or partition the key"))
         ta = tc.select(*keys, F.col("_t").alias("_ta"),
                        F.col("_n").alias("n_type"))
         tb = tc.select(*keys, F.col("_t").alias("_tb"))
@@ -3767,7 +3734,7 @@ def radius_of_gyration(df: DataFrame, keys: Sequence[str],
     # (ANSI mode would throw before our ValueError), and the per-key
     # max-abs flag rides the same exchange as the sums.  On in-envelope
     # data every guarded sum equals the unguarded one.
-    ok = (F.abs(px) < lim) & (F.abs(py) < lim)
+    ok = ~beyond(lim - 1, px, py)
     agg = (df.groupBy(*keys)
            .agg(F.count(F.lit(1)).cast("long").alias("n_pts"),
                 F.sum(F.when(ok, px)).cast("long").alias("sum_x"),
@@ -3777,18 +3744,14 @@ def radius_of_gyration(df: DataFrame, keys: Sequence[str],
                 F.max(F.when(ok, 0).otherwise(1)).alias("_oob")))
     agg = agg.persist()
     try:
-        chk = agg.agg(F.max("n_pts").alias("nmax"),
-                      F.max("_oob").alias("oob")).collect()[0]
-        if chk["oob"]:
-            raise ValueError(
-                "radius_of_gyration: |coordinate| >= 2^15 — (Σx)² could "
-                "breach int64; rescale upstream")
-        nmax = chk["nmax"] or 0
-        if nmax > lim:
-            raise ValueError(
-                f"radius_of_gyration: a key holds {nmax} points "
-                f"(> 2^15) — n·Σ(x²+y²) could breach int64; sub-key "
-                f"the entity (e.g. per month)")
+        require(agg, (
+            F.max("_oob"), bool,
+            "radius_of_gyration: |coordinate| >= 2^15 — (Σx)² could "
+            "breach int64; rescale upstream"), (
+            F.max("n_pts"), lambda nmax: nmax > lim,
+            lambda nmax: f"radius_of_gyration: a key holds {nmax} points "
+                         f"(> 2^15) — n·Σ(x²+y²) could breach int64; "
+                         f"sub-key the entity (e.g. per month)"))
         n = F.col("n_pts")
         num = (n * F.col("_ssq") - F.col("sum_x") * F.col("sum_x")
                - F.col("sum_y") * F.col("sum_y"))
@@ -3821,8 +3784,8 @@ def displacement_hist(df: DataFrame, keys: Sequence[str],
     (pure codegen, no join); one combinable (key, bin) count plus a
     key-sized totals agg, joined back to the (key × bin) skeleton off
     the totals agg's explode — no crossJoin.  Envelope: |coord| <
-    2³⁰ ENFORCED (dist² < 2⁶³ provable); Σdist² wraps only past 2⁶³
-    total displacement energy, enforced via n·max_step bound check.
+    2³⁰ ENFORCED (dist² < 2⁶³ provable), and n·max_step < 2⁶³ per key
+    ENFORCED (Σdist² <= n·max_step, so the BIGINT sum cannot wrap).
     """
     edges = [int(e) for e in edges]
     if not edges or any(e < 1 for e in edges) or edges != sorted(set(edges)):
@@ -3833,13 +3796,9 @@ def displacement_hist(df: DataFrame, keys: Sequence[str],
     lim = (1 << 30) - 1
     px = F.col(x_col).cast("long")
     py = F.col(y_col).cast("long")
-    bad = df.agg(F.max(F.when(
-        (F.abs(px) > lim) | (F.abs(py) > lim), 1).otherwise(0))
-    ).collect()[0][0]
-    if bad:
-        raise ValueError(
-            "displacement_hist: |coordinate| > 2^30 - 1 — dist² "
-            "could overflow int64; rescale upstream")
+    require(df, (F.bool_or(beyond(lim, px, py)), bool,
+                 "displacement_hist: |coordinate| > 2^30 - 1 — dist² "
+                 "could overflow int64; rescale upstream"))
     w = Window.partitionBy(*keys).orderBy(*order)
     dx = px - F.lag(px).over(w)
     dy = py - F.lag(py).over(w)
@@ -3851,25 +3810,26 @@ def displacement_hist(df: DataFrame, keys: Sequence[str],
     bc = (steps.withColumn("_bin", binc)
           .groupBy(*keys, "_bin")
           .agg(F.count(F.lit(1)).cast("long").alias("n")))
+    # Σdist² summed in decimal: a long sum would overflow under ANSI
+    # while the check below materialises the persisted totals
     tot = (steps.groupBy(*keys)
            .agg(F.count(F.lit(1)).cast("long").alias("n_steps"),
-                F.sum("_d2").cast("long").alias("sum_d2"),
+                F.sum(wide("_d2")).alias("sum_d2"),
                 F.max("_d2").alias("_mx")))
     tot = tot.persist()
     try:
-        chk = tot.agg(F.max(F.col("n_steps") * F.col("_mx"))) \
-            .collect()[0][0]
-        if chk is not None and chk < 0:
-            raise ValueError(
-                "displacement_hist: Σdist² overflow (n·max_step "
-                "wrapped int64); partition the key")
+        require(tot, (F.max(wide("n_steps") * F.col("_mx")),
+                      lambda b: b >= (1 << 63),
+                      "displacement_hist: Σdist² overflow (n·max_step "
+                      "wrapped int64); partition the key"))
         nb = len(edges) + 1
         skel = (tot.drop("_mx")
                 .withColumn("bin", F.explode(F.array(
                     *[F.lit(i).cast("long") for i in range(nb)]))))
         out = (skel.join(bc.withColumnRenamed("_bin", "bin"),
                          [*keys, "bin"], "left")
-               .select(*keys, "bin", "n_steps", "sum_d2",
+               .select(*keys, "bin", "n_steps",
+                       F.col("sum_d2").cast("long").alias("sum_d2"),
                        F.coalesce(F.col("n"), F.lit(0).cast("long"))
                        .alias("n")))
         out = out.localCheckpoint(eager=True)
@@ -3910,11 +3870,12 @@ def location_diversity(df: DataFrame, keys: Sequence[str],
                 .alias("_top")))
     agg = agg.persist()
     try:
-        nmax = agg.agg(F.max("n_pings")).collect()[0][0] or 0
-        if nmax >= (1 << (62 - int(frac_bits))):
-            raise ValueError(
-                f"location_diversity: an entity holds {nmax} pings "
-                f"— the << {frac_bits} shift would breach int64")
+        require(agg, (
+            F.max("n_pings"),
+            lambda nmax: nmax >= (1 << (62 - int(frac_bits))),
+            lambda nmax: f"location_diversity: an entity holds {nmax} "
+                         f"pings — the << {frac_bits} shift would breach "
+                         f"int64"))
         out = (agg.select(
             *keys, "n_pings", "n_cells",
             (-F.col("_top._neg")).alias("top_count"),
@@ -4107,7 +4068,7 @@ def directional_stats(df: DataFrame, keys: Sequence[str],
     # pattern): when()-guarded moment sums + a per-key out-of-envelope
     # flag — one corpus scan, identical sums on in-envelope data, no
     # ANSI overflow on the guarded rows.
-    ok = (F.abs(px) < lim) & (F.abs(py) < lim)
+    ok = ~beyond(lim - 1, px, py)
     agg = (df.groupBy(*keys)
            .agg(F.count(F.lit(1)).cast("long").alias("n_pts"),
                 F.sum(F.when(ok, px)).cast("long").alias("sum_x"),
@@ -4118,17 +4079,13 @@ def directional_stats(df: DataFrame, keys: Sequence[str],
                 F.max(F.when(ok, 0).otherwise(1)).alias("_oob")))
     agg = agg.persist()
     try:
-        chk = agg.agg(F.max("n_pts").alias("nmax"),
-                      F.max("_oob").alias("oob")).collect()[0]
-        if chk["oob"]:
-            raise ValueError(
-                "directional_stats: |coordinate| >= 2^15 — the second-"
-                "moment products could breach int64; rescale upstream")
-        nmax = chk["nmax"] or 0
-        if nmax > (1 << 15):
-            raise ValueError(
-                f"directional_stats: a key holds {nmax} points "
-                f"(> 2^15); sub-key the entity")
+        require(agg, (
+            F.max("_oob"), bool,
+            "directional_stats: |coordinate| >= 2^15 — the second-"
+            "moment products could breach int64; rescale upstream"), (
+            F.max("n_pts"), lambda nmax: nmax > lim,
+            lambda nmax: f"directional_stats: a key holds {nmax} points "
+                         f"(> 2^15); sub-key the entity"))
         n = F.col("n_pts")
         out = agg.select(
             *keys, "n_pts", "sum_x", "sum_y",
@@ -4178,20 +4135,16 @@ def mann_kendall(df: DataFrame, keys: Sequence[str], t_col: str,
                  F.countDistinct("_t").alias("_nt")))
     nagg = nagg.persist()
     try:
-        chk = nagg.agg(F.max("n_pts"),
-                       F.max(F.col("n_pts") - F.col("_nt"))) \
-            .collect()[0]
-        nmax, dupt = chk[0] or 0, chk[1]
-        if dupt is not None and dupt > 0:
-            raise ValueError(
-                "mann_kendall: duplicate timestamps within a key — "
-                "sign pairs between simultaneous observations are "
-                "ill-defined; aggregate per bucket upstream")
-        if nmax > int(max_n):
-            raise ValueError(
-                f"mann_kendall: a key holds {nmax} observations "
-                f"(> max_n={max_n}) — the per-key pair surface is "
-                f"O(n²) by design; re-bucket the series upstream")
+        require(nagg, (
+            F.bool_or(F.col("n_pts") > F.col("_nt")), bool,
+            "mann_kendall: duplicate timestamps within a key — "
+            "sign pairs between simultaneous observations are "
+            "ill-defined; aggregate per bucket upstream"), (
+            F.max("n_pts"), lambda nmax: nmax > int(max_n),
+            lambda nmax: f"mann_kendall: a key holds {nmax} observations "
+                         f"(> max_n={max_n}) — the per-key pair surface "
+                         f"is O(n²) by design; re-bucket the series "
+                         f"upstream"))
         a = d.select(*keys, F.col("_t").alias("_ta"),
                      F.col("_v").alias("_va"))
         b = d.select(*keys, F.col("_t").alias("_tb"),

@@ -16,6 +16,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .envelope import beyond, require, wide, wide_abs
 from .grid import bin_floor, box_cell_count, explode_box
 
 # |coordinate| bound so every cross/dot product of coordinate differences
@@ -91,13 +92,9 @@ def convex_hull_2d(df: DataFrame, keys: Sequence[str], x: str,
     """
     keys = list(keys)
     xc, yc = F.col(x).cast("long"), F.col(y).cast("long")
-    bad = df.agg(F.max(F.when(
-        (F.abs(xc) > _COORD_LIM) | (F.abs(yc) > _COORD_LIM), 1)
-        .otherwise(0))).collect()[0][0]
-    if bad:
-        raise ValueError(
-            f"convex_hull_2d: |coordinate| exceeds 2^30 — outside the "
-            f"exact-int64 cross-product envelope; rescale upstream")
+    require(df, (F.bool_or(beyond(_COORD_LIM, xc, yc)), bool,
+                 "convex_hull_2d: |coordinate| exceeds 2^30 — outside the "
+                 "exact-int64 cross-product envelope; rescale upstream"))
 
     d = df.select(*keys, xc.alias("_x"), yc.alias("_y"))
     key_schema = ", ".join(
@@ -183,14 +180,9 @@ def hull_diameter(df: DataFrame, keys: Sequence[str], x: str,
     """
     keys = list(keys)
     xc, yc = F.col(x).cast("long"), F.col(y).cast("long")
-    lim = _COORD_LIM - 1
-    bad = df.agg(F.max(F.when(
-        (F.abs(xc) > lim) | (F.abs(yc) > lim), 1).otherwise(0))
-    ).collect()[0][0]
-    if bad:
-        raise ValueError(
-            "hull_diameter: |coordinate| exceeds 2^30 - 1 — dist2 could "
-            "overflow int64; rescale upstream")
+    require(df, (F.bool_or(beyond(_COORD_LIM - 1, xc, yc)), bool,
+                 "hull_diameter: |coordinate| exceeds 2^30 - 1 — dist2 "
+                 "could overflow int64; rescale upstream"))
     # convex_hull_2d's output schema names the coordinates literally
     # "x"/"y" regardless of the caller's input column names — select
     # those, not the caller's names (which need not exist on the hull).
@@ -247,27 +239,21 @@ def hausdorff_to_templates(points: DataFrame, templates: DataFrame,
     tp = templates.select(F.col(tpl_id).alias("_tid"),
                           F.col(tx).cast("long").alias("_tx"),
                           F.col(ty).cast("long").alias("_ty"))
-    trows = tp.limit(max_template_pts + 1).count()
-    if trows == 0:
-        raise ValueError("hausdorff_to_templates: templates is empty")
-    if trows > max_template_pts:
-        raise ValueError(
-            f"hausdorff_to_templates: templates exceed "
-            f"{max_template_pts} points — the template library must "
-            f"stay broadcastable; raise max_template_pts explicitly "
-            f"if intended")
-    tbad = tp.agg(F.max(F.when((F.abs(F.col("_tx")) > lim)
-                               | (F.abs(F.col("_ty")) > lim), 1)
-                        .otherwise(0))).collect()[0][0]
+    cmsg = ("hausdorff_to_templates: |coordinate| exceeds 2^30 - 1 — "
+            "dist² could overflow int64; rescale upstream")
+    ntp = F.count(F.lit(1))
+    require(tp, (ntp, lambda n: n == 0,
+                 "hausdorff_to_templates: templates is empty"), (
+        ntp, lambda n: n > max_template_pts,
+        f"hausdorff_to_templates: templates exceed "
+        f"{max_template_pts} points — the template library must "
+        f"stay broadcastable; raise max_template_pts explicitly "
+        f"if intended"),
+        (F.bool_or(beyond(lim, F.col("_tx"), F.col("_ty"))), bool, cmsg))
     pts = points.select(*keys, F.col(x).cast("long").alias("_px"),
                         F.col(y).cast("long").alias("_py"))
-    pbad = pts.agg(F.max(F.when((F.abs(F.col("_px")) > lim)
-                                | (F.abs(F.col("_py")) > lim), 1)
-                         .otherwise(0))).collect()[0][0]
-    if tbad or pbad:
-        raise ValueError(
-            "hausdorff_to_templates: |coordinate| exceeds 2^30 - 1 — "
-            "dist² could overflow int64; rescale upstream")
+    require(pts, (F.bool_or(beyond(lim, F.col("_px"), F.col("_py"))),
+                  bool, cmsg))
     dx = F.col("_px") - F.col("_tx")
     dy = F.col("_py") - F.col("_ty")
     cross = (pts.join(F.broadcast(tp))
@@ -355,19 +341,17 @@ def snap_to_segments(points: DataFrame, segments: DataFrame,
           bin_floor(F.least(y1, y2) - F.lit(cs), cs)]
     hi = [bin_floor(F.greatest(x1, x2) + F.lit(cs), cs),
           bin_floor(F.greatest(y1, y2) + F.lit(cs), cs)]
-    # extent + fan-out envelope checks fused into ONE segment-dim scan;
-    # raise order (extent first) preserved
-    chk = seg.agg(
-        F.max(F.greatest(F.abs(x2 - x1), F.abs(y2 - y1))).alias("ext"),
-        F.max(box_cell_count(lo, hi, max_cells)).alias("fan")).collect()[0]
-    if chk["ext"] is not None and chk["ext"] > 4096:
-        raise ValueError(
-            f"snap_to_segments: a segment spans {chk['ext']} (> 4096) per "
-            f"axis — split long roads upstream (the cross² envelope)")
-    if chk["fan"] is not None and chk["fan"] > max_cells:
-        raise ValueError(
-            f"snap_to_segments: a segment covers more than {max_cells} "
-            f"cells; coarsen the grid or split it")
+    require(seg, (
+        F.max(F.greatest(wide_abs(wide(x2) - wide(x1)),
+                         wide_abs(wide(y2) - wide(y1)))),
+        lambda ext: ext > 4096,
+        lambda ext: f"snap_to_segments: a segment spans {ext} (> 4096) "
+                    f"per axis — split long roads upstream (the cross² "
+                    f"envelope)"), (
+        F.max(box_cell_count(lo, hi, max_cells)),
+        lambda fan: fan > max_cells,
+        f"snap_to_segments: a segment covers more than {max_cells} "
+        f"cells; coarsen the grid or split it"))
     segc = explode_box(seg, ("_cx", "_cy"), lo, hi)
     pts = points.select(*keys, F.col(p_id),
                         F.col(px).cast("long").alias("_px"),

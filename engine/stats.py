@@ -23,6 +23,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .envelope import require, wide, wide_abs
+
 __all__ = ["two_proportion_ztest", "chi2_independence", "welch_ttest",
            "mann_whitney_u", "spearman_rho", "ks_2samp"]
 
@@ -107,13 +109,12 @@ def chi2_independence(df: DataFrame, row_col: str,
            .agg(F.count(F.lit(1)).cast("long").alias("o")))
     cnt = cnt.persist()
     try:
-        n = cnt.agg(F.sum("o")).collect()[0][0]
+        n, = require(cnt, (
+            F.sum("o"), lambda n: n >= (1 << 26),
+            lambda n: f"chi2_independence: N={n} breaches the exact-double "
+                      f"envelope (|o*N - R*C| <= N^2 must stay < 2^52; "
+                      f"N < 2^26) — pre-aggregate or sample"))
         n = int(n or 0)
-        if n >= (1 << 26):
-            raise ValueError(
-                f"chi2_independence: N={n} breaches the exact-double "
-                f"envelope (|o*N - R*C| <= N^2 must stay < 2^52; N < 2^26)"
-                f" — pre-aggregate or sample")
         rowt = cnt.groupBy("r").agg(F.sum("o").cast("long").alias("rt"))
         colt = cnt.groupBy("c").agg(F.sum("o").cast("long").alias("ct"))
         j = cnt.join(rowt, "r").join(colt, "c")
@@ -167,20 +168,21 @@ def welch_ttest(df: DataFrame, keys: Sequence[str], variant_col: str,
             .alias(f"s_{tag}"),
             F.sum(F.when(flag, x * x).otherwise(0)).cast("long")
             .alias(f"ss_{tag}"),
-            F.max(F.when(flag, F.abs(x))).alias(f"_mx_{tag}"),
+            F.max(F.when(flag, wide_abs(x))).alias(f"_mx_{tag}"),
         ]
 
     g = (df.filter(is_a | is_b).groupBy(*keys)
-         .agg(*arm(is_a, "a"), *arm(is_b, "b"))).persist()
+         .agg(*arm(is_a, "a"), *arm(is_b, "b")))
+    # checked before the persist, whose aggregates could overflow first
+    require(g, (
+        F.max(F.greatest(*(wide(f"n_{t}") * F.coalesce(f"_mx_{t}", F.lit(0))
+                           for t in "ab"))),
+        lambda worst: worst >= (1 << 31),
+        lambda worst: f"welch_ttest: n*max|x| = {worst} breaches the "
+                      f"int64 envelope (< 2^31 per key/arm); rescale the "
+                      f"metric"))
+    g = g.persist()
     try:
-        chk = g.agg(F.max(F.col("n_a") * F.coalesce("_mx_a", F.lit(0))),
-                    F.max(F.col("n_b") * F.coalesce("_mx_b", F.lit(0)))
-                    ).collect()[0]
-        worst = max(int(chk[0] or 0), int(chk[1] or 0))
-        if worst >= (1 << 31):
-            raise ValueError(
-                f"welch_ttest: n*max|x| = {worst} breaches the int64 "
-                f"envelope (< 2^31 per key/arm); rescale the metric")
 
         # divisors clamped with greatest(., 1) BEFORE the cast: ANSI
         # mode raises DIVIDE_BY_ZERO even inside an un-taken when()
@@ -267,14 +269,15 @@ def mann_whitney_u(df: DataFrame, keys: Sequence[str], variant_col: str,
          .agg(F.sum("c_a").cast("long").alias("n_a"),
               F.sum("c_b").cast("long").alias("n_b"),
               F.sum(F.col("c_a") * F.col("mid2")).cast("long").alias("r2_a"),
-              F.sum("tie3").cast("long").alias("tie_term"))).persist()
+              F.sum("tie3").cast("long").alias("tie_term")))
+    # checked before the persist, whose aggregates could overflow first
+    require(g, (
+        F.max(wide("n_a") + wide("n_b")), lambda n: n >= (1 << 20),
+        lambda n: f"mann_whitney_u: n={n} rows in one key breaches the "
+                  f"exact-rank envelope (n < 2^20 per key) — "
+                  f"pre-aggregate or bucket the metric"))
+    g = g.persist()
     try:
-        worst = g.agg(F.max(F.col("n_a") + F.col("n_b"))).collect()[0][0]
-        if int(worst or 0) >= (1 << 20):
-            raise ValueError(
-                f"mann_whitney_u: n={worst} rows in one key breaches the "
-                f"exact-rank envelope (n < 2^20 per key) — pre-aggregate "
-                f"or bucket the metric")
         na, nb = F.col("n_a"), F.col("n_b")
         u2a = (F.col("r2_a") - na * (na + 1)).alias("u2_a")
         n = na + nb
@@ -341,14 +344,15 @@ def spearman_rho(df: DataFrame, keys: Sequence[str], x_col: str,
               F.sum(F.col("dx") * F.col("dy")).cast("long").alias("sxy"),
               F.sum(F.col("dx") * F.col("dx")).cast("long").alias("sxx"),
               F.sum(F.col("dy") * F.col("dy")).cast("long")
-              .alias("syy"))).persist()
+              .alias("syy")))
+    # checked before the persist, whose aggregates could overflow first
+    require(g, (
+        F.max("n"), lambda n: n >= (1 << 20),
+        lambda n: f"spearman_rho: n={n} rows in one key breaches the "
+                  f"exact-rank envelope (n < 2^20 per key) — "
+                  f"pre-aggregate or sample"))
+    g = g.persist()
     try:
-        worst = g.agg(F.max("n")).collect()[0][0]
-        if int(worst or 0) >= (1 << 20):
-            raise ValueError(
-                f"spearman_rho: n={worst} rows in one key breaches the "
-                f"exact-rank envelope (n < 2^20 per key) — pre-aggregate "
-                f"or sample")
         den2 = _d(F.col("sxx")) * _d(F.col("syy"))
         safe_den = F.when(den2 > 0, F.sqrt(den2)).otherwise(F.lit(1.0))
         rho = F.when((F.col("n") >= 2) & (den2 > 0),
@@ -406,13 +410,14 @@ def ks_2samp(df: DataFrame, keys: Sequence[str], variant_col: str,
               F.max("nb").cast("long").alias("n_b"),
               F.max(F.abs(F.col("nb") * F.col("ca_cum")
                           - F.col("na") * F.col("cb_cum")))
-              .cast("long").alias("d_num"))).persist()
+              .cast("long").alias("d_num")))
+    # checked before the persist, whose aggregates could overflow first
+    require(g, (
+        F.max(F.greatest("n_a", "n_b")), lambda n: n >= (1 << 31),
+        lambda n: f"ks_2samp: arm size {n} breaches the int64 envelope "
+                  f"(n < 2^31 per key/arm) — pre-aggregate or sample"))
+    g = g.persist()
     try:
-        worst = g.agg(F.max(F.greatest("n_a", "n_b"))).collect()[0][0]
-        if int(worst or 0) >= (1 << 31):
-            raise ValueError(
-                f"ks_2samp: arm size {worst} breaches the int64 envelope "
-                f"(n < 2^31 per key/arm) — pre-aggregate or sample")
         prod = _d(F.greatest(F.col("n_a") * F.col("n_b"), F.lit(1)))
         d = F.when((F.col("n_a") > 0) & (F.col("n_b") > 0),
                    _d(F.col("d_num")) / prod)

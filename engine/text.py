@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .envelope import require
+
 # ---------------------------------------------------------------------------
 # tokenization / shingles (native)
 # ---------------------------------------------------------------------------
@@ -1578,13 +1580,15 @@ def fuzzy_pairs(df: DataFrame, text_col: str = "text",
     base = df.select(F.col(id_col).alias("_id"),
                      F.col(text_col).alias("_s"),
                      F.length(text_col).alias("_len"))
-    stats = base.agg(F.max("_len").alias("mx"),
-                     F.sum((F.col("_len") <= d).cast("long")).alias("nt")) \
-                .collect()[0]
-    if (stats["mx"] or 0) > max_len:
-        raise ValueError(
-            f"max len {stats['mx']} exceeds max_len={max_len}: fuzzy_pairs "
-            "is a short-string join; use dedup_minhash_lsh for documents")
+    _, nt = require(base, (
+        F.max("_len"), lambda mx: mx > max_len,
+        lambda mx: f"max len {mx} exceeds max_len={max_len}: fuzzy_pairs "
+                   "is a short-string join; use dedup_minhash_lsh for "
+                   "documents"), (
+        F.count(F.when(F.col("_len") <= d, 1)),
+        lambda nt: nt > 0 and nt > tiny_envelope,
+        lambda nt: f"{nt} strings of len <= max_dist exceed the "
+                   f"tiny_envelope={tiny_envelope} all-match band"))
     cand = (_passjoin_probes(base, d)
             .join(_passjoin_segments(base, d),
                   _passjoin_match(d) & (F.col("_pid") != F.col("_gid")))
@@ -1597,12 +1601,8 @@ def fuzzy_pairs(df: DataFrame, text_col: str = "text",
             .withColumn("dist", F.levenshtein("_sa", "_sb").cast("long"))
             .filter(F.col("dist") <= d)
             .select("id_a", "id_b", "dist"))
-    if (stats["nt"] or 0) == 0:
+    if nt == 0:
         return main
-    if stats["nt"] > tiny_envelope:
-        raise ValueError(
-            f"{stats['nt']} strings of len <= max_dist exceed the "
-            f"tiny_envelope={tiny_envelope} all-match band")
     t1 = base.filter(F.col("_len") <= d).select(
         F.col("_id").alias("id_a"), F.col("_s").alias("_sa"))
     t2 = base.filter(F.col("_len") <= d).select(
@@ -1985,27 +1985,23 @@ def fuzzy_lookup(corpus: DataFrame, gazetteer: DataFrame,
     g = gazetteer.select(F.col(gaz_id).alias("_gid"),
                          F.col(gaz_text).alias("_gs"),
                          F.length(gaz_text).alias("_glen"))
-    ng = g.limit(int(max_gaz) + 1).count()
-    if ng == 0:
-        raise ValueError("fuzzy_lookup: gazetteer is empty")
-    if ng > int(max_gaz):
-        raise ValueError(
-            f"fuzzy_lookup: gazetteer exceeds max_gaz={max_gaz} — "
-            f"broadcastability is the design premise; use "
-            f"fuzzy_pairs-style symmetric blocking instead")
-    ntiny = g.filter(F.col("_glen") <= d).count()
-    if ntiny > int(tiny_envelope):
-        raise ValueError(
-            f"fuzzy_lookup: {ntiny} gazetteer entries of len <= "
-            f"max_dist exceed tiny_envelope={tiny_envelope}")
+    ng = F.count(F.lit(1))
+    _, _, ntiny = require(g, (ng, lambda n: n == 0,
+                              "fuzzy_lookup: gazetteer is empty"), (
+        ng, lambda n: n > int(max_gaz),
+        f"fuzzy_lookup: gazetteer exceeds max_gaz={max_gaz} — "
+        f"broadcastability is the design premise; use "
+        f"fuzzy_pairs-style symmetric blocking instead"), (
+        F.count(F.when(F.col("_glen") <= d, 1)),
+        lambda nt: nt > int(tiny_envelope),
+        lambda nt: f"fuzzy_lookup: {nt} gazetteer entries of len <= "
+                   f"max_dist exceed tiny_envelope={tiny_envelope}"))
     c = corpus.select(F.col(corpus_id).alias("_pid"),
                       F.col(corpus_text).alias("_ps"),
                       F.length(corpus_text).alias("_plen"))
-    mx = c.agg(F.max("_plen")).collect()[0][0]
-    if (mx or 0) > int(max_len):
-        raise ValueError(
-            f"fuzzy_lookup: corpus max len {mx} exceeds "
-            f"max_len={max_len} — short-string contract")
+    require(c, (F.max("_plen"), lambda mx: mx > int(max_len),
+                lambda mx: f"fuzzy_lookup: corpus max len {mx} exceeds "
+                           f"max_len={max_len} — short-string contract"))
     cand = (_passjoin_probes(c, d)
             .join(F.broadcast(_passjoin_segments(g, d)), _passjoin_match(d))
             .select("_pid", "_gid").distinct())

@@ -27,6 +27,7 @@ from pyspark.sql import types as T
 
 from . import geo
 from .config import DEFAULT, EngineConfig
+from .envelope import require, wide
 from .functions import explode_kring_native, parent_cell_col
 from .grid import bin_floor, box_cell_count, explode_box, explode_neighbours
 
@@ -268,14 +269,18 @@ def hotspot_gi(pts: DataFrame, x_col: str, y_col: str,
                       bin_floor(F.col(y_col).cast("long"), cs).alias("cy"))
            .groupBy("cx", "cy")
            .agg(F.count(F.lit(1)).cast("long").alias("v")))
-    glob = cnt.agg(F.count(F.lit(1)).cast("long"),
-                   F.sum("v").cast("long"),
-                   F.sum(F.col("v") * F.col("v")).cast("long")).collect()[0]
-    n, s, ss = (int(glob[0] or 0), int(glob[1] or 0), int(glob[2] or 0))
-    if n * ss >= (1 << 62) or s * s >= (1 << 62):
-        raise ValueError(
-            f"hotspot_gi: n*SS = {n * ss} or S^2 = {s * s} breaches the "
-            f"int64 envelope (< 2^62); rescale counts")
+    # n, S and SS feed the z computation; the check multiplies them as
+    # Python ints
+    (n, s, ss), = require(cnt, (
+        F.struct(F.count(F.lit(1)).alias("n"),
+                 F.coalesce(F.sum("v"), F.lit(0)).cast("long").alias("s"),
+                 F.coalesce(F.sum(wide("v") * wide("v")), F.lit(0))
+                 .alias("ss")),
+        lambda g: g.n * int(g.ss) >= (1 << 62) or g.s * g.s >= (1 << 62),
+        lambda g: f"hotspot_gi: n*SS = {g.n * int(g.ss)} or S^2 = "
+                  f"{g.s * g.s} breaches the int64 envelope (< 2^62); "
+                  f"rescale counts"))
+    ss = int(ss)
     donate = explode_neighbours(cnt, ["v"], [F.col("cx"), F.col("cy")],
                                 ["cx", "cy"])
     nbr = donate.groupBy("cx", "cy").agg(
@@ -326,12 +331,10 @@ def focal_stats(raster: DataFrame, keys: list[str] | tuple[str, ...],
                       F.col(cx_col).cast("long").alias("_cx"),
                       F.col(cy_col).cast("long").alias("_cy"),
                       F.col(val_col).cast("long").alias("_v"))
-    dup = (r.groupBy(*keys, "_cx", "_cy").count()
-           .agg(F.max("count")).collect()[0][0])
-    if dup is not None and dup > 1:
-        raise ValueError(
-            "focal_stats: duplicate (key, cell) rows present — a "
-            "sparse raster must be a function; aggregate upstream")
+    require(r.groupBy(*keys, "_cx", "_cy").count(), (
+        F.max("count"), lambda dup: dup > 1,
+        "focal_stats: duplicate (key, cell) rows present — a "
+        "sparse raster must be a function; aggregate upstream"))
     scat = explode_neighbours(r, [*keys, "_v"],
                               [F.col("_cx"), F.col("_cy")], ["_cx", "_cy"],
                               centre=include_self)
@@ -383,44 +386,38 @@ def zonal_stats(raster: DataFrame, zones: DataFrame,
                      F.col(zy1).cast("long").alias("_y1"),
                      F.col(zx2).cast("long").alias("_x2"),
                      F.col(zy2).cast("long").alias("_y2"))
-    nz = z.limit(int(max_zones) + 1).count()
-    if nz == 0:
-        raise ValueError("zonal_stats: zones is empty")
-    if nz > int(max_zones):
-        raise ValueError(
-            f"zonal_stats: {nz} zones exceed max_zones={max_zones} — "
-            f"broadcastability is the design premise")
     cs = int(cell)
-    if cs <= 0:
-        raise ValueError("zonal_stats: cell must be positive")
-    lo = [bin_floor(F.col("_x1"), cs), bin_floor(F.col("_y1"), cs)]
-    hi = [bin_floor(F.col("_x2"), cs), bin_floor(F.col("_y2"), cs)]
+    # a valid width even when cell <= 0, so that rule raises in its place
+    w = max(cs, 1)
+    lo = [bin_floor(F.col("_x1"), w), bin_floor(F.col("_y1"), w)]
+    hi = [bin_floor(F.col("_x2"), w), bin_floor(F.col("_y2"), w)]
     ncell = box_cell_count(lo, hi, max_cells)
-    # ONE validation job over the (dim-sized) zone table for all three
-    # checks: inverted boxes, per-zone fan-out, and the COMBINED cover
-    # budget — max_zones and max_cells alone still admit a ~2.7e8-row
-    # exploded broadcast (an executor OOM); the total is what the
-    # broadcast premise actually depends on.  The total is exact once
-    # no zone exceeds max_cells, and that check raises first.
-    chk = z.agg(
-        F.max(F.when((F.col("_x2") < F.col("_x1"))
-                     | (F.col("_y2") < F.col("_y1")), 1)
-              .otherwise(0)).alias("bad"),
-        F.max(ncell).alias("fan"),
-        F.sum(ncell).alias("total")).collect()[0]
-    if chk["bad"]:
-        raise ValueError("zonal_stats: inverted zone box present")
-    if chk["fan"] is not None and chk["fan"] > int(max_cells):
-        raise ValueError(
-            f"zonal_stats: a zone covers more than {max_cells} grid "
-            f"cells; coarsen `cell` or split the zone")
+    # ONE validation job over the (dim-sized) zone table: zone count,
+    # inverted boxes, per-zone fan-out, and the COMBINED cover budget —
+    # max_zones and max_cells alone still admit a ~2.7e8-row exploded
+    # broadcast (an executor OOM); the total is what the broadcast
+    # premise actually depends on.  The total is exact once no zone
+    # exceeds max_cells, and that check raises first.
     max_total = 1 << 22
-    if chk["total"] is not None and chk["total"] > max_total:
-        raise ValueError(
-            f"zonal_stats: zones cover {chk['total']} grid cells in total "
-            f"(> {max_total}) — the exploded broadcast cover table would "
-            f"blow the broadcast envelope; coarsen `cell` or shard the "
-            f"zone system")
+    nzones = F.count(F.lit(1))
+    require(z, (nzones, lambda n: n == 0, "zonal_stats: zones is empty"), (
+        nzones, lambda n: n > int(max_zones),
+        # names at most max_zones + 1 zones
+        lambda n: f"zonal_stats: {min(n, int(max_zones) + 1)} zones "
+                  f"exceed max_zones={max_zones} — broadcastability is "
+                  f"the design premise"),
+        (F.lit(cs), lambda c: c <= 0, "zonal_stats: cell must be positive"),
+        (F.bool_or((F.col("_x2") < F.col("_x1"))
+                   | (F.col("_y2") < F.col("_y1"))), bool,
+         "zonal_stats: inverted zone box present"), (
+        F.max(ncell), lambda fan: fan > int(max_cells),
+        f"zonal_stats: a zone covers more than {max_cells} grid "
+        f"cells; coarsen `cell` or split the zone"), (
+        F.sum(ncell), lambda total: total > max_total,
+        lambda total: f"zonal_stats: zones cover {total} grid cells in "
+                      f"total (> {max_total}) — the exploded broadcast "
+                      f"cover table would blow the broadcast envelope; "
+                      f"coarsen `cell` or shard the zone system"))
     zc = explode_box(z, ("_gx", "_gy"), lo, hi)
     r = raster.select(F.col(cx_col).cast("long").alias("_cx"),
                       F.col(cy_col).cast("long").alias("_cy"),

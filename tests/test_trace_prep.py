@@ -2390,16 +2390,208 @@ def _bbox_giant_box(spark):
                           ("u1", "v1", "u2", "v2"), 1)
 
 
+_MIN = -(1 << 63)
+
+
+def _pts(spark, rows, cols="k x y"):
+    return spark.createDataFrame(rows, cols.split())
+
+
+def _hull(spark):
+    from engine import spatial
+    spatial.convex_hull_2d(_pts(spark, [("k", _MIN, 0), ("k", 1, 1)]),
+                           ["k"], "x", "y")
+
+
+def _diameter(spark):
+    from engine import spatial
+    spatial.hull_diameter(_pts(spark, [("k", _MIN, 0), ("k", 1, 1)]),
+                          ["k"], "x", "y")
+
+
+def _hausdorff(spark):
+    from engine import spatial
+    spatial.hausdorff_to_templates(
+        _pts(spark, [("k", _MIN, 0)]),
+        _pts(spark, [(1, 0, 0)], "tpl_id tx ty"), ["k"], "x", "y")
+
+
+def _snap_wide_segment(spark):
+    from engine import spatial
+    spatial.snap_to_segments(
+        _pts(spark, [(1, 0, 0)], "p_id px py"),
+        _pts(spark, [(1, -(1 << 62), 0, 1 << 62, 0)], "seg_id x1 y1 x2 y2"),
+        [], "px", "py", "x1", "y1", "x2", "y2", 1)
+
+
+def _trace(spark, xs):
+    return _pts(spark, [("k", i, x, x) for i, x in enumerate(xs)],
+                "k t x y")
+
+
+def _radial(spark):
+    ops.simplify_radial(_trace(spark, [_MIN, 0]), ["k"], ["t"], "x", "y", 1)
+
+
+def _vw(spark):
+    ops.simplify_vw_rounds(_trace(spark, [_MIN, 0, 1]), ["k"], "t", "x",
+                           "y", 1, 0)
+
+
+def _disp_coord(spark):
+    ops.displacement_hist(_trace(spark, [_MIN, 0]), ["k"], ["t"], "x", "y",
+                          [1])
+
+
+def _disp_sum(spark):
+    lim = (1 << 30) - 1
+    ops.displacement_hist(_trace(spark, [lim * (-1) ** i for i in range(9)]),
+                          ["k"], ["t"], "x", "y", [1])
+
+
+def _trip_euclid(spark):
+    ops.trip_stats(_trace(spark, [_MIN, 0]), ["k"], "t", "x", "y", "t",
+                   metric="euclid")
+
+
+def _zscore(spark):
+    ops.zscore_outliers(_pts(spark, [("k", 1, _MIN), ("k", 2, 0)],
+                             "k id v"), ["k"], "v", ["id"])
+
+
+def _linreg(spark):
+    ops.linreg_per_group(_pts(spark, [("k", _MIN, 0), ("k", 0, 1)]),
+                         ["k"], "x", "y")
+
+
+def _autocorr(spark):
+    ops.autocorr_lag(_trace(spark, [_MIN, 0, 1]), ["k"], "t", "x")
+
+
+def _gyration(spark):
+    ops.radius_of_gyration(_pts(spark, [("k", _MIN, 0)]), ["k"], "x", "y")
+
+
+def _directional(spark):
+    ops.directional_stats(_pts(spark, [("k", _MIN, 0)]), ["k"], "x", "y")
+
+
+def _seg_intersect(spark):
+    a = _pts(spark, [("k", 1, _MIN, 0, 0, 0)], "k a_id x1 y1 x2 y2")
+    b = _pts(spark, [("k", 1, 0, 0, 1, 1)], "k b_id u1 v1 u2 v2")
+    ops.segment_intersect_join(a, b, ["k"], ("x1", "y1", "x2", "y2"),
+                               ("u1", "v1", "u2", "v2"), 4)
+
+
+def _rect_union(spark):
+    ops.rect_union_area(_pts(spark, [("k", _MIN, 0, 0, 1)], "k x1 y1 x2 y2"),
+                        ["k"])
+
+
+def _polygon(spark):
+    ops.polygon_area_centroid(
+        _pts(spark, [("p", 1, _MIN, 0), ("p", 2, 0, 0), ("p", 3, 0, 1)],
+             "p seq x y"), ["p"], "seq", "x", "y")
+
+
+def _gini(spark, vals):
+    ops.gini_coefficient(_pts(spark, [("k", v) for v in vals], "k v"),
+                         ["k"], "v")
+
+
+def _cusum(spark):
+    import datetime as dt
+    t0 = dt.datetime(2024, 1, 1)
+    ops.cusum_alarm(_pts(spark, [("k", t0 + dt.timedelta(seconds=i), 1 << 62)
+                                 for i in range(4)], "k ts v"),
+                    ["k"], "ts", "v", 0, 1)
+
+
 @pytest.mark.parametrize("call,msg", [
     (_snap_long_road, "split long roads"),
     (_bbox_giant_box, "max_cells"),
-], ids=["snap_to_segments", "bbox_overlap_join"])
-def test_box_cover_envelope_raises_under_ansi(spark, call, msg):
-    """A box whose grid-cell count overflows int64 must raise the
-    contract ValueError, not an ANSI ArithmeticException from the
-    fan-out check itself."""
+    (_hull, "convex_hull_2d: .coordinate. exceeds 2.30 "),
+    (_diameter, "hull_diameter: .coordinate. exceeds"),
+    (_hausdorff, "hausdorff_to_templates: .coordinate. exceeds"),
+    (_radial, "simplify_radial: max .coord. = 9223372036854775808 "),
+    (_vw, "simplify_vw_rounds: .coordinate. exceeds"),
+    (_disp_coord, "displacement_hist: .coordinate. > 2.30 - 1"),
+    (_trip_euclid, "trip_stats: euclid metric needs"),
+    (_zscore, "zscore_outliers: k.n.max.x. = 73786976294838206464 "),
+    (_linreg, "linreg_per_group: max.n.max.x., n.max.y.. = "
+              "18446744073709551616 "),
+    (_autocorr, "autocorr_lag: n.max.x. = "),
+    (_gyration, "radius_of_gyration: .coordinate. >= 2.15"),
+    (_directional, "directional_stats: .coordinate. >= 2.15"),
+    (_seg_intersect, "segment_intersect_join: .coordinate. exceeds"),
+    (_rect_union, "rect_union_area: inverted box or .coord."),
+    (_polygon, "polygon_area_centroid: rebased extent "
+               "9223372036854775808 / ring length 3 "),
+    (lambda s: _gini(s, [1 << 62, 1 << 62, 1]),
+     "gini_coefficient: n.max.x. = 13835058055282163712 "),
+    (lambda s: _gini(s, [-1, 1 << 62]),
+     "gini_coefficient: values must be non-negative"),
+    (_cusum, "cusum_alarm: n.max.x-k. = 18446744073709551616 "),
+    (_snap_wide_segment, "snap_to_segments: a segment spans "
+                         "9223372036854775808 "),
+    (_disp_sum, "displacement_hist: Σdist² overflow"),
+], ids=["snap_to_segments", "bbox_overlap_join", "convex_hull_2d",
+        "hull_diameter", "hausdorff_to_templates", "simplify_radial",
+        "simplify_vw_rounds", "displacement_hist", "trip_stats_euclid",
+        "zscore_outliers", "linreg_per_group", "autocorr_lag",
+        "radius_of_gyration", "directional_stats", "segment_intersect_join",
+        "rect_union_area", "polygon_area_centroid", "gini_coefficient",
+        "gini_coefficient_order", "cusum_alarm", "snap_to_segments_extent",
+        "displacement_hist_sum"])
+def test_envelope_raises_contract_under_ansi(spark, call, msg):
+    """An input outside an operator's envelope must raise the contract
+    ValueError, not an ANSI ArithmeticException from the check's own
+    arithmetic (|−2^63|, n·max, x − min, Σdist²), and the first rule
+    declared wins."""
     with pytest.raises(ValueError, match=msg):
         call(spark)
+
+
+def test_require_raises_first_declared_rule(spark):
+    from engine.envelope import require
+    df = spark.createDataFrame([(1,), (5,)], ["v"])
+    with pytest.raises(ValueError, match="^small$"):
+        require(df, (F.min("v"), lambda v: v < 2, "small"),
+                (F.max("v"), lambda v: v > 2, lambda v: f"big {v}"))
+    with pytest.raises(ValueError, match="^big 5$"):
+        require(df, (F.max("v"), lambda v: v > 2, lambda v: f"big {v}"),
+                (F.min("v"), lambda v: v < 2, "small"))
+
+
+def test_require_empty_input_passes_with_none(spark):
+    from engine.envelope import require
+    df = spark.createDataFrame([(1,)], ["v"]).filter("v > 1")
+    vals = require(df, (F.max("v"), lambda v: True, "never"),
+                   (F.count(F.lit(1)), lambda n: n > 0, "never"))
+    assert vals == (None, 0)
+
+
+def test_require_runs_one_job(spark):
+    """Every rule of one require call runs in ONE Spark job (counted with
+    AQE off, which otherwise submits each shuffle stage as its own
+    job)."""
+    from engine.envelope import beyond, require, wide
+    sc = spark.sparkContext
+    df = spark.createDataFrame([(i % 3, i) for i in range(50)], ["k", "v"])
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sc.setJobGroup("require-one-job", "envelope check")
+        vals = require(df, (F.count(F.lit(1)), lambda n: n == 0, "empty"),
+                       (F.bool_or(beyond(100, F.col("v"))), bool, "far"),
+                       (F.max(wide("k") * F.col("v")), lambda p: p > 200,
+                        "big"))
+        ids = sc.statusTracker().getJobIdsForGroup("require-one-job")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert vals == (50, False, 94)
+    assert len(ids) == 1
 
 
 def test_quadrat_test_matches_brute(spark):
