@@ -33,13 +33,13 @@ _SPAN = "decimal(21,0)"
 
 
 def bin_floor(c: Column, w: int | Column) -> Column:
-    """floor(c / w) for a long column c and a positive width w, correct
-    for negative c on every engine: c - pmod(c, w) is an exact multiple
-    of w (Spark's pmod is non-negative), so the division leaves no
-    remainder to round (exact while |c| < 2^53) and truncation equals
-    floor."""
+    """floor(c / w) for a long column c and a positive width w, exact
+    for every long c: integral division truncates toward zero, so a
+    negative remainder steps the quotient down one.  No term leaves the
+    long range (|c div w| <= |c|), so it cannot overflow under ANSI."""
     wl = w if isinstance(w, Column) else F.lit(w)
-    return ((c - F.pmod(c, wl)) / wl).cast("long")
+    return (F.call_function("div", c, wl)
+            - F.when(c % wl < 0, 1).otherwise(0))
 
 
 def explode_neighbours(df: DataFrame, cols: Sequence[str | Column],

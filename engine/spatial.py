@@ -14,7 +14,7 @@ from collections.abc import Iterator, Sequence
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .envelope import beyond, require, wide, wide_abs
 from .grid import bin_floor, box_cell_count, explode_box
@@ -23,6 +23,7 @@ from .grid import bin_floor, box_cell_count, explode_box
 # stays a provable int64: |dx|, |dy| <= 2^31, products <= 2^62, and the
 # one subtraction between them < 2^63.
 _COORD_LIM = 1 << 30
+_LONG_MIN, _LONG_MAX = -(1 << 63), (1 << 63) - 1
 
 
 def _hull_ccw(pts: np.ndarray) -> list[tuple[int, int]]:
@@ -95,7 +96,13 @@ def convex_hull_2d(df: DataFrame, keys: Sequence[str], x: str,
     require(df, (F.bool_or(beyond(_COORD_LIM, xc, yc)), bool,
                  "convex_hull_2d: |coordinate| exceeds 2^30 — outside the "
                  "exact-int64 cross-product envelope; rescale upstream"))
+    return _hull(df, keys, xc, yc)
 
+
+def _hull(df: DataFrame, keys: list[str], xc: Column,
+          yc: Column) -> DataFrame:
+    """convex_hull_2d's plan over long coordinate columns the caller has
+    already checked against |c| <= 2^30."""
     d = df.select(*keys, xc.alias("_x"), yc.alias("_y"))
     key_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
@@ -183,10 +190,9 @@ def hull_diameter(df: DataFrame, keys: Sequence[str], x: str,
     require(df, (F.bool_or(beyond(_COORD_LIM - 1, xc, yc)), bool,
                  "hull_diameter: |coordinate| exceeds 2^30 - 1 — dist2 "
                  "could overflow int64; rescale upstream"))
-    # convex_hull_2d's output schema names the coordinates literally
-    # "x"/"y" regardless of the caller's input column names — select
-    # those, not the caller's names (which need not exist on the hull).
-    hv = (convex_hull_2d(df, keys, x, y)
+    # the check above implies _hull's |c| <= 2^30, so no second scan;
+    # the hull names its coordinates "x"/"y" whatever the input names
+    hv = (_hull(df, keys, xc, yc)
           .select(*keys, F.col("x").alias("_hx"), F.col("y").alias("_hy")))
     a = hv.select(*keys, F.col("_hx").alias("x1"), F.col("_hy").alias("y1"))
     b = hv.select(*keys, F.col("_hx").alias("x2"), F.col("_hy").alias("y2"))
@@ -337,10 +343,14 @@ def snap_to_segments(points: DataFrame, segments: DataFrame,
         F.col(sx2).cast("long").alias("_x2"),
         F.col(sy2).cast("long").alias("_y2"))
     x1, y1, x2, y2 = (F.col(c) for c in ("_x1", "_y1", "_x2", "_y2"))
-    lo = [bin_floor(F.least(x1, x2) - F.lit(cs), cs),
-          bin_floor(F.least(y1, y2) - F.lit(cs), cs)]
-    hi = [bin_floor(F.greatest(x1, x2) + F.lit(cs), cs),
-          bin_floor(F.greatest(y1, y2) + F.lit(cs), cs)]
+    # the box's bins padded by one cell per side (a point within r = cs
+    # of the segment bins at most one cell outside), taken on the bins
+    # so no coordinate term leaves the long range; the clip to the long
+    # range binds only at cs = 1, where no point bins beyond it
+    lo = [F.greatest(bin_floor(F.least(a, b), cs), F.lit(_LONG_MIN + 1)) - 1
+          for a, b in ((x1, x2), (y1, y2))]
+    hi = [F.least(bin_floor(F.greatest(a, b), cs), F.lit(_LONG_MAX - 1)) + 1
+          for a, b in ((x1, x2), (y1, y2))]
     require(seg, (
         F.max(F.greatest(wide_abs(wide(x2) - wide(x1)),
                          wide_abs(wide(y2) - wide(y1)))),

@@ -5,8 +5,9 @@ salting).  This is the GLOBAL (cross-host) twin of the per-host KDE kernel:
 
   raster:  cell_density    groupBy(cell).sum(mass)        — 1 shuffle
            kring_smooth    Gaussian ring-stencil join      — 1 shuffle
-           rollup_pyramid  groupBy(parent(cell)) per level — native bit math,
-                                                             1 shuffle/level
+           rollup_pyramid  one (level, ancestor cell) key per level per
+                           base cell, one groupBy(level, cell) — native
+                           bit math, 1 shuffle for the whole pyramid
   vector:  extract_components  threshold + ring-1 edges, connected
                                components via ops.min_label_components
   J4:      pip_join        two-phase: equi-join on exploded polygon cell
@@ -98,26 +99,29 @@ def kring_smooth(density: DataFrame, cfg: EngineConfig = DEFAULT,
 def rollup_pyramid(density: DataFrame, cfg: EngineConfig = DEFAULT,
                    levels: tuple[int, ...] | None = None,
                    base_level: int | None = None) -> DataFrame:
-    """Tile pyramid: union of per-level rollups (level, cell_id, mass_s).
+    """Tile pyramid (level, cell_id, mass_s): every level's cell masses
+    from ONE read of the base raster and ONE aggregation.
 
-    Parent ids are pure bit math (parent_cell_col) — stays in codegen; each
-    coarser level is one partial-aggregated shuffle of the base raster
-    (never of another level, so float masses are not re-rounded through
-    sums of sums).
+    Each base cell row fans out to one (level, ancestor cell) key per
+    level — its own cell at the base level, the bit-math parent
+    (parent_cell_col, stays in codegen) at coarser ones — and a single
+    partial-aggregated groupBy(level, cell_id) sums them.  Every level
+    sums base-cell values, never another level's sums, so float masses
+    are not re-rounded through sums of sums.  A union of per-level
+    rollups would read `density` once per level, and a density built
+    over a cached frame gets no exchange reuse, so each branch would
+    recompute it.
     """
     lvls = levels if levels is not None else cfg.tile_levels
     base = base_level if base_level is not None else cfg.cell_level
-    out = None
-    for lvl in lvls:
-        if lvl == base:
-            d = density.select(F.lit(lvl).alias("level"), "cell_id", "mass_s")
-        else:
-            d = (density
-                 .groupBy(parent_cell_col(F.col("cell_id"), lvl).alias("cell_id"))
-                 .agg(F.sum("mass_s").alias("mass_s"))
-                 .select(F.lit(lvl).alias("level"), "cell_id", "mass_s"))
-        out = d if out is None else out.unionByName(d)
-    return out
+    cell = F.col("cell_id")
+    keys = F.array(*[
+        F.struct(F.lit(lvl).alias("level"),
+                 (cell if lvl == base else parent_cell_col(cell, lvl))
+                 .alias("cell_id"))
+        for lvl in lvls])
+    return (density.select(F.inline(keys), "mass_s")
+            .groupBy("level", "cell_id").agg(F.sum("mass_s").alias("mass_s")))
 
 
 def extract_components(density: DataFrame, threshold_s: float,

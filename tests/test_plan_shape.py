@@ -392,6 +392,25 @@ def test_tiling_stencil_udf_free(spark):
             assert node not in plan, f"{node} in plan:\n{plan}"
 
 
+@pytest.mark.parametrize("salted,n_exchanges", [(True, 3), (False, 2)])
+def test_tile_pyramid_one_aggregation(spark, salted, n_exchanges):
+    """The tile pyramid reads the density once and aggregates every level
+    in ONE exchange: the salted density's two exchanges (or the plain
+    one's one) plus one (level, cell_id) exchange, and a single copy of
+    the site scan and cell encode beneath them."""
+    from engine import tiles
+    sites = spark.createDataFrame(
+        [(43.65 + i * 1e-3, -79.38, float(i)) for i in range(20)],
+        "site_lat double, site_lon double, mass_s double")
+    pyr = tiles.rollup_pyramid(tiles.cell_density(sites, salted=salted))
+    plan = plan_str(pyr, "simple")
+    assert plan.count("Exchange") == n_exchanges, plan
+    assert plan.count("Exchange hashpartitioning(level") == 1, plan
+    assert plan.count("Scan ExistingRDD") == 1, plan
+    assert plan.count("Generate inline") == 1, plan
+    assert "Union" not in plan, plan
+
+
 def test_lateral_topk_plans_partial_group_limit(spark):
     """The LATERAL ORDER BY/LIMIT subquery must decorrelate to a ranked
     window with WindowGroupLimit pushdown, with a PARTIAL group-limit

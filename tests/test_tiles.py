@@ -59,6 +59,36 @@ def test_rollup_pyramid_levels(sites):
     assert set(parents.tolist()) == c14
 
 
+@pytest.mark.parametrize("salted", [False, True])
+@pytest.mark.parametrize("quantized", [True, False])
+def test_rollup_pyramid_matches_pandas_oracle(sites, salted, quantized):
+    """Every (level, cell) mass equals the pandas sum of the base-cell
+    site masses under geo.cell_parent: exact for integer-ms masses, to
+    1e-9 relative for float seconds."""
+    s = (sites.withColumn("mass_s", F.floor(F.col("mass_s") * 1000.0))
+         if quantized else sites)
+    pyr = tiles.rollup_pyramid(tiles.cell_density(s, salted=salted))
+    assert pyr.columns == ["level", "cell_id", "mass_s"]
+    assert pyr.schema["level"].dataType == T.IntegerType()
+    assert pyr.schema["cell_id"].dataType == T.LongType()
+    got = (pyr.toPandas().set_index(["level", "cell_id"])["mass_s"]
+           .sort_index())
+    pts = tiles.site_cells(s).select("cell_id", "mass_s").toPandas()
+    cells = pts["cell_id"].to_numpy(np.int64)
+    want = pd.concat([
+        pts.assign(level=lvl,
+                   cell_id=cells if lvl == DEFAULT.cell_level
+                   else geo.cell_parent(cells, lvl))
+        .groupby(["level", "cell_id"])["mass_s"].sum()
+        for lvl in DEFAULT.tile_levels]).sort_index()
+    assert got.index.equals(want.index)
+    if quantized:
+        assert (got.to_numpy() == want.to_numpy()).all()
+    else:
+        assert np.allclose(got.to_numpy(), want.to_numpy(), rtol=1e-9,
+                           atol=0)
+
+
 def test_extract_components_near_stops(spark, sites, unit_pages):
     _, stops, _ = unit_pages
     dens = tiles.cell_density(sites)

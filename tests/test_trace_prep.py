@@ -957,6 +957,32 @@ def test_radius_join_2d_matches_brute(spark):
         ops.radius_join_2d(a, b, [], "ax", "ay", "bx", "by", (1 << 29) + 1)
 
 
+def test_radius_join_2d_exact_bins_beyond_2_53(spark):
+    """Coordinates may be any long: two points 1 apart above 2^53 (where
+    a double cannot tell x from x + 1) still bin to neighbouring cells
+    and pair."""
+    x = (1 << 60) + 130
+    a = spark.createDataFrame([(1, x, 0)], ["a_id", "ax", "ay"])
+    b = spark.createDataFrame([(2, x + 1, 0)], ["b_id", "bx", "by"])
+    got = [(r["a_id"], r["b_id"], r["dist2"]) for r in
+           ops.radius_join_2d(a, b, [], "ax", "ay", "bx", "by", 3).collect()]
+    assert got == [(1, 2, 1)]
+
+
+def test_bin_floor_exact_over_long_range(spark):
+    """bin_floor equals Python floor division for every long, the ends
+    of the range included, with ANSI mode on."""
+    from engine.grid import bin_floor
+    lo, hi = -(1 << 63), (1 << 63) - 1
+    cs = [lo, lo + 1, lo + 5, -7, -6, -1, 0, 1, 6, 7, (1 << 53) + 1,
+          hi - 5, hi]
+    df = spark.createDataFrame([(c,) for c in cs], "c long")
+    for w in (1, 3, 6, 1 << 40):
+        got = [r[0] for r in
+               df.select(bin_floor(F.col("c"), w)).collect()]
+        assert got == [c // w for c in cs], w
+
+
 def test_autocorr_lag_matches_numpy(spark):
     rng = np.random.default_rng(5)
     rows = [(g, i, int(rng.integers(-50, 50)))
@@ -2507,6 +2533,29 @@ def _cusum(spark):
                     ["k"], "ts", "v", 0, 1)
 
 
+def _bbox_min_corner(spark):
+    a = _pts(spark, [("k", 1, _MIN, 0, 0, 1)], "k a_id x1 y1 x2 y2")
+    b = _pts(spark, [("k", 1, 0, 0, 1, 1)], "k b_id u1 v1 u2 v2")
+    ops.bbox_overlap_join(a, b, ["k"], ("x1", "y1", "x2", "y2"),
+                          ("u1", "v1", "u2", "v2"), 3)
+
+
+def _zonal_min_corner(spark):
+    from engine import tiles
+    tiles.zonal_stats(_pts(spark, [(0, 0, 1)], "cx cy v"),
+                      _pts(spark, [(1, _MIN, 0, 0, 1)],
+                           "zone_id zx1 zy1 zx2 zy2"),
+                      "cx", "cy", "v", cell=3)
+
+
+def _snap_min_corner(spark):
+    from engine import spatial
+    spatial.snap_to_segments(
+        _pts(spark, [(1, 0, 0)], "p_id px py"),
+        _pts(spark, [(1, _MIN, 0, _MIN + 5000, 0)], "seg_id x1 y1 x2 y2"),
+        [], "px", "py", "x1", "y1", "x2", "y2", 1)
+
+
 @pytest.mark.parametrize("call,msg", [
     (_snap_long_road, "split long roads"),
     (_bbox_giant_box, "max_cells"),
@@ -2535,6 +2584,9 @@ def _cusum(spark):
     (_snap_wide_segment, "snap_to_segments: a segment spans "
                          "9223372036854775808 "),
     (_disp_sum, "displacement_hist: Σdist² overflow"),
+    (_bbox_min_corner, "bbox_overlap_join: a box covers more than"),
+    (_zonal_min_corner, "zonal_stats: a zone covers more than"),
+    (_snap_min_corner, "snap_to_segments: a segment spans 5000 "),
 ], ids=["snap_to_segments", "bbox_overlap_join", "convex_hull_2d",
         "hull_diameter", "hausdorff_to_templates", "simplify_radial",
         "simplify_vw_rounds", "displacement_hist", "trip_stats_euclid",
@@ -2542,7 +2594,8 @@ def _cusum(spark):
         "radius_of_gyration", "directional_stats", "segment_intersect_join",
         "rect_union_area", "polygon_area_centroid", "gini_coefficient",
         "gini_coefficient_order", "cusum_alarm", "snap_to_segments_extent",
-        "displacement_hist_sum"])
+        "displacement_hist_sum", "bbox_overlap_join_min_corner",
+        "zonal_stats_min_corner", "snap_to_segments_min_corner"])
 def test_envelope_raises_contract_under_ansi(spark, call, msg):
     """An input outside an operator's envelope must raise the contract
     ValueError, not an ANSI ArithmeticException from the check's own
@@ -3003,3 +3056,39 @@ def test_hull_diameter_renamed_columns(spark):
     assert len(got) == 1
     r = got[0]
     assert (r.x1, r.y1, r.x2, r.y2, r.dist2) == (0, 0, 3, 4, 25)
+
+
+def test_hull_diameter_builds_with_one_scan(spark):
+    """Building hull_diameter runs its own envelope check only: that
+    check implies convex_hull_2d's, so the hull is not checked again
+    (jobs counted with AQE off, which otherwise submits each shuffle
+    stage as its own job)."""
+    from engine import spatial
+    sc = spark.sparkContext
+    df = spark.createDataFrame([("k", 0, 0), ("k", 3, 4)], ["k", "x", "y"])
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        sc.setJobGroup("hull-diameter-build", "build only")
+        spatial.hull_diameter(df, ["k"], "x", "y")
+        ids = sc.statusTracker().getJobIdsForGroup("hull-diameter-build")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(ids) == 1
+
+
+def test_snap_to_segments_at_long_min(spark):
+    """At r = 1 the padded cell box of a segment on x = -2^63 is clipped
+    to the long range instead of overflowing, and the match is exact."""
+    from engine import spatial
+    lo = -(1 << 63)
+    pts = spark.createDataFrame([(1, lo, 1), (2, lo + 3, 0)],
+                                ["p_id", "px", "py"])
+    segs = spark.createDataFrame([(7, lo, 0, lo + 2, 0)],
+                                 ["seg_id", "x1", "y1", "x2", "y2"])
+    got = sorted((r["p_id"], r["seg_id"], r["d2_floor"], r["d2_frac_q"])
+                 for r in spatial.snap_to_segments(
+                     pts, segs, [], "px", "py", "x1", "y1", "x2", "y2",
+                     1).collect())
+    assert got == [(1, 7, 1, 0), (2, 7, 1, 0)]
